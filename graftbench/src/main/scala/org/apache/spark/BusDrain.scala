@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Blocks until every event posted so far has reached every listener.
+  * The listener bus is private to Spark, hence this package. */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
