@@ -178,9 +178,11 @@ object Bench {
     * NON-GATING field: the one-off build cost excluded from every
     * timed entry must stay visible and adjudicable — without it the
     * totals silently stopped being comparable to pre-r13 rounds
-    * (ADVICE r13). */
+    * (ADVICE r13). `warmupErrors`: the warm-up steps that failed
+    * ([[warmUp]]), listed in `errors` as `warmup:<step>`. */
   def toJson(results: Seq[QueryRuns], sfDir: String,
-             warmupSec: Double = -1.0): String = {
+             warmupSec: Double = -1.0,
+             warmupErrors: Seq[String] = Nil): String = {
     val mins = results.map(r => r.name -> best(r.secs))
     val qs = mins.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -193,8 +195,7 @@ object Bench {
     val sus = suspects(results).map("\"" + _ + "\"").mkString("[", ",", "]")
     val extras = results.filter(_.extras > 0)
       .map(r => "\"" + r.name + "\":" + r.extras).mkString("{", ",", "}")
-    val failed = mins.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val failed = errorsJson(mins, warmupErrors)
     val total = mins.map(_._2).filter(_ >= 0).sum
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""runs":$raw,"loads":$ld,"load_suspect":$sus,""" +
@@ -211,18 +212,58 @@ object Bench {
     * inventory growth), plus a pointer to the committed full artifact
     * and the suspect COUNT (names live in the full file). */
   def toSummaryJson(results: Seq[QueryRuns], sfDir: String,
-                    fullFile: String, topN: Int = 20): String = {
+                    fullFile: String, topN: Int = 20,
+                    warmupErrors: Seq[String] = Nil): String = {
     val mins = results.map(r => r.name -> best(r.secs))
     val top = mins.filter(_._2 >= 0).sortBy(-_._2).take(topN)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failed = mins.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val failed = errorsJson(mins, warmupErrors)
     val total = mins.map(_._2).filter(_ >= 0).sum
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,""" +
       s""""queries_truncated":true,"n_queries":${results.size},""" +
       s""""n_load_suspect":${suspects(results).size},""" +
       s""""queries_full":"$fullFile","errors":$failed,"sf":"$sfDir"}"""
   }
+
+  /** The `errors` array: failed queries, then failed warm-up steps. */
+  private def errorsJson(mins: Seq[(String, Double)],
+                         warmupErrors: Seq[String]): String =
+    (mins.collect { case (k, v) if v < 0 => k } ++
+      warmupErrors.map("warmup:" + _))
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Warm-up: JVM/codegen/classloading dominate the first query in a
+    * fresh session, so one untimed run of the cheapest scan query makes
+    * per-query numbers reflect query cost. */
+  val scalarWarmup: Seq[(String, (SparkSession, String) => Any)] = Seq(
+    ("a3_scalar_count", (s: SparkSession, d: String) =>
+      SparkEntry.queries("a3_scalar_count")(s, d)
+        .write.format("noop").mode("overwrite").save()))
+
+  /** Shared-table warm-up: the shared tables are built once per
+    * (JVM, sfDir) by whichever derived entry runs first — INSIDE that
+    * entry's timer. Building them untimed keeps first-pass attribution
+    * honest even at runs=1 (min-of-1 cannot absorb a build pass;
+    * ADVICE r12). */
+  val sharedTableWarmup: Seq[(String, (SparkSession, String) => Any)] =
+    graft.queries.DedupOps.sharedTables :+
+      (("curatedSurvivors", graft.queries.CurationOps.curatedSurvivors _))
+
+  /** Run each warm-up step on its own and return the names of the ones
+    * that failed, each also printed to stderr. A failed step must stay
+    * visible: swallowed, a broken shared-table build would land
+    * silently inside the first timed entry that reads the table. */
+  def warmUp(spark: SparkSession, sfDir: String,
+             steps: Seq[(String, (SparkSession, String) => Any)]): Seq[String] =
+    steps.flatMap { case (name, step) =>
+      try { step(spark, sfDir); None }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"bench: warm-up step '$name' FAILED: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+          Some(name)
+      }
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -232,26 +273,13 @@ object Bench {
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
     val spark = graft.core.Sessions.local("graft-bench")
 
-    // Warm-up: JVM/codegen/classloading dominate the first query in a
-    // fresh session; one untimed pass makes per-query numbers reflect
-    // query cost. (Runs the cheapest scan query.)
-    try SparkEntry.queries("a3_scalar_count")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-
-    // Shared-table warm-up: the cluster-label and duplicated-window
-    // tables are built once per (JVM, sfDir) by whichever derived
-    // entry runs first — INSIDE that entry's timer. Build them here,
-    // untimed, so first-pass attribution stays honest even at runs=1
-    // (min-of-1 cannot absorb a build pass; ADVICE r12). The wall time
-    // is MEASURED and published as warmup_sec: an untimed-but-invisible
-    // build cost would make totals incomparable across rounds
-    // (ADVICE r13).
+    val scalarFailed = warmUp(spark, sfDir, scalarWarmup)
+    // the shared-table build's wall time is MEASURED and published as
+    // warmup_sec: an untimed-but-invisible build cost would make totals
+    // incomparable across rounds (ADVICE r13)
     val warmT0 = System.nanoTime()
-    try {
-      graft.queries.DedupOps.warmSharedTables(spark, sfDir)
-      graft.queries.CurationOps.curatedSurvivors(spark, sfDir)
-    } catch { case _: Throwable => () }
+    val warmupErrors =
+      scalarFailed ++ warmUp(spark, sfDir, sharedTableWarmup)
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
 
     // dev iteration aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 times a subset
@@ -271,7 +299,7 @@ object Bench {
     val results =
       if (maxExtra <= 0) measured
       else settleSuspects(spark, sfDir, selected, measured, maxExtra)
-    val full = toJson(results, sfDir, warmupSec)
+    val full = toJson(results, sfDir, warmupSec, warmupErrors)
     // full artifact → committed file (survives regardless of stdout
     // truncation); overridable for tests
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -279,7 +307,8 @@ object Bench {
     // full line first (complete when stdout is kept whole), compact
     // summary LAST so a 2 KB tail capture always parses the totals
     println(full)
-    println(toSummaryJson(results, sfDir, outFile))
+    println(toSummaryJson(results, sfDir, outFile,
+      warmupErrors = warmupErrors))
     spark.stop()
   }
 }

@@ -207,8 +207,12 @@ final class HttpDistanceProvider(
   * one attachment with `pretext`/`text`/`color`) to the configured
   * webhook, one client per `deliver` call (= per partition-task, the
   * AlertSink contract). A non-2xx response or I/O failure on one alert
-  * does not abort the rest of the batch — delivery is at-least-once
-  * under micro-batch retry, like the reference's fire-and-log loop.
+  * does not stop the rest of the batch; once every alert was tried,
+  * `deliver` throws naming how many failed. That fails the task and so
+  * the micro-batch, which the stream then retries: delivery is
+  * at-least-once (alerts that did get through are posted again). An
+  * interrupt (task cancellation) keeps the thread's flag set and skips
+  * the alerts not yet sent, which count as failed.
   */
 final class HttpWebhookSink(
     webhookUrl: String,
@@ -217,19 +221,26 @@ final class HttpWebhookSink(
   override def deliver(batch: Seq[CommentAlerts.Alert]): Unit = {
     val client = HttpClient.newBuilder()
       .connectTimeout(Duration.ofMillis(timeoutMs)).build()
-    batch.foreach { a =>
+    val failed = batch.count { a =>
       val payload =
         s"""{"text":"${Http.jsonEscape(a.author)}","attachments":[""" +
           s"""{"pretext":"${Http.jsonEscape(a.pretext)}",""" +
           s""""text":"${Http.jsonEscape(a.text)}","color":"#36a64f"}]}"""
-      try {
+      Thread.currentThread().isInterrupted || (try {
         val req = HttpRequest.newBuilder(java.net.URI.create(webhookUrl))
           .timeout(Duration.ofMillis(timeoutMs))
           .header("Content-Type", "application/json")
           .POST(HttpRequest.BodyPublishers.ofString(payload)).build()
         client.send(req, HttpResponse.BodyHandlers.ofString())
-        ()
-      } catch { case _: java.io.IOException | _: InterruptedException => () }
+          .statusCode() / 100 != 2
+      } catch {
+        case _: InterruptedException =>
+          Thread.currentThread().interrupt(); true
+        case _: java.io.IOException => true
+      })
     }
+    if (failed > 0)
+      throw new java.io.IOException(
+        s"webhook delivery failed for $failed of ${batch.size} alerts")
   }
 }

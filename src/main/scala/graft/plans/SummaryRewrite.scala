@@ -84,14 +84,6 @@ object MvRegistry {
     digest.map("%02x".format(_)).mkString
   }
 
-  object Summary {
-    /** Single-column-grain convenience (the common case). */
-    def apply(mv: () => DataFrame, groupCol: String, cntCol: String,
-              sums: Map[String, String], nns: Map[String, String],
-              mins: Map[String, String], maxs: Map[String, String]): Summary =
-      Summary(mv, Seq(groupCol), cntCol, sums, nns, mins, maxs)
-  }
-
   private val reg = new ConcurrentHashMap[String, Vector[Summary]]()
 
   /** Register a summary, keyed by (base path, GRAIN): re-registering

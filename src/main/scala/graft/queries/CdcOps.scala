@@ -1,10 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.core.Tables
 import graft.pipeline.IncrementalFinal
+import graft.plans.MvRegistry
 import graft.streaming.{CdcApply, StreamingMv}
 
 /** CDC-apply inventory: the gate-expressible face of
@@ -16,6 +18,126 @@ import graft.streaming.{CdcApply, StreamingMv}
   * output.
   */
 object CdcOps {
+
+  /** `value` as exact integer micro-points (determinism rule 2). */
+  private def vMicro: Column =
+    floor(col("value") * lit(1e6)).cast(LongType).as("v_micro")
+
+  private def typeMicro(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events").select(col("event_type"), vMicro)
+
+  private def avgMicro: Column = avg(col("v_micro")).as("avg_micro")
+
+  /** The v_micro summary columns — row count, non-null count, sum — then
+    * `more`: what every routed MV keeps per grain, and the head of the
+    * aggregates its dashboards ask for. */
+  private def summarize(g: RelationalGroupedDataset, more: Column*)
+  : DataFrame = {
+    val aggs = Seq(count(lit(1)).as("cnt"),
+      count(col("v_micro")).as("n_nonnull"),
+      sum(col("v_micro")).as("sum_micro")) ++ more
+    g.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The 90/10 changelog over events: `event_id % 10 != 9` is the
+    * persisted base; the delta inserts the rest (sign +1) and retracts
+    * the base's `event_id % 7 = 0` rows (sign −1). */
+  private def changelog(ev: DataFrame): (DataFrame, DataFrame) = {
+    val base = ev.filter(col("event_id") % 10 =!= 9)
+    (base, ev.filter(col("event_id") % 10 === 9)
+      .withColumn("sign", lit(1L))
+      .unionByName(base.filter(col("event_id") % 7 === 0)
+        .withColumn("sign", lit(-1L))))
+  }
+
+  /** The row set after [[changelog]] applies. */
+  private def postChange(ev: DataFrame): DataFrame =
+    ev.filter((col("event_id") % 10 === 9) ||
+      (col("event_id") % 10 =!= 9 && col("event_id") % 7 =!= 0))
+
+  /** A routed entry's state in its [[Scratch.entryDir]]: the corpus in
+    * `base`, each summary in its own subdir, the dim (if any) in `dim`. */
+  private final case class RoutedMv(s: SparkSession, root: String,
+                                    dimJoin: Option[String]) {
+    def base: String = s"$root/base"
+    def summary: String = s"$root/summary"
+    /** The registry key ([[StreamingMv.qualified]]). */
+    def registered: String = StreamingMv.qualified(s, base)
+    /** The corpus the entry's query scans (⋈ the dim on
+      * `event_type = k` when there is one), listed when called, so it
+      * sees every base write before it. */
+    def corpus: DataFrame = dimJoin.fold(s.read.parquet(base))(how =>
+      s.read.parquet(base)
+        .join(s.read.parquet(s"$root/dim"), col("event_type") === col("k"), how))
+  }
+
+  private def at(grain: String*): Seq[(String, Seq[String])] =
+    Seq("summary" -> grain)
+
+  /** The routed-MV fixture. Writes `base`, then one summary per `grains`
+    * entry (subdir → grain) — `summary` when given, else [[summarize]]
+    * of `base` at the grain — then `dim`, then registers each summary
+    * with a fresh base-version token: v_micro's sum and non-null columns
+    * when `base` carries v_micro, plus what `more` adds (applied at
+    * registration, after every write). */
+  private def routedMv(s: SparkSession, dir: String, kind: String,
+                       base: DataFrame,
+                       grains: Seq[(String, Seq[String])] = at("event_type"),
+                       summary: Option[DataFrame] = None,
+                       dim: Option[DataFrame] = None,
+                       dimJoin: String = "inner",
+                       more: MvRegistry.Summary => MvRegistry.Summary = identity)
+  : RoutedMv = {
+    val mv = RoutedMv(s, Scratch.entryDir(kind, dir), dim.map(_ => dimJoin))
+    base.write.mode("overwrite").parquet(mv.base)
+    grains.foreach { case (sub, g) =>
+      summary.getOrElse(summarize(base.groupBy(g.map(col): _*)))
+        .write.mode("overwrite").parquet(s"${mv.root}/$sub")
+    }
+    dim.foreach(_.write.mode("overwrite").parquet(s"${mv.root}/dim"))
+    val micro = base.columns.contains("v_micro")
+    grains.foreach { case (sub, g) =>
+      MvRegistry.registerFresh(s, mv.registered, more(MvRegistry.Summary(
+        () => s.read.parquet(s"${mv.root}/$sub"), g, "cnt",
+        sums = if (micro) Map("v_micro" -> "sum_micro") else Map.empty,
+        nns = if (micro) Map("v_micro" -> "n_nonnull") else Map.empty)))
+    }
+    mv
+  }
+
+  /** The dim beside a routed summary: event_type (as `k`) → its name
+    * length, a stand-in for any small attribute dim. */
+  private def typeLenDim(ev: DataFrame, evenOnly: Boolean = false)
+  : DataFrame = {
+    val ks = ev.select(col("event_type").as("k")).distinct()
+    (if (evenOnly) ks.filter(length(col("k")) % 2 === 0) else ks)
+      .select(col("k"), length(col("k")).cast(IntegerType).as("type_len"))
+  }
+
+  /** Registers the `kmv_user` sketch for COUNT(DISTINCT user_id) only
+    * if the build's license verifies (checked at registration). */
+  private def licensedDistinct(ev: DataFrame, grain: Seq[String], k: Int)
+  : MvRegistry.Summary => MvRegistry.Summary = m => m.copy(distincts =
+    if (IncrementalFinal.verifiedDistinctLicense(ev, grain, "user_id", k))
+      Map("user_id" -> "kmv_user")
+    else Map.empty)
+
+  /** Delivers `ev` as three micro-batches (`event_id % 3`) through
+    * [[StreamingMv.foldBatch]] into the entry's state dir; returns the
+    * dir. `ev` is materialized once (r19): each fold filters it — a
+    * real stream receives each batch exactly once, and the checkpoint
+    * simulates that arrival instead of re-scanning events per
+    * micro-batch. */
+  private def streamed(s: SparkSession, dir: String, kind: String,
+                       cfg: StreamingMv.Config, ev: DataFrame): String = {
+    val state = Scratch.entryDir(kind, dir)
+    val batches = ev.localCheckpoint(true)
+    (0L until 3L).foreach { b =>
+      StreamingMv.foldBatch(s, state, cfg)(
+        batches.filter(col("event_id") % 3 === b).drop("event_id"), b)
+    }
+    state
+  }
 
   val entries: Seq[Entry] = Seq(
 
@@ -281,19 +403,10 @@ object CdcOps {
     Entry(
       "cdc_ivm_agg",
       (s, dir) => {
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        val base = ev.filter(col("event_id") % 10 =!= 9)
-        val baseAgg = base.groupBy("event_type").agg(
-          count(lit(1)).as("cnt"),
-          count(col("v_micro")).as("n_nonnull"),
-          sum(col("v_micro")).as("sum_micro"))
-        val delta = ev.filter(col("event_id") % 10 === 9)
-          .withColumn("sign", lit(1L))
-          .unionByName(base.filter(col("event_id") % 7 === 0)
-            .withColumn("sign", lit(-1L)))
-        IncrementalFinal.maintainAggregate(baseAgg, delta, Seq("event_type"))
+        val (base, delta) = changelog(Tables(s, dir, "events")
+          .select(col("event_type"), col("event_id"), vMicro))
+        IncrementalFinal.maintainAggregate(
+            summarize(base.groupBy("event_type")), delta, Seq("event_type"))
           .select(col("event_type"), col("cnt"),
             (col("sum_micro").cast(DoubleType) / lit(1e6)).as("sum_value"))
           .orderBy("event_type")
@@ -366,23 +479,16 @@ object CdcOps {
       "cdc_ivm_minmax",
       (s, dir) => {
         val ev = Tables(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        val base = ev.filter(col("event_id") % 10 =!= 9)
+          .select(col("event_type"), col("event_id"), vMicro)
+        val (base, delta) = changelog(ev)
         val baseMm = base.groupBy("event_type")
           .agg(min(col("v_micro")).as("min_v"), max(col("v_micro")).as("max_v"))
-        val delta = ev.filter(col("event_id") % 10 === 9)
-          .withColumn("sign", lit(1L))
-          .unionByName(base.filter(col("event_id") % 7 === 0)
-            .withColumn("sign", lit(-1L)))
         val m = IncrementalFinal.maintainMinMax(baseMm, delta,
           Seq("event_type"), valueCol = "v_micro")
-        val post = ev.filter((col("event_id") % 10 === 9) ||
-          (col("event_id") % 10 =!= 9 && col("event_id") % 7 =!= 0))
         val clean = m.filter(!col("dirty"))
           .select(col("event_type"), col("min_v"), col("max_v"),
             col("dirty").as("was_dirty"))
-        val rescan = post
+        val rescan = postChange(ev)
           .join(m.filter(col("dirty")).select("event_type"),
             Seq("event_type"), "left_semi")
           .groupBy("event_type")
@@ -544,34 +650,17 @@ object CdcOps {
     Entry(
       "cdc_ivm_histogram",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val ev = Tables(s, dir, "events").filter(col("value").isNotNull)
+        val (base, delta) = changelog(Tables(s, dir, "events")
+          .filter(col("value").isNotNull)
           .select(col("event_type"), col("event_id"),
-            expr(MicroGrid.sparkSql)
-              .as("bucket"))
-        val base = ev.filter(col("event_id") % 10 =!= 9)
+            expr(MicroGrid.sparkSql).as("bucket")))
         val baseHist = base.groupBy("event_type", "bucket").agg(
           count(lit(1)).as("cnt"),
           count(col("bucket")).as("n_nonnull"),
           sum(col("bucket")).as("sum_micro"))
-        val delta = ev.filter(col("event_id") % 10 === 9)
-          .withColumn("sign", lit(1L))
-          .unionByName(base.filter(col("event_id") % 7 === 0)
-            .withColumn("sign", lit(-1L)))
-          .withColumn("v_micro", col("bucket"))
-        val maintained = IncrementalFinal.maintainAggregate(
-          baseHist, delta, Seq("event_type", "bucket"))
-        val cum = maintained
-          .withColumn("cum", sum("cnt").over(
-            Window.partitionBy("event_type").orderBy("bucket")))
-          .withColumn("tot", sum("cnt").over(
-            Window.partitionBy("event_type")))
-        cum.groupBy("event_type").agg(
-            max(col("tot")).cast(LongType).as("n_values"),
-            (min(when(col("cum") * 100 >= col("tot") * 50,
-              col("bucket"))) * 10).cast(LongType).as("p50_lo"),
-            (min(when(col("cum") * 100 >= col("tot") * 95,
-              col("bucket"))) * 10).cast(LongType).as("p95_lo"))
+        val maintained = IncrementalFinal.maintainAggregate(baseHist,
+          delta.withColumn("v_micro", col("bucket")), Seq("event_type", "bucket"))
+        MicroGrid.percentiles(maintained, "event_type", n = "cnt")
           .orderBy("event_type")
       },
       Some(s"""WITH post AS (
@@ -704,46 +793,21 @@ object CdcOps {
     Entry(
       "cdc_mv_routed",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mv_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
         val ev = Tables(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        val baseRows = ev.filter(col("event_id") % 10 =!= 9)
-        val baseAgg = baseRows.groupBy("event_type").agg(
-          count(lit(1)).as("cnt"),
-          count(col("v_micro")).as("n_nonnull"),
-          sum(col("v_micro")).as("sum_micro"))
-        val delta = ev.filter(col("event_id") % 10 === 9)
-          .withColumn("sign", lit(1L))
-          .unionByName(baseRows.filter(col("event_id") % 7 === 0)
-            .withColumn("sign", lit(-1L)))
-        // the post-change corpus = the registered BASE the query scans
-        ev.filter((col("event_id") % 10 === 9) ||
-            (col("event_id") % 10 =!= 9 && col("event_id") % 7 =!= 0))
-          .select("event_type", "v_micro")
-          .write.mode("overwrite").parquet(basePath)
-        // its summary, MAINTAINED from the pre-change aggregate + the
-        // changelog — never recomputed from the corpus
-        IncrementalFinal.maintainAggregate(baseAgg, delta, Seq("event_type"))
-          .write.mode("overwrite").parquet(mvPath)
-        // registerFresh stamps the base-version token: routing is now
-        // CONDITIONAL on the summary being current — any later base
-        // write bails to the corpus scan until re-registration
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+          .select(col("event_type"), col("event_id"), vMicro)
+        val (baseRows, delta) = changelog(ev)
+        // the registered BASE the query scans is the post-change corpus;
+        // its summary is MAINTAINED from the pre-change aggregate + the
+        // changelog — never recomputed from the corpus. registerFresh
+        // stamps the base-version token: routing is now CONDITIONAL on
+        // the summary being current — any later base write bails to
+        // the corpus scan until re-registration
+        val mv = routedMv(s, dir, "mv",
+          postChange(ev).select("event_type", "v_micro"),
+          summary = Some(IncrementalFinal.maintainAggregate(
+            summarize(baseRows.groupBy("event_type")), delta,
+            Seq("event_type"))))
+        summarize(mv.corpus.groupBy("event_type"), avgMicro)
           .orderBy("event_type")
       },
       Some("""WITH base AS (
@@ -776,24 +840,11 @@ object CdcOps {
     Entry(
       "cdc_mv_streamed",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val state = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_smv_$tag").toString
-        // materialized once (r19): the 3 folds below each filter this
-        // relation — a real stream receives each batch exactly once,
-        // and the checkpoint simulates that arrival instead of
-        // re-scanning events per micro-batch
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type").as("k"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
         val cfg = StreamingMv.Config(Seq("k"))
-        (0L until 3L).foreach { b =>
-          StreamingMv.foldBatch(s, state, cfg)(
-            ev.filter(col("event_id") % 3 === b).drop("event_id"), b)
-        }
-        StreamingMv.dashboard(s, state, cfg).orderBy("k")
+        StreamingMv.dashboard(s, streamed(s, dir, "smv", cfg,
+            Tables(s, dir, "events")
+              .select(col("event_type").as("k"), vMicro, col("event_id"))),
+          cfg).orderBy("k")
       },
       Some("""SELECT event_type AS k, CAST(COUNT(*) AS BIGINT) AS cnt,
                      CAST(COUNT(v_micro) AS BIGINT) AS n_nonnull,
@@ -816,24 +867,11 @@ object CdcOps {
     Entry(
       "cdc_mv_streamed_minmax",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val state = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_smvmm_$tag").toString
-        // materialized once (r19): the 3 folds below each filter this
-        // relation — a real stream receives each batch exactly once,
-        // and the checkpoint simulates that arrival instead of
-        // re-scanning events per micro-batch
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type").as("k"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
         val cfg = StreamingMv.Config(Seq("k"), extremes = true)
-        (0L until 3L).foreach { b =>
-          StreamingMv.foldBatch(s, state, cfg)(
-            ev.filter(col("event_id") % 3 === b).drop("event_id"), b)
-        }
-        StreamingMv.dashboard(s, state, cfg).orderBy("k")
+        StreamingMv.dashboard(s, streamed(s, dir, "smvmm", cfg,
+            Tables(s, dir, "events")
+              .select(col("event_type").as("k"), vMicro, col("event_id"))),
+          cfg).orderBy("k")
       },
       Some("""SELECT event_type AS k, CAST(COUNT(*) AS BIGINT) AS cnt,
                      CAST(COUNT(v_micro) AS BIGINT) AS n_nonnull,
@@ -862,22 +900,13 @@ object CdcOps {
     Entry(
       "cdc_mv_streamed_distinct",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val state = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_smvdx_$tag").toString
-        // materialized once — see cdc_mv_streamed (r19)
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type").as("k"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("user_id"), col("event_id"))
-          .localCheckpoint(true)
         val cfg = StreamingMv.Config(Seq("k"),
           distinctCol = Some("user_id"))
-        (0L until 3L).foreach { b =>
-          StreamingMv.foldBatch(s, state, cfg)(
-            ev.filter(col("event_id") % 3 === b).drop("event_id"), b)
-        }
-        StreamingMv.dashboard(s, state, cfg).orderBy("k")
+        StreamingMv.dashboard(s, streamed(s, dir, "smvdx", cfg,
+            Tables(s, dir, "events")
+              .select(col("event_type").as("k"), vMicro, col("user_id"),
+                col("event_id"))),
+          cfg).orderBy("k")
       },
       Some("""SELECT event_type AS k, CAST(COUNT(*) AS BIGINT) AS cnt,
                      CAST(COUNT(v_micro) AS BIGINT) AS n_nonnull,
@@ -911,35 +940,15 @@ object CdcOps {
     Entry(
       "cdc_mv_streamed_percentile",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val state = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_smvpct_$tag").toString
-        // materialized once — see cdc_mv_streamed (r19)
-        val ev = Tables(s, dir, "events").filter(col("value").isNotNull)
-          .select(col("event_type").as("k"),
-            expr(MicroGrid.sparkSql).as("bucket"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
-        val cfg = StreamingMv.Config(Seq("k", "bucket"))
-        (0L until 3L).foreach { b =>
-          StreamingMv.foldBatch(s, state, cfg)(
-            ev.filter(col("event_id") % 3 === b).drop("event_id"), b)
-        }
-        val hist = s.read.parquet(StreamingMv.docsDir(state))
-          .groupBy("k", "bucket")
-          .agg(count(lit(1)).as("n"))
-        val cum = hist
-          .withColumn("cum", sum("n").over(
-            Window.partitionBy("k").orderBy("bucket")))
-          .withColumn("tot", sum("n").over(Window.partitionBy("k")))
-        cum.groupBy("k").agg(
-            max(col("tot")).cast(LongType).as("n_values"),
-            (min(when(col("cum") * 100 >= col("tot") * 50,
-              col("bucket"))) * 10).cast(LongType).as("p50_lo"),
-            (min(when(col("cum") * 100 >= col("tot") * 95,
-              col("bucket"))) * 10).cast(LongType).as("p95_lo"))
+        val state = streamed(s, dir, "smvpct",
+          StreamingMv.Config(Seq("k", "bucket")),
+          Tables(s, dir, "events").filter(col("value").isNotNull)
+            .select(col("event_type").as("k"),
+              expr(MicroGrid.sparkSql).as("bucket"), vMicro,
+              col("event_id")))
+        MicroGrid.percentiles(s.read.parquet(StreamingMv.docsDir(state))
+            .groupBy("k", "bucket")
+            .agg(count(lit(1)).as("n")), "k")
           .orderBy("k")
       },
       Some(s"""WITH ev AS (
@@ -978,33 +987,12 @@ object CdcOps {
     // event_type — the grain key breaks count ties.
     Entry(
       "cdc_mv_routed_topk",
-      (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvtopk_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("v_micro")).as("sum_micro"))
-          .orderBy(col("cnt").desc, col("event_type"))
-          .limit(5)
-      },
+      (s, dir) => routedMv(s, dir, "mvtopk", typeMicro(s, dir)).corpus
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("v_micro")).as("sum_micro"))
+        .orderBy(col("cnt").desc, col("event_type"))
+        .limit(5),
       Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt,
                      CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT) AS sum_micro
               FROM events GROUP BY 1
@@ -1021,33 +1009,12 @@ object CdcOps {
     // non-vacuity on the fixture).
     Entry(
       "cdc_mv_routed_having",
-      (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvhav_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("v_micro")).as("sum_micro"))
-          .filter(col("cnt") % 7 < 4)
-          .orderBy("event_type")
-      },
+      (s, dir) => routedMv(s, dir, "mvhav", typeMicro(s, dir)).corpus
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("v_micro")).as("sum_micro"))
+        .filter(col("cnt") % 7 < 4)
+        .orderBy("event_type"),
       Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt,
                      CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT) AS sum_micro
               FROM events GROUP BY 1
@@ -1063,33 +1030,12 @@ object CdcOps {
     // scan).
     Entry(
       "cdc_mv_routed_share",
-      (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvshare_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("share_ppm",
-            expr("(cnt * 1000000) DIV SUM(cnt) OVER ()").cast(LongType))
-          .orderBy("event_type")
-      },
+      (s, dir) => routedMv(s, dir, "mvshare", typeMicro(s, dir)).corpus
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("share_ppm",
+          expr("(cnt * 1000000) DIV SUM(cnt) OVER ()").cast(LongType))
+        .orderBy("event_type"),
       // rule-6 cast discipline: SUM(BIGINT) widens to HUGEINT in DuckDB
       // and `//` inherits it; an uncast emit hash-diverges on harnesses
       // that render HUGEINT via decimal128. CAST pins int64 both sides.
@@ -1117,32 +1063,16 @@ object CdcOps {
       "cdc_mv_routed_distinct",
       (s, dir) => {
         val k = 16384
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvdistinct_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
         val ev = Tables(s, dir, "events")
-          .select(col("event_type"), col("user_id"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        graft.functions.Kmv.withHash(ev, "user_id", "__h")
-          .groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            expr(graft.functions.Kmv.sketchSparkSql("__h", k)).as("kmv_user"))
-          .write.mode("overwrite").parquet(mvPath)
-        val licensed = IncrementalFinal.verifiedDistinctLicense(
-          ev, Seq("event_type"), "user_id", k)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull"),
-            distincts =
-              if (licensed) Map("user_id" -> "kmv_user") else Map.empty))
-        s.read.parquet(basePath)
+          .select(col("event_type"), col("user_id"), vMicro)
+        routedMv(s, dir, "mvdistinct", ev,
+            summary = Some(summarize(
+              graft.functions.Kmv.withHash(ev, "user_id", "__h")
+                .groupBy("event_type"),
+              expr(graft.functions.Kmv.sketchSparkSql("__h", k))
+                .as("kmv_user"))),
+            more = licensedDistinct(ev, Seq("event_type"), k))
+          .corpus
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"),
             countDistinct(col("user_id")).as("n_users"))
@@ -1168,38 +1098,17 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_percentile",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvpct_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
         val ev = Tables(s, dir, "events").filter(col("value").isNotNull)
           .select(col("event_type"), to_date(col("ts")).as("day"),
             expr(MicroGrid.sparkSql)
               .as("bucket"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type", "day", "bucket")
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath),
-            Seq("event_type", "day", "bucket"), "cnt", sums = Map.empty))
-        val hist = s.read.parquet(basePath)
-          .groupBy("event_type", "bucket")
-          .agg(count(lit(1)).as("n"))
-        val cum = hist
-          .withColumn("cum", sum("n").over(
-            Window.partitionBy("event_type").orderBy("bucket")))
-          .withColumn("tot", sum("n").over(
-            Window.partitionBy("event_type")))
-        cum.groupBy("event_type").agg(
-            max(col("tot")).cast(LongType).as("n_values"),
-            (min(when(col("cum") * 100 >= col("tot") * 50,
-              col("bucket"))) * 10).cast(LongType).as("p50_lo"),
-            (min(when(col("cum") * 100 >= col("tot") * 95,
-              col("bucket"))) * 10).cast(LongType).as("p95_lo"))
+        val mv = routedMv(s, dir, "mvpct", ev,
+          at("event_type", "day", "bucket"),
+          summary = Some(ev.groupBy("event_type", "day", "bucket")
+            .agg(count(lit(1)).as("cnt"))))
+        MicroGrid.percentiles(mv.corpus
+            .groupBy("event_type", "bucket")
+            .agg(count(lit(1)).as("n")), "event_type")
           .orderBy("event_type")
       },
       Some(s"""WITH ev AS (
@@ -1243,29 +1152,17 @@ object CdcOps {
       "cdc_mv_routed_distinct_rollup",
       (s, dir) => {
         val k = 16384
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvdxroll_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
         val ev = Tables(s, dir, "events")
           .select(col("event_type"), to_date(col("ts")).as("day"),
             col("user_id"))
-        ev.write.mode("overwrite").parquet(basePath)
-        graft.functions.Kmv.withHash(ev, "user_id", "__h")
-          .groupBy("event_type", "day").agg(
-            count(lit(1)).as("cnt"),
-            expr(graft.functions.Kmv.sketchSparkSql("__h", k)).as("kmv_user"))
-          .write.mode("overwrite").parquet(mvPath)
-        val licensed = IncrementalFinal.verifiedDistinctLicense(
-          ev, Seq("event_type", "day"), "user_id", k)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type", "day"), "cnt",
-            sums = Map.empty,
-            distincts =
-              if (licensed) Map("user_id" -> "kmv_user") else Map.empty))
-        s.read.parquet(basePath)
+        routedMv(s, dir, "mvdxroll", ev, at("event_type", "day"),
+            summary = Some(graft.functions.Kmv.withHash(ev, "user_id", "__h")
+              .groupBy("event_type", "day").agg(
+                count(lit(1)).as("cnt"),
+                expr(graft.functions.Kmv.sketchSparkSql("__h", k))
+                  .as("kmv_user"))),
+            more = licensedDistinct(ev, Seq("event_type", "day"), k))
+          .corpus
           .groupBy("event_type")
           .agg(count(lit(1)).as("cnt"),
             countDistinct(col("user_id")).as("n_users"))
@@ -1287,40 +1184,9 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_star",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvstar_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val dimPath = new java.io.File(root, "dim").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.select("event_type", "v_micro")
-          .write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        // the dim table: event_type → its name length (a stand-in for
-        // any small attribute dim), maintained beside the summary
-        ev.select(col("event_type").as("k")).distinct()
-          .select(col("k"),
-            length(col("k")).cast(IntegerType).as("type_len"))
-          .write.mode("overwrite").parquet(dimPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .join(s.read.parquet(dimPath), col("event_type") === col("k"))
-          .groupBy("type_len")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+        val ev = typeMicro(s, dir)
+        val mv = routedMv(s, dir, "mvstar", ev, dim = Some(typeLenDim(ev)))
+        summarize(mv.corpus.groupBy("type_len"), avgMicro)
           .orderBy("type_len")
       },
       Some("""WITH base AS (
@@ -1349,32 +1215,8 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_dashboard",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvdash_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val dimPath = new java.io.File(root, "dim").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        ev.select(col("event_type").as("k")).distinct()
-          .select(col("k"),
-            length(col("k")).cast(IntegerType).as("type_len"))
-          .write.mode("overwrite").parquet(dimPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .join(s.read.parquet(dimPath), col("event_type") === col("k"))
+        val ev = typeMicro(s, dir)
+        routedMv(s, dir, "mvdash", ev, dim = Some(typeLenDim(ev))).corpus
           .groupBy("type_len")
           .agg(count(lit(1)).as("cnt"),
             sum(col("v_micro")).as("sum_micro"))
@@ -1409,36 +1251,16 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_rollup",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvroll_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val ev = Tables(s, dir, "events")
+        val mv = routedMv(s, dir, "mvroll", Tables(s, dir, "events")
           .where(col("ts").isNotNull)
-          .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("day").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("day"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
+          .select(date_format(col("ts"), "yyyy-MM-dd").as("day"), vMicro),
+          at("day"))
         // week-of-month: a non-trivial f(grain) at this corpus's one-
         // month span (month rollup would collapse to a single group)
-        s.read.parquet(basePath)
-          .groupBy(expr("substring(day, 1, 7)").as("month"),
-            expr("CAST((CAST(substring(day, 9, 2) AS INT) - 1) DIV 7 AS INT)")
-              .as("wk"))
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+        summarize(mv.corpus
+            .groupBy(expr("substring(day, 1, 7)").as("month"),
+              expr("CAST((CAST(substring(day, 9, 2) AS INT) - 1) DIV 7 AS INT)")
+                .as("wk")), avgMicro)
           .orderBy("month", "wk")
       },
       Some("""WITH base AS (
@@ -1470,43 +1292,18 @@ object CdcOps {
     Entry(
       "cdc_mv_refresh",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvrefresh_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
         val ev = Tables(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        val v1 = ev.filter(col("event_id") % 10 =!= 9)
-        v1.select("event_type", "v_micro")
-          .write.mode("overwrite").parquet(basePath)
-        v1.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
+          .select(col("event_type"), col("event_id"), vMicro)
+        val mv = routedMv(s, dir, "mvrefresh",
+          ev.filter(col("event_id") % 10 =!= 9).select("event_type", "v_micro"))
         // the later base write that makes the registration stale
         val appendRows = ev.filter(col("event_id") % 10 === 9)
-        appendRows.select("event_type", "v_micro")
-          .write.mode("append").parquet(basePath)
+          .select("event_type", "v_micro")
+        appendRows.write.mode("append").parquet(mv.base)
         // the one-call repair: fold the append's changelog, re-stamp
-        graft.pipeline.IncrementalFinal.refreshSummary(
-          s, "file:" + basePath, mvPath,
-          appendRows.select("event_type", "v_micro")
-            .withColumn("sign", lit(1L)),
-          Seq("event_type"))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+        IncrementalFinal.refreshSummary(s, mv.registered, mv.summary,
+          appendRows.withColumn("sign", lit(1L)), Seq("event_type"))
+        summarize(mv.corpus.groupBy("event_type"), avgMicro)
           .orderBy("event_type")
       },
       Some("""WITH base AS (
@@ -1531,43 +1328,15 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_multi",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvmulti_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvDay = new java.io.File(root, "day").toString
-        val mvType = new java.io.File(root, "type").toString
-        val ev = Tables(s, dir, "events")
-          .where(col("ts").isNotNull)
-          .select(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        def summarize(grain: String, out: String): Unit =
-          ev.groupBy(grain).agg(
-              count(lit(1)).as("cnt"),
-              count(col("v_micro")).as("n_nonnull"),
-              sum(col("v_micro")).as("sum_micro"))
-            .write.mode("overwrite").parquet(out)
-        summarize("day", mvDay)
-        summarize("event_type", mvType)
-        def reg(grain: String, mv: String): Unit =
-          graft.plans.MvRegistry.registerFresh(
-            s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-              () => s.read.parquet(mv), Seq(grain), "cnt",
-              sums = Map("v_micro" -> "sum_micro"),
-              nns = Map("v_micro" -> "n_nonnull"),
-              // the cost stamp: rollup cardinality feeds the
-              // cheapest-server choice when several grains serve
-              rows = Some(s.read.parquet(mv).count())))
-        reg("day", mvDay)
-        reg("event_type", mvType)
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+        val mv = routedMv(s, dir, "mvmulti", Tables(s, dir, "events")
+            .where(col("ts").isNotNull)
+            .select(col("event_type"),
+              date_format(col("ts"), "yyyy-MM-dd").as("day"), vMicro),
+          Seq("day" -> Seq("day"), "type" -> Seq("event_type")),
+          // the cost stamp: rollup cardinality feeds the cheapest-server
+          // choice when several grains serve
+          more = m => m.copy(rows = Some(m.mv().count())))
+        summarize(mv.corpus.groupBy("event_type"), avgMicro)
           .orderBy("event_type")
       },
       Some("""WITH base AS (
@@ -1596,42 +1365,12 @@ object CdcOps {
     Entry(
       "cdc_mv_routed_left",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvleft_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val dimPath = new java.io.File(root, "dim").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.select("event_type", "v_micro")
-          .write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"))
-          .write.mode("overwrite").parquet(mvPath)
+        val ev = typeMicro(s, dir)
         // the dim misses the odd-length type names on purpose: the
         // left join's null extension must survive the rewrite
-        ev.select(col("event_type").as("k")).distinct()
-          .filter(length(col("k")) % 2 === 0)
-          .select(col("k"),
-            length(col("k")).cast(IntegerType).as("type_len"))
-          .write.mode("overwrite").parquet(dimPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull")))
-        s.read.parquet(basePath)
-          .join(s.read.parquet(dimPath), col("event_type") === col("k"),
-            "left")
-          .groupBy("type_len")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"))
+        val mv = routedMv(s, dir, "mvleft", ev,
+          dim = Some(typeLenDim(ev, evenOnly = true)), dimJoin = "left")
+        summarize(mv.corpus.groupBy("type_len"), avgMicro)
           // the COALESCE sits ABOVE the aggregate (outside the rewritten
           // subtree): deterministic output without a null sort-order
           // dependency between the two engines
@@ -1671,28 +1410,12 @@ object CdcOps {
     Entry(
       "cdc_mv_refresh_retraction",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_mvretr_$tag")
-        val basePath = new java.io.File(root, "base").toString
-        val mvPath = new java.io.File(root, "summary").toString
-        val ev = Tables(s, dir, "events")
-          .select(col("event_type"),
-            floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"))
-        ev.write.mode("overwrite").parquet(basePath)
-        ev.groupBy("event_type").agg(
-            count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            min(col("v_micro")).as("min_micro"),
-            max(col("v_micro")).as("max_micro"))
-          .write.mode("overwrite").parquet(mvPath)
-        graft.plans.MvRegistry.registerFresh(
-          s, "file:" + basePath, graft.plans.MvRegistry.Summary(
-            () => s.read.parquet(mvPath), Seq("event_type"), "cnt",
-            sums = Map("v_micro" -> "sum_micro"),
-            nns = Map("v_micro" -> "n_nonnull"),
-            mins = Map("v_micro" -> "min_micro"),
+        val ev = typeMicro(s, dir)
+        def extremes = Seq(min(col("v_micro")).as("min_micro"),
+          max(col("v_micro")).as("max_micro"))
+        val mv = routedMv(s, dir, "mvretr", ev,
+          summary = Some(summarize(ev.groupBy("event_type"), extremes: _*)),
+          more = _.copy(mins = Map("v_micro" -> "min_micro"),
             maxs = Map("v_micro" -> "max_micro")))
         // the base write: delete every row holding its type's CURRENT
         // maximum (ties included — the retraction the summary's stored
@@ -1702,28 +1425,19 @@ object CdcOps {
         // files being replaced — mergeChangeset's rule).
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type")
-        val v1 = s.read.parquet(basePath)
+        val v1 = s.read.parquet(mv.base)
           .withColumn("_mx", max(col("v_micro")).over(w))
         val retracted = v1.filter(col("v_micro") === col("_mx"))
           .select("event_type", "v_micro").localCheckpoint(true)
         val v2 = v1
           .filter(col("v_micro").isNull || col("v_micro") < col("_mx"))
           .select("event_type", "v_micro").localCheckpoint(true)
-        v2.write.mode("overwrite").parquet(basePath)
+        v2.write.mode("overwrite").parquet(mv.base)
         // ONE repair call: fold the retraction changelog, dirty-rescan
         // the extreme-losing grains, re-stamp — extremes stay routed
-        graft.pipeline.IncrementalFinal.refreshSummary(
-          s, "file:" + basePath, mvPath,
-          retracted.withColumn("sign", lit(-1L)),
-          Seq("event_type"))
-        s.read.parquet(basePath)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"),
-            count(col("v_micro")).as("n_nonnull"),
-            sum(col("v_micro")).as("sum_micro"),
-            avg(col("v_micro")).as("avg_micro"),
-            min(col("v_micro")).as("min_micro"),
-            max(col("v_micro")).as("max_micro"))
+        IncrementalFinal.refreshSummary(s, mv.registered, mv.summary,
+          retracted.withColumn("sign", lit(-1L)), Seq("event_type"))
+        summarize(mv.corpus.groupBy("event_type"), avgMicro +: extremes: _*)
           .orderBy("event_type")
       },
       Some("""WITH v1 AS (

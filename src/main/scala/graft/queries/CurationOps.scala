@@ -37,24 +37,14 @@ object CurationOps {
     * composition-proving. Same contract as the dedup label table: at
     * 100 TB this is the persisted "curated corpus" table refreshed per
     * crawl; here a pid-keyed tmp parquet. */
-  private val survivorTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def curatedSurvivors(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_curated_${ProcessHandle.current().pid()}_$tag").toString
-    survivorTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "curated", dir) {
       Curation.qualitySurvivors(Tables(s, dir, "documents"),
-          TextOps.Stopwords, minQuality = 0.5, shingleN = 3,
-          jaccardThreshold = 0.8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        TextOps.Stopwords, minQuality = 0.5, shingleN = 3,
+        jaccardThreshold = 0.8)
+    }
 
   /** CTE chain shared by the composed-pipeline oracles (`pipeline_
     * curate_full`, `pipeline_curate_cdc`): raw corpus → quality filter →

@@ -106,26 +106,16 @@ object DedupOps {
     * [[Dedup.incrementalConnectedComponents]]); here it is a
     * process-scoped tmp parquet — keyed by pid, so a driver testdata
     * regeneration (always a new JVM) can never serve stale labels.
-    * `computeIfAbsent` blocks concurrent first callers: parallel
+    * [[Scratch.shared]] blocks concurrent first callers: parallel
     * suites cannot observe a half-written table. */
-  private val labelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def clusterLabels(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_labels_${ProcessHandle.current().pid()}_$tag").toString
-    labelTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "labels", dir) {
       val docs = Tables(s, dir, "documents")
       Dedup.connectedComponents(docs, "doc_id",
-          Dedup.ngramJaccardPairs(docs, 3, 0.8))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Dedup.ngramJaccardPairs(docs, 3, 0.8))
+    }
 
   /** The duplicated-window relation of the ExactSubstr family at the
     * inventory's l = 8 ([[graft.operators.Dedup.duplicatedWindows]]:
@@ -142,24 +132,14 @@ object DedupOps {
     * Same contract as [[clusterLabels]]: at 100 TB this is a persisted
     * lake table maintained beside the corpus; here a pid-keyed tmp
     * parquet (a driver testdata regeneration is always a new JVM, so
-    * stale serves are impossible) with `computeIfAbsent` blocking
+    * stale serves are impossible) with [[Scratch.shared]] blocking
     * concurrent first callers. */
-  private val substrWindowTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def windowFps(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_wins_${ProcessHandle.current().pid()}_$tag").toString
-    substrWindowTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "substr_wins", dir) {
       Dedup.duplicatedWindows(Tables(s, dir, "documents"), 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** The ExactSubstr-CLEANED corpus at l = 8 (every duplicated 8-token
     * window keeps its first corpus occurrence; later copies lose the
@@ -174,24 +154,20 @@ object DedupOps {
     * `dedup_substr_spans` stays the live-computed canonical
     * fingerprint-pass entry, and the DuckDB oracles of both consumers
     * still recompute the FULL removal chain from raw text, so the
-    * materialized table is hash-certified end-to-end on every gate. */
-  private val cleanedDocTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * materialized table is hash-certified end-to-end on every gate.
+    * Its build resolves the [[windowFps]] table it reads (a nested
+    * shared build the first time). */
   private[queries] def cleanedDocs(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_clean_${ProcessHandle.current().pid()}_$tag").toString
-    cleanedDocTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "substr_clean", dir) {
       Dedup.removeSubstringsFromWindows(
-          Tables(s, dir, "documents"), windowFps(s, dir), 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Tables(s, dir, "documents"), windowFps(s, dir), 8)
+    }
+
+  private[queries] def substrIncSplit =
+    substring(md5(concat(lit("sinc:"),
+      col("doc_id").cast(org.apache.spark.sql.types.StringType))), 1, 1)
 
   /** The persisted BASE half of the incremental ExactSubstr index
     * (occurrences + per-fp stats at l = 8 over the deterministic
@@ -199,27 +175,15 @@ object DedupOps {
     * stand-in for the lake tables a daily-crawl loop maintains. The
     * `dedup_substr_incremental` entry folds the batch split into THIS,
     * never re-fingerprinting base documents. */
-  private val substrIndexTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[queries] def substrIncSplit =
-    substring(md5(concat(lit("sinc:"),
-      col("doc_id").cast(org.apache.spark.sql.types.StringType))), 1, 1)
-
   private[queries] def substrBaseIndex(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_idx_${ProcessHandle.current().pid()}_$tag").toString
-    substrIndexTables.computeIfAbsent(root, { p =>
+    val root = Scratch.shared("substr_idx", dir) { p =>
       val base = Tables(s, dir, "documents").filter(substrIncSplit < "c")
-      val wins = Dedup.allWindows(base, 8)
-      wins.write.mode("overwrite").parquet(s"$p/wins")
+      Dedup.allWindows(base, 8).write.mode("overwrite").parquet(s"$p/wins")
       Dedup.windowStats(s.read.parquet(s"$p/wins"))
         .write.mode("overwrite").parquet(s"$p/stats")
-      p
-    })
+    }
     (s.read.parquet(s"$root/wins"), s.read.parquet(s"$root/stats"))
   }
 
@@ -230,25 +194,15 @@ object DedupOps {
     * gated `dedup_clusters_incremental` measures the PER-INCREMENT
     * cost (batch scoring + fold), not a from-scratch base rebuild —
     * `dedup_clusters` keeps the live from-scratch signal. */
-  private val incLabelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def incBaseLabels(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_inclabels_${ProcessHandle.current().pid()}_$tag").toString
-    incLabelTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "inclabels", dir) {
       val base = Tables(s, dir, "documents")
         .filter(Curation.hashKeep(col("doc_id"), "inc", 12))
       Dedup.connectedComponents(base, "doc_id",
-          Dedup.ngramJaccardPairs(base, 3, 0.8))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Dedup.ngramJaccardPairs(base, 3, 0.8))
+    }
 
   /** The persisted base-split SHINGLE index (catalog tables, bucketed
     * on shingle — [[graft.operators.Dedup.writeShingleIndex]]) beside
@@ -327,39 +281,27 @@ object DedupOps {
     * parquet. `dedup_minhash_incremental`'s BATCH side deliberately
     * stays live-computed — the per-increment sketch cost is that
     * entry's canonical signal. */
-  private val minhashSigTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def minhashSigs(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mhsigs_${ProcessHandle.current().pid()}_$tag").toString
-    minhashSigTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Scratch.sharedTable(s, "mhsigs", dir) {
       Dedup.minhashSignatureArray(Tables(s, dir, "documents"), 3, 64)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** Materialize both shared tables eagerly — Bench calls this in its
-    * UNTIMED warm-up so the one-off build cost is never attributed to
-    * whichever derived entry happens to run first (at
+  /** The shared tables, by name, in build order — Bench builds them in
+    * its UNTIMED warm-up so the one-off build cost is never attributed
+    * to whichever derived entry happens to run first (at
     * SPARK_GRAFT_BENCH_RUNS=1 the min cannot absorb a first-pass
     * build; ADVICE r12). */
-  private[graft] def warmSharedTables(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    clusterLabels(s, dir)
-    windowFps(s, dir)
-    substrBaseIndex(s, dir)
-    incBaseLabels(s, dir)
-    incShingleIndex(s, dir)
-    minhashSigs(s, dir)
-    incLshIndex(s, dir)
-    ()
-  }
+  private[graft] val sharedTables
+  : Seq[(String, (org.apache.spark.sql.SparkSession, String) => Any)] = Seq(
+    ("clusterLabels", clusterLabels _),
+    ("windowFps", windowFps _),
+    ("substrBaseIndex", substrBaseIndex _),
+    ("incBaseLabels", incBaseLabels _),
+    ("incShingleIndex", incShingleIndex _),
+    ("minhashSigs", minhashSigs _),
+    ("incLshIndex", incLshIndex _))
 
   /** Shared CTE chain for the ExactSubstr oracles: sliding `l`-token
     * window fingerprints → duplicated windows → per-doc maximal covered

@@ -100,6 +100,30 @@ object MicroGrid {
   val duckSql: String =
     "(CAST(FLOOR(value * 1e6) AS BIGINT) + 10000000000000)" +
       " // 10000000 - 1000000"
+
+  /** The p50/p95 readout over a `(key, bucket, n)` histogram on this
+    * grid: per key, `n_values` = N and `p<q>_lo` = 10 × the first bucket
+    * whose running count reaches q % of N. Rank math is integer-only —
+    * bucket b is the q-th percentile iff cum(b)·100 ≥ N·q — and the
+    * cum/total windows are partitioned by key, so they stay bounded by
+    * the grid per group. `suffix` names a second readout beside a
+    * first. */
+  def percentiles(hist: DataFrame, key: String, n: String = "n",
+                  suffix: String = ""): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, max, min, sum, when}
+    import org.apache.spark.sql.types.LongType
+    val cum = hist
+      .withColumn("cum", sum(n).over(
+        Window.partitionBy(key).orderBy("bucket")))
+      .withColumn("tot", sum(n).over(Window.partitionBy(key)))
+    cum.groupBy(key).agg(
+      max(col("tot")).cast(LongType).as(s"n_values$suffix"),
+      (min(when(col("cum") * 100 >= col("tot") * 50,
+        col("bucket"))) * 10).cast(LongType).as(s"p50_lo$suffix"),
+      (min(when(col("cum") * 100 >= col("tot") * 95,
+        col("bucket"))) * 10).cast(LongType).as(s"p95_lo$suffix"))
+  }
 }
 
 object Inventory {

@@ -9,9 +9,10 @@ import graft.operators.Multimodal
   * sampling, and the (stubbed) per-partition decode. */
 object MultimodalOps {
 
-  /** Synthetic variant corpora (the planted-duplicate FIXTURES, not the
-    * operators), materialized once per (JVM, sfDir) — the r12/r16
-    * sharing pattern (`DedupOps.cleanedDocs`): rendering PNG frames /
+  /* Synthetic variant corpora (the planted-duplicate FIXTURES, not the
+    * operators), materialized once per (JVM, sfDir) by
+    * [[Scratch.sharedTable]] — the r12/r16 sharing pattern
+    * (`DedupOps.cleanedDocs`): rendering PNG frames /
     * WAV samples is test-fixture work a production pipeline never does
     * (payloads arrive crawled), so the incremental entries read the
     * materialized corpus and keep only the OPERATOR live (decode →
@@ -24,8 +25,6 @@ object MultimodalOps {
     * rendered-PNG corpus the same way ([[imageCorpus]]). Every oracle
     * recomputes from raw `documents`, so the materialization stays
     * hash-certified on every gate. */
-  private val variantTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The video family's shared 3-variant GVID corpus: 4-frame 8 px,
     * its pixel-doubled re-encode, and the 3-frame trailing trim
@@ -33,7 +32,7 @@ object MultimodalOps {
   private def videoVariantCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame =
-    materializedVariants(s, dir, "vid") {
+    Scratch.sharedTable(s, "mm_vid", dir) {
       val docs = Tables(s, dir, "documents")
       Multimodal.syntheticPatternVideos(s, docs, 8, 4)
         .select((col("doc_id") * 3).as("doc_id"), col("payload"))
@@ -59,22 +58,9 @@ object MultimodalOps {
   private def imageCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame =
-    materializedVariants(s, dir, "img") {
+    Scratch.sharedTable(s, "mm_img", dir) {
       Multimodal.syntheticImages(s, Tables(s, dir, "documents"), 4)
     }
-
-  private def materializedVariants(
-      s: org.apache.spark.sql.SparkSession, dir: String, kind: String)(
-      build: => org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mm_${kind}_${ProcessHandle.current().pid()}_$tag").toString
-    variantTables.computeIfAbsent(path, { p =>
-      build.write.mode("overwrite").parquet(p); p
-    })
-    s.read.parquet(path)
-  }
 
   val entries: Seq[Entry] = Seq(
 
@@ -547,7 +533,7 @@ object MultimodalOps {
       (s, dir) => {
         // shared WAV fixture, same discipline as the video twin
         // (vid = doc·2 + off → orig = vid DIV 2)
-        val corpus = materializedVariants(s, dir, "aud") {
+        val corpus = Scratch.sharedTable(s, "mm_aud", dir) {
           val docs = Tables(s, dir, "documents")
           Multimodal.syntheticPatternAudio(s, docs, 57, 32)
             .select((col("doc_id") * 2).as("doc_id"), col("payload"))

@@ -632,7 +632,6 @@ object Relational {
     Entry(
       "a30_histogram_reagg",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val ev = Tables(s, dir, "events").filter(col("value").isNotNull)
           .select(col("event_type"), to_date(col("ts")).as("day"),
             expr(MicroGrid.sparkSql)
@@ -640,25 +639,13 @@ object Relational {
         // the persisted shape: per-(group, day, bucket) counts
         val daily = ev.groupBy("event_type", "day", "bucket")
           .agg(count(lit(1)).as("n"))
-        def readout(hist: DataFrame, suffix: String): DataFrame = {
-          val cum = hist
-            .withColumn("cum", sum("n").over(
-              Window.partitionBy("event_type").orderBy("bucket")))
-            .withColumn("tot", sum("n").over(
-              Window.partitionBy("event_type")))
-          cum.groupBy("event_type").agg(
-            max(col("tot")).cast(LongType).as(s"n_values$suffix"),
-            (min(when(col("cum") * 100 >= col("tot") * 50,
-              col("bucket"))) * 10).cast(LongType).as(s"p50_lo$suffix"),
-            (min(when(col("cum") * 100 >= col("tot") * 95,
-              col("bucket"))) * 10).cast(LongType).as(s"p95_lo$suffix"))
-        }
-        val merged = readout(
+        val merged = MicroGrid.percentiles(
           daily.groupBy("event_type", "bucket")
-            .agg(sum("n").cast(LongType).as("n")), "")
-        val onePass = readout(
+            .agg(sum("n").cast(LongType).as("n")), "event_type")
+        val onePass = MicroGrid.percentiles(
           ev.groupBy("event_type", "bucket")
-            .agg(count(lit(1)).cast(LongType).as("n")), "_direct")
+            .agg(count(lit(1)).cast(LongType).as("n")), "event_type",
+          suffix = "_direct")
           .drop("n_values_direct")
         merged.join(onePass, Seq("event_type"))
           .orderBy("event_type")

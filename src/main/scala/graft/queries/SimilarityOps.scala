@@ -857,9 +857,7 @@ object SimilarityOps {
     Entry(
       "sim_kmeans_streamed",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val state = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_skms_$tag").toString
+        val state = Scratch.entryDir("skms", dir)
         val emb = Tables(s, dir, "embeddings")
         val codebook = Similarity.readCodebookMicro(
           Similarity.kmeansTrainMicro(emb, 8, 2))

@@ -76,8 +76,14 @@ object StreamingMv {
     * non-local default filesystem the bogus file: path would crash the
     * fold's token stamp (review r18). makeQualified yields exactly the
     * string the scan's rootPath prints in both cases. */
-  def basePath(spark: SparkSession, stateDir: String): String = {
-    val p = new Path(docsDir(stateDir))
+  def basePath(spark: SparkSession, stateDir: String): String =
+    qualified(spark, docsDir(stateDir))
+
+  /** `path` qualified through its Hadoop filesystem — the form every
+    * registry key must take (see [[basePath]]); for an absolute local
+    * path, exactly `"file:" + path`. */
+  def qualified(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.makeQualified(p).toString
   }

@@ -75,12 +75,8 @@ object QueryProfile {
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
     val spark = Sessions.local("graft-profile")
     // same warm-up as Bench so first-query numbers aren't JVM noise
-    try {
-      graft.SparkEntry.queries("a3_scalar_count")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      graft.queries.DedupOps.warmSharedTables(spark, sfDir)
-      graft.queries.CurationOps.curatedSurvivors(spark, sfDir)
-    } catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir,
+      graft.Bench.scalarWarmup ++ graft.Bench.sharedTableWarmup)
     args.foreach { q =>
       try profile(spark, sfDir, q, runs)
       catch { case t: Throwable =>

@@ -36,6 +36,24 @@ class BenchSuite extends SparkSuite {
       .contains(""""warmup_sec":12.5"""))
   }
 
+  test("a failed warm-up step is reported on stderr and listed as warmup:<step> in the one JSON line") {
+    val steps = Bench.scalarWarmup ++ Bench.sharedTableWarmup
+    val failed = Bench.warmUp(spark, "/nonexistent/sf", steps)
+    // every step reads the missing data dir, so every step fails — and
+    // each failure is a name, not a swallowed exception
+    assert(failed === steps.map(_._1))
+    assert(failed.contains("clusterLabels") && failed.contains("curatedSurvivors"))
+    val json = Bench.toJson(Nil, "/nonexistent/sf", 1.0, failed)
+    assert(!json.contains("\n"))
+    assert(json.contains(failed.map("\"warmup:" + _ + "\"")
+      .mkString(""""errors":[""", ",", "]")))
+    assert(Bench.toSummaryJson(Nil, "/nonexistent/sf", "unused",
+      warmupErrors = failed).contains("\"warmup:a3_scalar_count\""))
+    // a warm-up that succeeds reports nothing
+    assert(Bench.warmUp(spark, "/nonexistent/sf",
+      Seq(("ok", (_: SparkSession, _: String) => ()))).isEmpty)
+  }
+
   test("runtime failures (not just construction) also surface as -1") {
     val lazyBoom = (s: SparkSession, _: String) => {
       import s.implicits._

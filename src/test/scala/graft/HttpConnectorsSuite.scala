@@ -139,15 +139,41 @@ class HttpConnectorsSuite extends SparkSuite {
       else respond(ex, 200, "ok")
     } { base =>
       val sink = new HttpWebhookSink(base)
-      sink.deliver(Seq(
+      // the failing alert does not stop the batch; the failure is then
+      // raised, so micro-batch retry re-delivers
+      val err = intercept[java.io.IOException](sink.deliver(Seq(
         CommentAlerts.Alert(1, "Auteur: Ada L", "great \"run\"",
           "Type d'activité: Course"),
-        CommentAlerts.Alert(2, "Auteur: boom", "x", "y")))
+        CommentAlerts.Alert(2, "Auteur: boom", "x", "y"))))
+      assert(err.getMessage.contains("1 of 2"))
       val got = seen.toArray(Array.empty[String]).toSeq.sorted
       assert(got.size == 2)
       assert(got.forall(_.startsWith("POST application/json ")))
       assert(got.exists(_.contains(
         """{"text":"Auteur: Ada L","attachments":[{"pretext":"great \"run\"","text":"Type d'activité: Course","color":"#36a64f"}]}""")))
+    }
+  }
+
+  test("HttpWebhookSink against a server answering 500 tries every alert, " +
+    "then throws the failed count; an interrupt keeps its flag") {
+    val posts = new java.util.concurrent.atomic.AtomicInteger()
+    withServer { ex =>
+      ex.getRequestBody.readAllBytes()
+      posts.incrementAndGet()
+      respond(ex, 500, "down")
+    } { base =>
+      val sink = new HttpWebhookSink(base)
+      val alerts = (1 to 3).map(i =>
+        CommentAlerts.Alert(i, s"Auteur: $i", "p", "t"))
+      val err = intercept[java.io.IOException](sink.deliver(alerts))
+      assert(err.getMessage.contains("3 of 3"), err.getMessage)
+      assert(posts.get() === 3)
+      // a cancelled task: nothing more is posted, the flag survives
+      Thread.currentThread().interrupt()
+      val cancelled = intercept[java.io.IOException](sink.deliver(alerts))
+      assert(Thread.interrupted(), "interrupt flag was swallowed")
+      assert(cancelled.getMessage.contains("3 of 3"))
+      assert(posts.get() === 3)
     }
   }
 
