@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 
 /** Iterated BPE merge training at corpus scale — the loop behind every
@@ -16,7 +17,7 @@ import graft.functions.TextFunctions
   * Σ|word| symbol pairs weighted by word freq, (b) a driver readout of
   * exactly ONE row (the argmax pair — the same bounded-readout contract
   * as HeavyHitters), and (c) a map-side fold rewriting each word's
-  * symbol array left-to-right. Vocabulary tables are localCheckpoint'd
+  * symbol array left-to-right. Vocabulary tables are materialized
   * per round: k rounds otherwise stack k nested HOF folds into one
   * expression tree and the plan, not the data, becomes the bottleneck.
   *
@@ -90,13 +91,13 @@ object Bpe {
   /** Apply an ordered merge table to a distinct-token table
     * ((tok: string) → (tok, syms)): the encode side of the tokenizer.
     * Merges fold in training order; every fourth round the table is
-    * localCheckpoint'd so long merge lists don't nest unboundedly many
+    * materialized so long merge lists don't nest unboundedly many
     * HOF folds in one expression tree. */
   def encodeVocab(toks: DataFrame, merges: Seq[Merge]): DataFrame = {
     var v = toks.select(col("tok"), split(col("tok"), "").as("syms"))
     merges.zipWithIndex.foreach { case (m, i) =>
       v = v.select(col("tok"), applyMerge(col("syms"), m.left, m.right).as("syms"))
-      if ((i + 1) % 4 == 0) v = v.localCheckpoint(true)
+      if ((i + 1) % 4 == 0) v = Materialize(v)
     }
     v
   }
@@ -127,7 +128,7 @@ object Bpe {
     * symbolized vocabulary. */
   def train(docs: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
     require(k >= 1, s"need at least one merge round, got $k")
-    var vocab = symbolVocab(docs).localCheckpoint(true)
+    var vocab = Materialize(symbolVocab(docs))
     val merges = Seq.newBuilder[Merge]
     var round = 1
     var dry = false
@@ -136,9 +137,8 @@ object Bpe {
         case None => dry = true
         case Some((l, r, n)) =>
           merges += Merge(l, r, n, round)
-          vocab = vocab
-            .select(applyMerge(col("syms"), l, r).as("syms"), col("freq"))
-            .localCheckpoint(true)
+          vocab = Materialize(vocab
+            .select(applyMerge(col("syms"), l, r).as("syms"), col("freq")))
           round += 1
       }
     }
@@ -158,11 +158,11 @@ object Bpe {
     *
     * Scale shape is [[train]]'s: per round one aggregate over the
     * DISTINCT vocabulary, a 1-row driver readout, a map-side fold, and
-    * a localCheckpoint to keep k rounds from nesting k HOF folds in one
+    * a materialization to keep k rounds from nesting k HOF folds in one
     * expression tree. */
   def trainReplayable(docs: DataFrame, k: Int): Seq[Merge] = {
     require(k >= 1, s"need at least one merge round, got $k")
-    var vocab = symbolVocab(docs).localCheckpoint(true)
+    var vocab = Materialize(symbolVocab(docs))
     val merges = Seq.newBuilder[Merge]
     var round = 1
     var dry = false
@@ -171,9 +171,8 @@ object Bpe {
         case None => dry = true
         case Some((l, r, n)) =>
           merges += Merge(l, r, n, round)
-          vocab = vocab
-            .select(applyMerge(col("syms"), l, r).as("syms"), col("freq"))
-            .localCheckpoint(true)
+          vocab = Materialize(vocab
+            .select(applyMerge(col("syms"), l, r).as("syms"), col("freq")))
           round += 1
       }
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 
 /** Corpus-curation operators: the selection and shaping steps between a
@@ -277,7 +278,7 @@ object Curation {
     * float-sort tie order. */
   def selectUnderBudget(docs: DataFrame, stopwords: Seq[String],
                         budget: Long, gridBuckets: Int = 10000): DataFrame = {
-    // materialized ONCE (eager localCheckpoint): consumed by BOTH the
+    // materialized ONCE (eagerly): consumed by BOTH the
     // bucket-totals aggregate and the in-bucket window below — left
     // lazy (even lazily cached: the two consumers race the fill inside
     // one action, r19 profile) the entire upstream plan (in a composed
@@ -285,11 +286,10 @@ object Curation {
     // mixture sample) executes twice. The projection is three longs
     // per doc (~24 B), so MEMORY_AND_DISK holds it at any corpus size
     // the cluster can process at all; blocks free with the RDD (GC).
-    val scored = docs.select(col("doc_id"),
+    val scored = Materialize(docs.select(col("doc_id"),
       TextFunctions.tokenCount(col("text")).cast(LongType).as("n_tokens"),
       floor(TextFunctions.qualityScore(col("text"), stopwords)
-        * gridBuckets).cast(LongType).as("qb"))
-      .localCheckpoint(true)
+        * gridBuckets).cast(LongType).as("qb")))
     val bucketTotals = scored.groupBy("qb").agg(sum("n_tokens").as("btoks"))
     val wBuckets = Window.orderBy(desc("qb"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -529,10 +529,9 @@ object Curation {
     // rows by semi-join: later passes re-scan the corpus but never
     // re-score it. Same at 100 TB: one scoring pass is the floor, and
     // the id-sized checkpoint is negligible next to the corpus.
-    val keptIds = docs
+    val keptIds = Materialize(docs
       .filter(TextFunctions.qualityScore(col("text"), stopwords) >= minQuality)
-      .select("doc_id")
-      .localCheckpoint(true)
+      .select("doc_id"))
     val kept = docs.join(keptIds, Seq("doc_id"), "left_semi")
     val comp = Dedup.connectedComponents(keptIds, "doc_id",
       Dedup.ngramJaccardPairs(kept, shingleN, jaccardThreshold))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 
 /** Deduplication operators over a `(doc_id: long, text: string)` corpus:
@@ -123,7 +124,7 @@ object Dedup {
     // same three-consumer index shape as ngramJaccardPairs (sizes +
     // both self-join sides), so the index caches — and eager-fills —
     // for the same reason
-    val sh = materializeIndex(docShingles(docs, n))
+    val sh = Materialize(docShingles(docs, n))
     commonWithSizes(sh)
       .withColumn("cont_a",
         col("n_common").cast(DoubleType) / col("n_a").cast(DoubleType))
@@ -164,33 +165,28 @@ object Dedup {
           .select("shingle")
         sh.join(hot, Seq("shingle"), "left_anti")
       }
-    jaccardScores(materializeIndex(pruned), None, threshold)
+    // Materialize the multi-consumer index ONCE (eagerly) and keep it at
+    // full parallelism. Two profiled sf0.1 pathologies (r19):
+    //   - a lazily `.cache()`d index consumed by several branches of one
+    //     downstream action is filled CONCURRENTLY by each branch's first
+    //     stage — the shingle tokenize+explode+distinct ran 2–3× from
+    //     parquet per dedup entry because the sizes aggregate and both
+    //     self-join sides raced before any fill completed; the eager
+    //     materialization makes every consumer a block read;
+    //   - a keyed RESPREAD of the materialized index (to undo AQE's
+    //     coalescing of the small local index to ~3 partitions) was
+    //     measured and REVERTED: the lazy repartition exchange is not
+    //     stage-reused across the sizes/self-join consumers, so every
+    //     consumer re-shuffled the index — dedup_clusters went 2.3 s →
+    //     3.1 s and dedup_clusters_incremental 3.8 s → 4.6 s with it.
+    //     The few-task consumer map stages it was meant to widen cost
+    //     far less than the repeated exchange.
+    // At 100 TB the index is corpus-sized: the materialization is the
+    // same materialize-once artifact a production pipeline persists
+    // ([[writeShingleIndex]]), kept at the scan/shuffle parallelism it
+    // was built with.
+    jaccardScores(Materialize(pruned), None, threshold)
   }
-
-  /** Materialize a multi-consumer index ONCE (eager localCheckpoint) and
-    * keep it at full parallelism. Two profiled sf0.1 pathologies (r19):
-    *
-    *   - a lazily `.cache()`d index consumed by several branches of one
-    *     downstream action is filled CONCURRENTLY by each branch's first
-    *     stage — the shingle tokenize+explode+distinct ran 2–3× from
-    *     parquet per dedup entry because the sizes aggregate and both
-    *     self-join sides raced before any fill completed; the eager
-    *     checkpoint makes every consumer a block read;
-    *   - a keyed RESPREAD of the checkpointed index (to undo AQE's
-    *     coalescing of the small local index to ~3 partitions) was
-    *     measured and REVERTED: the lazy repartition exchange is not
-    *     stage-reused across the sizes/self-join consumers, so every
-    *     consumer re-shuffled the index — dedup_clusters went 2.3 s →
-    *     3.1 s and dedup_clusters_incremental 3.8 s → 4.6 s with it.
-    *     The few-task consumer map stages it was meant to widen cost
-    *     far less than the repeated exchange.
-    *
-    * At 100 TB the index is corpus-sized: the checkpoint is the same
-    * materialize-once artifact a production pipeline persists
-    * ([[writeShingleIndex]]), kept at the scan/shuffle parallelism it
-    * was built with. */
-  private def materializeIndex(df: DataFrame): DataFrame =
-    df.localCheckpoint(true)
 
   // --------------------------------------------------------- MinHash LSH
 
@@ -293,7 +289,7 @@ object Dedup {
   /** [[minhashLshPairsFromSigs]] plus a RELEASE handle the caller runs
     * once it has materialized the pairs. The per-call intermediates
     * (candidate pairs, candidate shingles) are now eager
-    * localCheckpoints rather than lazy caches (r19: the cached
+    * materializations rather than lazy caches (r19: the cached
     * versions were filled concurrently by racing consumer stages AND
     * measurably re-computed per consumer — the checkpointed forms
     * halved both LSH entries), so the handle is a no-op: checkpoint
@@ -309,18 +305,17 @@ object Dedup {
   : (DataFrame, () => Unit) = {
     val buckets =
       pruneBandBuckets(lshBuckets(sigs, bands, rows), maxBandBucketSize)
-    val candidates = buckets.as("x")
+    // materialized: consumed three times below (twice in candIds' union,
+    // once as the verification restriction) — without this the
+    // signature + band self-join subplan re-executes per consumer.
+    // Filled EAGERLY (r19): the three consumers race inside one action
+    // otherwise and each recomputes the self-join before any fill lands.
+    val candidates = Materialize(buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      // cached: consumed three times below (twice in candIds' union, once
-      // as the verification restriction) — without this the signature +
-      // band self-join subplan re-executes per consumer. Filled EAGERLY
-      // (r19): the three consumers race inside one action otherwise and
-      // each recomputes the self-join before any fill lands.
-      .localCheckpoint(true)
+      .distinct())
 
     // Exact verification restricted to the candidate pairs (the whole
     // point of LSH: never touch the full pair space). Only CANDIDATE
@@ -334,9 +329,8 @@ object Dedup {
     // before the shingle fan-out: docShingles' parallelism probe
     // executes a shuffled input's upstream stages under AQE — on a
     // checkpointed RDD the probe is free and the semi-join runs once
-    val candDocs = docs.join(candIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    val shingles = docShingles(candDocs, n).localCheckpoint(true)
+    val candDocs = Materialize(docs.join(candIds, Seq("doc_id"), "left_semi"))
+    val shingles = Materialize(docShingles(candDocs, n))
     (jaccardScores(shingles, Some(candidates), threshold),
       () => ()) // checkpointed intermediates free with their RDDs (GC)
   }
@@ -413,7 +407,7 @@ object Dedup {
   /** [[incrementalLshPairsFromBuckets]] plus a RELEASE handle for the
     * per-fold intermediates (batch buckets, candidate set, candidate
     * shingles) — see [[minhashLshPairsFromSigsTracked]]'s rationale:
-    * the intermediates are eager localCheckpoints since r19, so the
+    * the intermediates are eager materializations since r19, so the
     * handle is a no-op (blocks are disk-backed and ContextCleaner-freed
     * once a trigger's RDD references drop; ADVICE r14's footprint
     * concern is met by lifetime, not by explicit unpersist). */
@@ -431,7 +425,7 @@ object Dedup {
     // bucketed table scan and needs no pinning). Filled EAGERLY (r19):
     // the consumers race inside one action otherwise and each
     // recomputes the batch sketch before any fill lands.
-    val rawBatchBuckets = batchBuckets0.localCheckpoint(true)
+    val rawBatchBuckets = Materialize(batchBuckets0)
     // Hot-bucket fence over the COMBINED (base + batch) population —
     // the cross join emits |base_bucket|·|batch_bucket| candidates per
     // key, so a batch doc landing in one degenerate base bucket pulls
@@ -466,18 +460,16 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val candidates = cross.unionByName(intra).distinct()
-      .localCheckpoint(true)
+    val candidates = Materialize(cross.unionByName(intra).distinct())
     val candIds = candidates.select(col("doc_a").as("doc_id"))
       .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
     // checkpointed for the same two reasons as the from-sigs path: the
     // shingle fan-out's parallelism probe is free on a checkpointed RDD
     // (no AQE re-execution of the semi-join), and the candidate rows
     // are bounded by the candidate set
-    val candDocs = baseDocs.unionByName(batch)
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    val shingles = docShingles(candDocs, n).localCheckpoint(true)
+    val candDocs = Materialize(baseDocs.unionByName(batch)
+      .join(candIds, Seq("doc_id"), "left_semi"))
+    val shingles = Materialize(docShingles(candDocs, n))
     (jaccardScores(shingles, Some(candidates), threshold),
       () => ()) // checkpointed intermediates free with their RDDs (GC)
   }
@@ -1048,31 +1040,27 @@ object Dedup {
     * large-star/small-star (Kiveris et al., "Connected Components in
     * MapReduce and Beyond"); not needed for threshold graphs.
     *
-    * Checkpointing after each round truncates the growing lineage
+    * Materializing after each round truncates the growing lineage
     * (iterative plans otherwise double per round and overwhelm the
-    * optimizer). Default is `localCheckpoint` — blocks live on executor
-    * storage, fastest, but a lost executor kills the job. Pass
-    * `checkpointDir` (HDFS/S3 on a real cluster) to use RELIABLE
-    * checkpoints instead: each round's label table is persisted to
-    * fault-tolerant storage, so executor loss mid-propagation recomputes
-    * from the last round's files, never from the raw pair join. The
-    * table is two longs per vertex, so the per-round write is tiny
-    * relative to the join it protects.
+    * optimizer). Without a session checkpoint dir that is a local
+    * checkpoint — blocks live on executor storage, fastest, but a lost
+    * executor kills the job. A session with a checkpoint dir (Spark's
+    * `spark.checkpoint.dir`, HDFS/S3 on a real cluster; see
+    * [[graft.core.Materialize]]) gets RELIABLE checkpoints instead: each
+    * round's label table is persisted to fault-tolerant storage, so
+    * executor loss mid-propagation recomputes from the last round's
+    * files, never from the raw pair join. The table is two longs per
+    * vertex, so the per-round write is tiny relative to the join it
+    * protects.
     *
     * Output: (idCol, cluster_id) for EVERY vertex — cluster_id = the
     * minimum member id, so `idCol == cluster_id` selects survivors.
     */
   def connectedComponents(vertices: DataFrame, idCol: String,
-                          pairs: DataFrame,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+                          pairs: DataFrame): DataFrame = {
     // materialize the pair plan BEFORE mirroring it: union(plan, plan')
     // embeds the (expensive) pair-generation subplan twice in one job
-    val p = ckpt(pairs.select(col("doc_a"), col("doc_b")), eager = true)
+    val p = Materialize(pairs.select(col("doc_a"), col("doc_b")))
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     // (r18 note: seeding only pair ENDPOINTS and rejoining singletons at
@@ -1080,10 +1068,9 @@ object Dedup {
     // cover most of the corpus, so the label table barely shrank while
     // the endpoint distinct, the semi-join, and the final singleton
     // join added three stages per run. Whole-vertex seeding stays.)
-    var comp = ckpt(
+    var comp = Materialize(
       vertices.select(col(idCol).as("id")).distinct()
-        .withColumn("comp", col("id")),
-      eager = true)
+        .withColumn("comp", col("id")))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
@@ -1096,7 +1083,7 @@ object Dedup {
       // old-vs-new label pair is already co-resident in this row, so the
       // convergence probe below is a filter+count over the checkpointed
       // round instead of a second vertex×vertex shuffle join per round
-      val next = ckpt(
+      val next = Materialize(
         comp.join(nbrMin, col("id") === col("src"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
@@ -1160,14 +1147,13 @@ object Dedup {
     // mirror below — without the checkpoint each branch re-evaluates
     // the whole upstream pair-scoring plan (measured 3× the entry cost
     // at sf0.1 when the caller feeds live-scored pairs)
-    val lifted = newPairs.select(col("doc_a"), col("doc_b"))
+    val lifted = Materialize(newPairs.select(col("doc_a"), col("doc_b"))
       .join(lbl.select(col("lid").as("doc_a"), col("cluster_id").as("ra")),
         Seq("doc_a"), "left")
       .join(lbl.select(col("lid").as("doc_b"), col("cluster_id").as("rb")),
         Seq("doc_b"), "left")
       .select(coalesce(col("ra"), col("doc_a")).as("doc_a"),
-        coalesce(col("rb"), col("doc_b")).as("doc_b"))
-      .localCheckpoint(true)
+        coalesce(col("rb"), col("doc_b")).as("doc_b")))
     val tinyV = lifted.select(col("doc_a").as(idCol))
       .union(lifted.select(col("doc_b").as(idCol)))
       .union(trulyNew)
@@ -1207,7 +1193,7 @@ object Dedup {
     * aggregate per round, no rows to the driver — see the inline proof
     * at `starViolations`), which exits the moment the contraction lands
     * on a fixed point instead of paying one extra round to observe a
-    * fingerprint repeat; per-round `localCheckpoint` truncates lineage
+    * fingerprint repeat; per-round materialization truncates lineage
     * exactly as in [[connectedComponents]].
     *
     * Output contract is identical to [[connectedComponents]]:
@@ -1222,14 +1208,13 @@ object Dedup {
   def connectedComponentsAlternating(vertices: DataFrame, idCol: String,
                                      pairs: DataFrame,
                                      maxRounds: Int = 50): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val p = Materialize(pairs.select(col("doc_a"), col("doc_b")))
     // canonical undirected edges (lo < hi), self-loops dropped
-    var edges = p
+    var edges = Materialize(p
       .select(least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     def largeStar(e: DataFrame): DataFrame = {
       val nbrs = e.select(col("lo").as("u"), col("hi").as("v"))
@@ -1282,7 +1267,7 @@ object Dedup {
     var violations = starViolations(edges)
     var rounds = 0
     while (violations > 0 && rounds < maxRounds) {
-      edges = smallStar(largeStar(edges)).localCheckpoint(false)
+      edges = Materialize(smallStar(largeStar(edges)), eager = false)
       violations = starViolations(edges) // materializes the round
       rounds += 1
     }

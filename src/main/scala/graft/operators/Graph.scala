@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.core.Materialize
+
 /** Graph analytics over edge lists derived from event streams (⊕ beyond
   * reference parity — the reference has no graph surface; this family
   * serves the "what content leads to what" questions a training-data
@@ -85,7 +87,7 @@ object Graph {
     * rₖ₊₁ == rₖ for every node makes every later round a no-op — the
     * exit only skips provably-identical work (this is why the exact
     * integer formulation buys more than cross-engine determinism).
-    * Each round materializes via localCheckpoint: the delta check
+    * Each round is materialized: the delta check
     * forces a job anyway, and the checkpoint truncates the
     * join-per-round lineage that deep iteration counts would otherwise
     * stack into one giant plan. Costs one extra scalar aggregate per
@@ -187,7 +189,7 @@ object Graph {
           // tol = 0 a zero delta proves the integer fixed point — every
           // remaining round would be bit-identical, so skipping them is
           // exact, not approximate.
-          val mat = next.localCheckpoint(true)
+          val mat = Materialize(next)
           val delta = mat.as("a")
             .join(ranks.as("b"), col("a.node") === col("b.node"))
             .agg(max(abs(col("a.pr") - col("b.pr"))).as("d"))
@@ -243,23 +245,21 @@ object Graph {
     // plan (r19 profile: 2.8 s wall, 1.3 s stage-sum — the gap was
     // planning). Materialize each ONCE: all three are graph-sized, the
     // same class as [[kCorePeel]]'s per-round checkpoints.
-    val simple = simpleUndirected(edges).localCheckpoint(true)
-    val deg = simple.select(col("a").as("node"))
+    val simple = Materialize(simpleUndirected(edges))
+    val deg = Materialize(simple.select(col("a").as("node"))
       .unionByName(simple.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).cast(LongType).as("deg"))
-      .localCheckpoint(true)
+      .groupBy("node").agg(count(lit(1)).cast(LongType).as("deg")))
     // orient a↔b from the smaller (deg, id) to the larger, carrying the
     // destination's order key for the wedge ordering below
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = simple
+    val oriented = Materialize(simple
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-        when(aFirst, col("db")).otherwise(col("da")).as("ddeg"))
-      .localCheckpoint(true)
+        when(aFirst, col("db")).otherwise(col("da")).as("ddeg")))
     val o1 = oriented.select(col("src"), col("dst").as("v"),
       col("ddeg").as("dv"))
     val o2 = oriented.select(col("src"), col("dst").as("w"),
@@ -287,7 +287,7 @@ object Graph {
     * shuffle, not a graph-sized one — anti-joins nodes already reached
     * (so each node keeps its first, minimal depth), and unions the new
     * layer in. Lineage depth is `maxHops`; for deep walks truncate with
-    * `localCheckpoint` as `Dedup.connectedComponents` does — the typical
+    * `Materialize` as `Dedup.connectedComponents` does — the typical
     * 2–6 hop neighborhood queries here don't need it.
     */
   def kHopReach(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
@@ -330,7 +330,7 @@ object Graph {
     * aggregate — both graph-sized, never path-enumerating (min-plus
     * collapses path explosion the way MIN does for [[labelPropagation]];
     * duplicate edges are harmless for the same reason). Dist state is
-    * localCheckpoint'd per round so k rounds don't stack join lineage.
+    * materialized per round so k rounds don't stack join lineage.
     * Newly reached nodes enter the relation as relaxation finds them;
     * unreached nodes stay absent (no ∞ sentinel to disagree on). */
   def ssspRounds(edgesWithCost: DataFrame, seeds: DataFrame,
@@ -359,7 +359,7 @@ object Graph {
     // window, aggregate — in EVERY round's job (profiled r18: three
     // identical 0.53 s derivation stages in g15_sssp's three rounds).
     // Same measured rationale as kCorePeel's eager edge checkpoint.
-    val ec = if (rounds >= 2) ecLazy.localCheckpoint(true) else ecLazy
+    val ec = if (rounds >= 2) Materialize(ecLazy) else ecLazy
     var d = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L))
     for (_ <- 1 to rounds) {
@@ -368,9 +368,8 @@ object Graph {
       val relax = d.select(col("node").as("src"), col("dist"))
         .join(ec, Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
-      d = d.unionByName(relax)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+      d = Materialize(d.unionByName(relax)
+        .groupBy("node").agg(min(col("dist")).as("dist")))
     }
     d
   }
@@ -462,7 +461,7 @@ object Graph {
     * peel set is monotone decreasing, so a no-op round proves the fixed
     * point and every remaining round is IDENTICAL (bit-exact skip, the
     * same argument as [[pageRankConverged]] at tolerance 0). Each round
-    * materializes via localCheckpoint (the exit check forces a job
+    * is materialized (the exit check forces a job
     * anyway; the checkpoint truncates the join-per-round lineage).
     *
     * Shape per round: the symmetrized edge list semi-joins the alive set
@@ -484,9 +483,8 @@ object Graph {
     // checkpoint every round's two semi-joins would re-derive the edge
     // list from the corpus-sized upstream (measured 3.75 s → the edge
     // derivation dominating a 100-node peel at sf0.1)
-    val sym = simple.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(simple.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
+    val sym = Materialize(simple.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(simple.select(col("b").as("u"), col("a").as("v"))))
     def inducedDegrees(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("node").as("u")), Seq("u"))
       .join(alive.select(col("node").as("v")), Seq("v"))
@@ -497,10 +495,9 @@ object Graph {
     var round = 0
     var converged = false
     while (round < rounds && !converged) {
-      val next = inducedDegrees(alive)
+      val next = Materialize(inducedDegrees(alive)
         .filter(col("deg") >= k)
-        .select("node")
-        .localCheckpoint(true)
+        .select("node"))
       if (earlyExit) {
         val n = next.count()
         converged = n == aliveCount // peel only shrinks: equal ⇒ fixed point
@@ -539,7 +536,7 @@ object Graph {
     * aggregates broadcast back — graph-sized, never log-sized.
     *
     * Each half-round's raw sum relation is MATERIALIZED (eager
-    * localCheckpoint, r19): the relation feeds both the 1-row max
+    * `Materialize`, r19): the relation feeds both the 1-row max
     * normalizer and the normalized projection, and every later
     * half-round nests the earlier ones — left lazy, the plan doubled
     * per half-round (16 copies of the edge subtree at 2 iterations)
@@ -561,17 +558,15 @@ object Graph {
     // silently diverging from the recurrence the scaladoc states. Rows
     // with cnt < 1 have no meaning in a positive-weight mutual-
     // reinforcement model, so they are dropped at the edge projection.
-    val e = edges.select(col("src"), col("dst"), col("cnt"))
-      .filter(col("cnt") >= 1)
-      .localCheckpoint(true) // consumed by every half-round
+    val e = Materialize(edges.select(col("src"), col("dst"), col("cnt"))
+      .filter(col("cnt") >= 1)) // consumed by every half-round
     // (score · cnt) summed per endpoint, then max-normalized to `scale`
     def halfRound(scores: DataFrame, joinOn: String, groupAs: String): DataFrame = {
-      val raw = e
+      val raw = Materialize(e
         .join(scores.withColumnRenamed("node", joinOn)
           .withColumnRenamed("s", "__s"), Seq(joinOn))
         .groupBy(col(groupAs).as("node"))
-        .agg(sum(expr(s"CAST(__s AS $d38) * CAST(cnt AS $d38)")).as("r"))
-        .localCheckpoint(true)
+        .agg(sum(expr(s"CAST(__s AS $d38) * CAST(cnt AS $d38)")).as("r")))
       val m = raw.agg(max(col("r")).as("__m"))
       raw.crossJoin(broadcast(m))
         .select(col("node"),

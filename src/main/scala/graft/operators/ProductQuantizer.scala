@@ -148,9 +148,11 @@ object ProductQuantizer {
     val carry = querySub.columns.filterNot(Set("s", "v")).map(col).toSeq
     val lut = querySub
       .join(cb, "s")
-      .select(carry ++ Seq(col("s"), col("cid"),
+      .select(carry ++ Seq(col("s").as("lut_s"), col("cid"),
         floor(vecDot(col("v"), col("c")) * 1e6).cast(LongType).as("lu")): _*)
-    val joinCond = enc("s") === lut("s") && enc("code") === lut("cid")
+    // the LUT's subspace gets its own name: enc and querySub often share
+    // one lineage, and `s === s` across them is a trivially true predicate
+    val joinCond = enc("s") === lut("lut_s") && enc("code") === lut("cid")
     val scored = enc.join(broadcast(lut),
         cell.fold(joinCond) { case (ec, lc) => joinCond && enc(ec) === lut(lc) })
       .filter(col(idCol) =!= col("query_id"))

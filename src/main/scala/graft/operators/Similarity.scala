@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.VectorFunctions.{vecDot, vecNorm2}
 
 /** Similarity search over an `(vec_id: long, embedding: array<float>,
@@ -446,7 +447,7 @@ object Similarity {
     // but an explicit 4096-row checkpoint makes the single-pass shape a
     // guarantee, not an optimizer outcome, and truncates the per-round
     // join lineage as the other iterative operators do)
-    val c = covarianceFixed(emb).localCheckpoint(true)
+    val c = Materialize(covarianceFixed(emb))
     var v = c.select(col("i").as("j")).distinct()
       .select(col("j"), lit(scale).as("x"))
     for (_ <- 1 to rounds) {
@@ -550,7 +551,7 @@ object Similarity {
     * form in its oracle while this side folds the batches one at a
     * time. Per batch: one map-side assignment (codebook literals, zero
     * shuffle) + one (cell, dim) aggregate + a k·d-row state merge
-    * (localCheckpoint'd so B batches never stack lineage); state is
+    * (materialized so B batches never stack lineage); state is
     * ≤ k·d longs however large the corpus. Retraining (the Lloyd loop
     * above) is the scheduled job this maintenance amortizes.
     *
@@ -569,11 +570,10 @@ object Similarity {
           col("v"))
         .groupBy("cell", "dim")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-      state =
+      state = Materialize(
         (if (state == null) delta else state.unionByName(delta))
           .groupBy("cell", "dim")
-          .agg(sum(col("sv")).as("sv"), sum(col("n")).as("n"))
-          .localCheckpoint(true)
+          .agg(sum(col("sv")).as("sv"), sum(col("n")).as("n")))
     }
     state.select(col("cell"), col("dim"), col("n").as("n_members"),
       (expr("sv DIV n") - lit(shift)).cast(LongType).as("centroid_micro"))
@@ -631,15 +631,14 @@ object Similarity {
       // k·d-row result checkpointed: the per-round readout AND the
       // final emit read the materialized rows — exactly one corpus
       // scan per round, and the codebook literals never stack lineage
-      cent = asg
+      cent = Materialize(asg
         .select(col("cell"), posexplode(col("vm")).as(Seq("pos", "v")))
         .select(col("cell"), (col("pos") + 1).cast(LongType).as("dim"),
           col("v"))
         .groupBy("cell", "dim")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
         .select(col("cell"), col("dim"),
-          expr("sv DIV n").cast(LongType).as("cm"), col("n"))
-        .localCheckpoint(true)
+          expr("sv DIV n").cast(LongType).as("cm"), col("n")))
       if (round < rounds)
         codebook = cent.orderBy("cell", "dim").collect()
           .groupBy(_.getLong(0)).toSeq.sortBy(_._1)

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Incremental, partition-granular rebuild of the `final` table
   * (SURVEY §7.5): the reference rewrites the WHOLE joined table on every
   * DAG run (`read_delta.py:217-222`, `mode("overwrite")`) — at 100 TB
@@ -106,8 +108,8 @@ object IncrementalFinal {
           "left_anti")
       // materialize before overwriting the partitions we just read —
       // lineage must not reach back into the files being replaced
-      kept.unionByName(changeset.select(existing.columns.toIndexedSeq.map(col): _*))
-        .localCheckpoint(true)
+      Materialize(
+        kept.unionByName(changeset.select(existing.columns.toIndexedSeq.map(col): _*)))
     }
     // per-WRITER dynamic mode (same rationale as upsertBatch)
     merged.write
@@ -311,9 +313,9 @@ object IncrementalFinal {
         val mmState = prev.select((keyCols.map(col) :+
           col(minColOpt.get).as("_mm_min") :+
           col(maxColOpt.get).as("_mm_max")): _*)
-        val mm = maintainMinMax(mmState, delta, keyCols,
-            "_mm_min", "_mm_max", signCol, valueCol)
-          .localCheckpoint(true) // consumed by the dirty probe AND the fold
+        // consumed by the dirty probe AND the fold
+        val mm = Materialize(maintainMinMax(mmState, delta, keyCols,
+            "_mm_min", "_mm_max", signCol, valueCol))
         val dirtyKeys = mm.filter(col("dirty"))
           .select(keyCols.map(col): _*)
         val mmResolved =
@@ -356,9 +358,9 @@ object IncrementalFinal {
       else reg.distincts.foldLeft(next) { case (acc, (bCol, skCol)) =>
         val state = prev.select(
           (keyCols.map(col) :+ col(skCol).as("__dx_sk")): _*)
-        val m = maintainDistinct(state, delta, keyCols,
-            sketchCol = "__dx_sk", signCol = signCol, valueCol = bCol)
-          .localCheckpoint(true) // dirty probe AND fold both consume it
+        // dirty probe AND fold both consume it
+        val m = Materialize(maintainDistinct(state, delta, keyCols,
+            sketchCol = "__dx_sk", signCol = signCol, valueCol = bCol))
         val dirtyKeys = m.filter(col("dirty")).select(keyCols.map(col): _*)
         val resolved =
           if (dirtyKeys.limit(1).count() == 0L)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkS
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.pipeline.IncrementalFinal
 import graft.plans.MvRegistry
 import graft.streaming.{CdcApply, StreamingMv}
@@ -131,7 +131,7 @@ object CdcOps {
   private def streamed(s: SparkSession, dir: String, kind: String,
                        cfg: StreamingMv.Config, ev: DataFrame): String = {
     val state = Scratch.entryDir(kind, dir)
-    val batches = ev.localCheckpoint(true)
+    val batches = Materialize(ev)
     (0L until 3L).foreach { b =>
       StreamingMv.foldBatch(s, state, cfg)(
         batches.filter(col("event_id") % 3 === b).drop("event_id"), b)
@@ -1427,11 +1427,11 @@ object CdcOps {
           .partitionBy("event_type")
         val v1 = s.read.parquet(mv.base)
           .withColumn("_mx", max(col("v_micro")).over(w))
-        val retracted = v1.filter(col("v_micro") === col("_mx"))
-          .select("event_type", "v_micro").localCheckpoint(true)
-        val v2 = v1
+        val retracted = Materialize(v1.filter(col("v_micro") === col("_mx"))
+          .select("event_type", "v_micro"))
+        val v2 = Materialize(v1
           .filter(col("v_micro").isNull || col("v_micro") < col("_mx"))
-          .select("event_type", "v_micro").localCheckpoint(true)
+          .select("event_type", "v_micro"))
         v2.write.mode("overwrite").parquet(mv.base)
         // ONE repair call: fold the retraction changelog, dirty-rescan
         // the extreme-losing grains, re-stamp — extremes stay routed

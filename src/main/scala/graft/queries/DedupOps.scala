@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.operators.{Curation, Dedup, FuzzyMatch, SemanticDedup}
 
 /** Deduplication inventory over `documents` / `embeddings`.
@@ -1048,15 +1048,14 @@ object DedupOps {
     // dedup threshold — per candidate threshold, how many near-dup
     // pairs and how many distinct documents they touch. The pair
     // relation is computed ONCE at the loosest threshold (0.5) and
-    // localCheckpoint-materialized, so the four cutoffs are two tiny
+    // materialized, so the four cutoffs are two tiny
     // conditional aggregates over it, not four quadratic joins.
     Entry(
       "dedup_threshold_sweep",
       (s, dir) => {
         val thresholds = Seq(0.5, 0.7, 0.8, 0.9)
-        val pairs = Dedup
-          .ngramJaccardPairs(Tables(s, dir, "documents"), 3, 0.5)
-          .localCheckpoint()
+        val pairs = Materialize(Dedup
+          .ngramJaccardPairs(Tables(s, dir, "documents"), 3, 0.5))
         def counts(c: String, pfx: String) = thresholds.zipWithIndex.map {
           case (t, i) =>
             coalesce(sum(when(col(c) >= t, 1L)), lit(0L)).as(s"$pfx$i")

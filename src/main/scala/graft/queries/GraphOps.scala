@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.operators.Graph
 
 /** Graph-analytics inventory (⊕ beyond reference parity) over the item
@@ -77,7 +77,7 @@ object GraphOps {
       (s, dir) => {
         // one corpus pass: the parsed projection feeds 2+ scans
         // (count/nodes/edges or per-round jobs) — materialize once
-        val ev = itemEvents(s, dir).localCheckpoint(true)
+        val ev = Materialize(itemEvents(s, dir))
         val edges = Graph.transitionEdges(ev, "user_id", "ts", "event_id", "item")
         val nodes = ev.select(col("item").as("node")).distinct()
         Graph.pageRank(nodes, edges, iterations = 3, scale = SCALE)
@@ -143,7 +143,7 @@ object GraphOps {
       (s, dir) => {
         // one corpus pass: the parsed projection feeds 2+ scans
         // (count/nodes/edges or per-round jobs) — materialize once
-        val ev = itemEvents(s, dir).localCheckpoint(true)
+        val ev = Materialize(itemEvents(s, dir))
         val edges = Graph.transitionEdges(ev, "user_id", "ts", "event_id", "item")
         val nodes = ev.select(col("item").as("node")).distinct()
         val seeds = nodes.filter(col("node") < 5)
@@ -234,15 +234,14 @@ object GraphOps {
         // co-occurrence fold) — spread the JSON parse across cores and
         // materialize it once, itemEvents' discipline plus the extra
         // columns this dashboard needs
-        val ev = graft.core.Partitioning.spread(
+        val ev = Materialize(graft.core.Partitioning.spread(
             Tables(s, dir, "events")
               .select(col("user_id"), col("ts"), col("event_id"),
                 col("event_type"), col("value"), col("props")),
             col("user_id"))
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"), col("value"),
-            get_json_object(col("props"), "$.k").cast(LongType).as("item"))
-          .localCheckpoint(true)
+            get_json_object(col("props"), "$.k").cast(LongType).as("item")))
         val evi = ev.filter(col("item").isNotNull)
         // the three branches are INDEPENDENT item-sized reductions over
         // the one checkpointed corpus projection, but planned inside a
@@ -267,7 +266,7 @@ object GraphOps {
               col("n_users")))).as("s"))
           .select(col("s.node").as("node"), col("s.partner").as("partner"),
             col("s.n_users").as("n_users"))
-        val Seq(pr, attr, top) = graft.core.Par.ckpt(
+        val Seq(pr, attr, top) = Materialize.all(
           Graph.pageRank(
             evi.select(col("item").as("node")).distinct(),
             Graph.transitionEdges(evi, "user_id", "ts", "event_id", "item"),
@@ -458,7 +457,7 @@ object GraphOps {
       (s, dir) => {
         // one corpus pass: the parsed projection feeds 2+ scans
         // (count/nodes/edges or per-round jobs) — materialize once
-        val ev = itemEvents(s, dir).localCheckpoint(true)
+        val ev = Materialize(itemEvents(s, dir))
         val edges = Graph.transitionEdges(ev, "user_id", "ts", "event_id", "item")
         val seeds = ev.select(col("item").as("node")).distinct()
           .filter(col("node") % 97 === 0)
@@ -785,7 +784,7 @@ object GraphOps {
       (s, dir) => {
         // one corpus pass: the parsed projection feeds 2+ scans
         // (count/nodes/edges or per-round jobs) — materialize once
-        val ev = itemEvents(s, dir).localCheckpoint(true)
+        val ev = Materialize(itemEvents(s, dir))
         val edges = Graph.transitionEdges(ev, "user_id", "ts", "event_id", "item")
         val nodes = ev.select(col("item").as("node")).distinct()
         Graph.hits(nodes, edges, iterations = 2, scale = 1000000L)
@@ -936,7 +935,7 @@ object GraphOps {
       (s, dir) => {
         // one corpus pass: the parsed projection feeds 2+ scans
         // (count/nodes/edges or per-round jobs) — materialize once
-        val ev = itemEvents(s, dir).localCheckpoint(true)
+        val ev = Materialize(itemEvents(s, dir))
         val edges = Graph
           .transitionEdges(ev, "user_id", "ts", "event_id", "item")
           .select(col("src"), col("dst"),

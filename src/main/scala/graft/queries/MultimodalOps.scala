@@ -1,9 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.operators.Multimodal
+import graft.core.{Materialize, Tables}
+import graft.operators.{Dedup, Multimodal}
 
 /** Multimodal inventory: opaque binary payload + typed metadata, frame
   * sampling, and the (stubbed) per-partition decode. */
@@ -26,12 +27,37 @@ object MultimodalOps {
     * recomputes from raw `documents`, so the materialization stays
     * hash-certified on every gate. */
 
+  /** Two renders of every document, `a` then `b`, as vid = doc·2 + off. */
+  private def variantPair(docs: DataFrame, a: Int, b: Int)(
+      render: (DataFrame, Int) => DataFrame): DataFrame = {
+    def variant(p: Int, off: Int) = render(docs, p)
+      .select((col("doc_id") * 2 + off).as("doc_id"), col("payload"))
+    variant(a, 0).unionByName(variant(b, 1))
+  }
+
+  /** The banded join is a self-join: materialize the tiny signature
+    * table (eagerly) so the codec decode runs ONCE — lazily cached, the
+    * join sides raced the fill (r19). */
+  private def hammingPairs(sigs: DataFrame): DataFrame =
+    vidPairs(Dedup.hammingPairsFromSigs(Materialize(sigs), "sig", 3, sigBits = 56))
+
+  /** Pairs touching the batch; base and batch signatures are
+    * materialized serially, base first. */
+  private def incrementalHammingPairs(base: DataFrame, batch: DataFrame): DataFrame =
+    vidPairs(Dedup.incrementalHammingPairs(Materialize(base), Materialize(batch),
+      "sig", 3, sigBits = 56))
+
+  private def vidPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
+      col("hamming").cast("int").as("hamming"))
+      .orderBy("vid_a", "vid_b")
+
   /** The video family's shared 3-variant GVID corpus: 4-frame 8 px,
     * its pixel-doubled re-encode, and the 3-frame trailing trim
     * (vid = doc·3 + off). */
   private def videoVariantCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame =
+  : DataFrame =
     Scratch.sharedTable(s, "mm_vid", dir) {
       val docs = Tables(s, dir, "documents")
       Multimodal.syntheticPatternVideos(s, docs, 8, 4)
@@ -57,7 +83,7 @@ object MultimodalOps {
     * canonical render+decode cost signal. */
   private def imageCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame =
+  : DataFrame =
     Scratch.sharedTable(s, "mm_img", dir) {
       Multimodal.syntheticImages(s, Tables(s, dir, "documents"), 4)
     }
@@ -290,18 +316,8 @@ object MultimodalOps {
       "mm_dedup_image",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        def variant(px: Int, off: Int) = Multimodal
-          .syntheticPatternImages(s, docs, px)
-          .select((col("doc_id") * 2 + off).as("doc_id"), col("payload"))
-        val sigs = Multimodal.imageSignature(s,
-          variant(8, 0).unionByName(variant(16, 1)))
-        // the banded join is a self-join: materialize the tiny
-        // signature table (eager checkpoint) so the codec decode runs
-        // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        hammingPairs(Multimodal.imageSignature(s,
+          variantPair(docs, 8, 16)(Multimodal.syntheticPatternImages(s, _, _))))
       },
       Some("""WITH xs AS (SELECT unnest(range(0, 7)) AS x),
               ys AS (SELECT unnest(range(0, 8)) AS y),
@@ -350,22 +366,9 @@ object MultimodalOps {
         val docs = Tables(s, dir, "documents")
         val keep = graft.operators.Curation
           .hashKeep(col("doc_id"), "mmi", 12)
-        def variants(d: org.apache.spark.sql.DataFrame) = Multimodal
-          .syntheticPatternImages(s, d, 8)
-          .select((col("doc_id") * 2).as("doc_id"), col("payload"))
-          .unionByName(Multimodal
-            .syntheticPatternImages(s, d, 16)
-            .select((col("doc_id") * 2 + 1).as("doc_id"), col("payload")))
-        val baseSigs = Multimodal
-          .imageSignature(s, variants(docs.filter(keep)))
-        val batchSigs = Multimodal
-          .imageSignature(s, variants(docs.filter(!keep)))
-        graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
-            "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        def sigs(d: DataFrame) = Multimodal.imageSignature(s,
+          variantPair(d, 8, 16)(Multimodal.syntheticPatternImages(s, _, _)))
+        incrementalHammingPairs(sigs(docs.filter(keep)), sigs(docs.filter(!keep)))
       },
       Some("""WITH xs AS (SELECT unnest(range(0, 7)) AS x),
               ys AS (SELECT unnest(range(0, 8)) AS y),
@@ -419,12 +422,7 @@ object MultimodalOps {
           .hashKeep(expr("doc_id DIV 3"), "mmv", 12)
         val baseSigs = Multimodal.videoSignature(s, corpus.filter(keep))
         val batchSigs = Multimodal.videoSignature(s, corpus.filter(!keep))
-        graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
-            "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        incrementalHammingPairs(baseSigs, batchSigs)
       },
       Some("""WITH xs AS (SELECT unnest(range(0, 7)) AS x),
               ys AS (SELECT unnest(range(0, 8)) AS y),
@@ -482,18 +480,8 @@ object MultimodalOps {
       "mm_dedup_audio",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        def variant(per: Int, off: Int) = Multimodal
-          .syntheticPatternAudio(s, docs, 57, per)
-          .select((col("doc_id") * 2 + off).as("doc_id"), col("payload"))
-        val sigs = Multimodal.audioSignature(s,
-          variant(32, 0).unionByName(variant(64, 1)))
-        // the banded join is a self-join: materialize the tiny
-        // signature table (eager checkpoint) so the codec decode runs
-        // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        hammingPairs(Multimodal.audioSignature(s,
+          variantPair(docs, 32, 64)(Multimodal.syntheticPatternAudio(s, _, 57, _))))
       },
       Some("""WITH ks AS (SELECT unnest(range(0, 56)) AS k),
               a AS (
@@ -534,23 +522,14 @@ object MultimodalOps {
         // shared WAV fixture, same discipline as the video twin
         // (vid = doc·2 + off → orig = vid DIV 2)
         val corpus = Scratch.sharedTable(s, "mm_aud", dir) {
-          val docs = Tables(s, dir, "documents")
-          Multimodal.syntheticPatternAudio(s, docs, 57, 32)
-            .select((col("doc_id") * 2).as("doc_id"), col("payload"))
-            .unionByName(Multimodal
-              .syntheticPatternAudio(s, docs, 57, 64)
-              .select((col("doc_id") * 2 + 1).as("doc_id"), col("payload")))
+          variantPair(Tables(s, dir, "documents"), 32, 64)(
+            Multimodal.syntheticPatternAudio(s, _, 57, _))
         }
         val keep = graft.operators.Curation
           .hashKeep(expr("doc_id DIV 2"), "mma", 12)
         val baseSigs = Multimodal.audioSignature(s, corpus.filter(keep))
         val batchSigs = Multimodal.audioSignature(s, corpus.filter(!keep))
-        graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
-            "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        incrementalHammingPairs(baseSigs, batchSigs)
       },
       Some("""WITH ks AS (SELECT unnest(range(0, 56)) AS k),
               a AS (
@@ -598,14 +577,7 @@ object MultimodalOps {
       (s, dir) => {
         // shared rendered fixture; the OPERATOR (per-frame decode →
         // min-wise dHash → banded join) runs live
-        val sigs = Multimodal.videoSignature(s, videoVariantCorpus(s, dir))
-        // the banded join is a self-join: materialize the tiny
-        // signature table (eager checkpoint) so the codec decode runs
-        // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
-          .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
-            col("hamming").cast("int").as("hamming"))
-          .orderBy("vid_a", "vid_b")
+        hammingPairs(Multimodal.videoSignature(s, videoVariantCorpus(s, dir)))
       },
       Some("""WITH xs AS (SELECT unnest(range(0, 7)) AS x),
               ys AS (SELECT unnest(range(0, 8)) AS y),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 
 /** Relational operator inventory (SURVEY.md §2.1–§2.8) re-expressed over
   * the driver's TPC-H-ish tables.
@@ -1592,8 +1592,8 @@ object Relational {
         val (groups, per) = (5, 25)
         // sketch arm and exact arm are independent one-row reductions
         // over the same projection, fused only at the final ratio —
-        // overlap their corpus passes (guide §2.6, core.Par)
-        val Seq(est, exact) = graft.core.Par.ckpt(
+        // overlap their corpus passes (guide §2.6, core.Materialize)
+        val Seq(est, exact) = Materialize.all(
           AmsSketch.estimateF2(
             AmsSketch.signedSums(e, "it", groups * per), groups, per),
           e.groupBy("it").agg(count(lit(1)).as("n"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.operators.{SemanticDedup, Similarity}
 import graft.operators.{ProductQuantizer => Pq}
 
@@ -360,8 +360,8 @@ object SimilarityOps {
         val emb = Tables(s, dir, "embeddings")
         // the ANN arm and the brute ground-truth arm are independent
         // 50-row reductions compared only inside recallReport —
-        // overlap them (guide §2.6, core.Par)
-        val Seq(ann, exact) = graft.core.Par.ckpt(
+        // overlap them (guide §2.6, core.Materialize)
+        val Seq(ann, exact) = Materialize.all(
           Similarity.knnIvf(emb, queries(s, dir), 5),
           Similarity.knnBrute(emb, queries(s, dir), 5))
         Similarity.recallReport(ann = ann, exact = exact, maxK = 5)
@@ -625,9 +625,9 @@ object SimilarityOps {
         val emb = Tables(s, dir, "embeddings")
         // the lexical and vector legs are independent k-row-per-query
         // reductions fused only at the RRF join — materialize them from
-        // parallel driver threads (guide §2.6, see core.Par) so the
+        // parallel driver threads (guide §2.6, see core.Materialize) so the
         // BM25 postings build and the brute cosine probe overlap
-        val Seq(t, v) = graft.core.Par.ckpt(
+        val Seq(t, v) = Materialize.all(
           graft.operators.Retrieval.bm25TopK(docs,
               docs.filter(col("doc_id") < 3)
                 .select(col("doc_id").as("query_id"), col("text")), k = 10)
@@ -861,21 +861,20 @@ object SimilarityOps {
         val emb = Tables(s, dir, "embeddings")
         val codebook = Similarity.readCodebookMicro(
           Similarity.kmeansTrainMicro(emb, 8, 2))
-        val pts = Similarity
+        // materialized ONCE (r19): each of the 3 folds below filters
+        // this relation, and left lazy every fold re-ran the full
+        // assign+explode from the embedding scan. A real stream
+        // receives each batch exactly once — the materialization
+        // simulates that arrival instead of re-deriving the whole input
+        // per micro-batch.
+        val pts = Materialize(Similarity
           .assignCellsMicro(emb.select("vec_id", "embedding"), codebook)
           .select(col("vec_id"), col("cell"), posexplode(
             expr("""transform(embedding,
                       x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
                            + 2000000L)""")).as(Seq("pos", "v_micro")))
           .select(col("vec_id"), col("cell"),
-            (col("pos") + 1).cast(LongType).as("dim"), col("v_micro"))
-          // materialized ONCE (r19): each of the 3 folds below filters
-          // this relation, and left lazy every fold re-ran the full
-          // assign+explode from the embedding scan. A real stream
-          // receives each batch exactly once — the checkpoint simulates
-          // that arrival instead of re-deriving the whole input per
-          // micro-batch.
-          .localCheckpoint(true)
+            (col("pos") + 1).cast(LongType).as("dim"), col("v_micro")))
         val cfg = graft.streaming.StreamingMv.Config(Seq("cell", "dim"))
         (0L until 3L).foreach { b =>
           graft.streaming.StreamingMv.foldBatch(s, state, cfg)(

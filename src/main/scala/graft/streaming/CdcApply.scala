@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** CDC apply: materialize the CURRENT state of a table from its routed
   * change log — the parquet stand-in for Delta's `MERGE INTO` that
   * [[CdcIngest.runRouted]]'s tombstone table exists to feed. The
@@ -120,7 +122,7 @@ object CdcApply {
       applyBatch(state, upserts, tombstones, keyCols, orderCols)
     }
     // materialize before overwriting the bucket files we just read
-    val out = next.withColumn("__graft_bucket", bucket).localCheckpoint(true)
+    val out = Materialize(next.withColumn("__graft_bucket", bucket))
     // per-WRITER dynamic mode, not the session conf: mutating the
     // session global around the write races any concurrent write in a
     // shared session — an unrelated full-table overwrite issued while

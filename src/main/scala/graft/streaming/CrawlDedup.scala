@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.operators.Dedup
 
 /** The daily-crawl dedup loop composed END-TO-END as one streaming job:
@@ -245,12 +246,10 @@ object CrawlDedup {
       batchDf.join(pd.select("doc_id"), Seq("doc_id"), "left_anti"))
     // materialize the batch once: it feeds the sketch, the verification
     // re-shingle, the label fold, AND the state append
-    val batch = freshDf.select(col("doc_id"), col("text"))
-      .localCheckpoint(true)
+    val batch = Materialize(freshDf.select(col("doc_id"), col("text")))
     // sketch ONCE: signatures feed the band rows (state append + probe)
     // and the first-batch intra pairing
-    val sigs = Dedup.minhashSignatureArray(batch, n, bands * rows)
-      .localCheckpoint(true)
+    val sigs = Materialize(Dedup.minhashSignatureArray(batch, n, bands * rows))
     val batchBands = Dedup.lshBuckets(sigs, bands, rows)
     val (pairs, releasePairs) = priorDocs match {
       case None =>
@@ -292,7 +291,7 @@ object CrawlDedup {
     } finally {
       // the fold is on disk (or failed) — run the pair generator's
       // release handle. Since r19 the per-batch intermediates are
-      // eager localCheckpoints (disk-backed, ContextCleaner-freed once
+      // eager materializations (disk-backed, ContextCleaner-freed once
       // this trigger's RDD references drop), so the handle is a no-op;
       // it stays in the protocol so a future storage change lands in
       // one place, and the targeted-release discipline (never
@@ -311,7 +310,7 @@ object CrawlDedup {
     // that don't yet count the batch), never over-reporting spans whose
     // window rows are missing.
     substr.foreach { st =>
-      val batchWins = Dedup.allWindows(batch, st.l).localCheckpoint(true)
+      val batchWins = Materialize(Dedup.allWindows(batch, st.l))
       val stats = StreamingIvm.readState(spark, s"$stateDir/substats",
           Some(batchId)) match {
         case None => Dedup.windowStats(batchWins)
@@ -330,10 +329,9 @@ object CrawlDedup {
     // (a smaller-id arrival evicts a base survivor, ≡ recompute).
     // Data partition first, versioned survivor state last (commit mark).
     semantic.foreach { se =>
-      val batchEmb = freshDf.select(col("doc_id").as("vec_id"),
+      val batchEmb = Materialize(freshDf.select(col("doc_id").as("vec_id"),
           col(se.embCol).cast(org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)).as("embedding"))
-        .localCheckpoint(true)
+            org.apache.spark.sql.types.FloatType)).as("embedding")))
       val assignedBatch = graft.operators.SemanticDedup
         .assignCells(batchEmb, se.centroids)
         .select(col("vec_id"), col("embedding"), col("cell"))
@@ -403,8 +401,7 @@ object CrawlDedup {
                              // block on those bits, not a constant
                              // high chunk (review r18)
                              sigBits: Int = 56): Unit = {
-    val batchSigs = sigsDf
-      .localCheckpoint(true) // feeds probe, label fold, state append
+    val batchSigs = Materialize(sigsDf) // feeds probe, label fold, state append
     val pairs = priorBatches(spark, s"$stateDir/$sigSub", batchId) match {
       case None =>
         Dedup.hammingPairsFromSigs(batchSigs, "sig", maxHamming,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -633,8 +634,10 @@ class DedupSpec extends SparkSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("doc_a", "doc_b")
     val dir = tmpDir("cc-ckpt")
-    val reliable = Dedup.connectedComponents(vertices, "doc_id", pairs,
-      checkpointDir = Some(dir))
+    val reliable = withCheckpointDir(dir) {
+      Dedup.connectedComponents(vertices, "doc_id", pairs)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val got = reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))

@@ -115,7 +115,7 @@ class PlanSpec extends SparkSuite {
       "sim_jl_distortion" -> "JL audit pair pass: broadcast-tiny query set",
       "sim_range_search" -> "declared brute baseline: broadcast-tiny query set",
       // sim_recall_report / sim_hybrid_search: their brute arms now
-      // materialize at construction behind core.Par (r19 second pass) —
+      // materialize at construction behind core.Materialize (r19 second pass) —
       // the returned plan joins LogicalRDD handles, so the arms' BNLJ
       // no longer appears here; the brute shape itself stays pinned by
       // the sim_knn_brute / dedup_embed_cosine allowlist rows above

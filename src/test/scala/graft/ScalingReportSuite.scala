@@ -139,8 +139,8 @@ class ScalingReportSuite extends SparkSuite {
     // the serve is a fixed-size summary scan (~0.2 s, mostly planning
     // overhead), so a single ambient-load spike between the sf0.01 and
     // sf0.1 measurements can fake a 1.6× "growth"; adjudicate once by
-    // re-measuring before failing the build (the benchdiff → spotbench
-    // protocol in miniature), keeping the min per SF across attempts
+    // re-measuring before failing the build, keeping the min per SF
+    // across attempts
     var ts = measure()
     if (math.log10(ts(2) / ts(1)) > ServeAlphaBound)
       ts = ts.zip(measure()).map { case (a, b) => math.min(a, b) }
