@@ -172,8 +172,9 @@ object Bench {
     * `load_suspect` the queries whose spread exceeds 3× (min still
     * reported — the list says WHERE to look, the loads say WHY);
     * `value` the total of the mins; failed queries are -1 in `queries`
-    * and listed by name in `errors` (excluded from the total). */
-  /** `warmupSec`: wall seconds of the untimed shared-table warm-up
+    * and listed by name in `errors` (excluded from the total).
+    *
+    * `warmupSec`: wall seconds of the untimed shared-table warm-up
     * (−1 when not measured, e.g. unit tests). Reported as a separate
     * NON-GATING field: the one-off build cost excluded from every
     * timed entry must stay visible and adjudicable — without it the

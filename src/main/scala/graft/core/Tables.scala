@@ -16,20 +16,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Plain parquet scan. Catalyst pushes filters/projections into this scan
-    * (verify via `.explain`: `PushedFilters`, `ReadSchema`).
-    *
-    * `events.ts` normalizes to session-TZ TimestampType (UTC-pinned in
-    * Sessions) whatever the driver stored this round — the physical type
-    * has CHANGED across rounds, so the shim dispatches on the schema
-    * actually read:
-    *   - TIMESTAMP(NANOS) → nanosecond LONG (legacy.parquet.nanosAsLong,
-    *     set in Sessions); rebuilt via `DIV 1000` — exact 64-bit integer
-    *     math, never double (~1.7e18 ns exceeds the 2^53 mantissa);
-    *   - TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ; a
-    *     plain cast reinterprets the wall-clock in the UTC session zone
-    *     (identical µs values to the nanos path);
-    *   - already TimestampType → passthrough. */
   /** Schemas inferred once per (JVM, path): every bare
     * `spark.read.parquet` call runs a footer-inference DRIVER JOB
     * before the query proper (profiled: a 0.02–0.05 s "parquet at
@@ -46,6 +32,20 @@ object Tables {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
+  /** Plain parquet scan. Catalyst pushes filters/projections into this scan
+    * (verify via `.explain`: `PushedFilters`, `ReadSchema`).
+    *
+    * `events.ts` normalizes to session-TZ TimestampType (UTC-pinned in
+    * Sessions) whatever the driver stored this round — the physical type
+    * has CHANGED across rounds, so the shim dispatches on the schema
+    * actually read:
+    *   - TIMESTAMP(NANOS) → nanosecond LONG (legacy.parquet.nanosAsLong,
+    *     set in Sessions); rebuilt via `DIV 1000` — exact 64-bit integer
+    *     math, never double (~1.7e18 ns exceeds the 2^53 mantissa);
+    *   - TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ; a
+    *     plain cast reinterprets the wall-clock in the UTC session zone
+    *     (identical µs values to the nanos path);
+    *   - already TimestampType → passthrough. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val schema = schemaCache.computeIfAbsent(path,

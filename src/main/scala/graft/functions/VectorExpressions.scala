@@ -171,5 +171,10 @@ object VectorFunctions {
   /** Cosine similarity, structured exactly as `dot / (sqrt(n_a) * sqrt(n_b))`
     * — keep this shape in any oracle SQL for bit-identical results. */
   def cosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (sqrt(vecNorm2(a)) * sqrt(vecNorm2(b)))
+    cosine(a, b, sqrt(vecNorm2(a)), sqrt(vecNorm2(b)))
+
+  /** The one cosine quotient `dot(a, b) / (normA * normB)`, for callers
+    * that attach each vector's L2 norm once before pairing. */
+  def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
+    vecDot(a, b) / (normA * normB)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StructType, TimestampType}
@@ -35,7 +35,41 @@ object AsOfJoin {
     * and timestamp flow through under their left-side names. */
   def latestPrior(left: DataFrame, right: DataFrame, key: String, ts: String,
                   leftCols: Seq[String], rightCols: Seq[String],
-                  rightTiebreak: String): DataFrame = {
+                  rightTiebreak: String): DataFrame =
+    oneSided(left, right, key, ts, leftCols, rightCols, rightTiebreak,
+      forward = false)
+
+  /** Forward AS-OF: for each left row, the single EARLIEST right row with
+    * `right.ts >= left.ts` on the same key (pandas merge_asof
+    * direction='forward'). Same union + one-window plan as
+    * [[latestPrior]], scanned in descending time; inclusive at equal ts;
+    * among equal right timestamps the greatest `rightTiebreak` wins —
+    * the same tie contract as the backward join. */
+  def earliestNext(left: DataFrame, right: DataFrame, key: String, ts: String,
+                   leftCols: Seq[String], rightCols: Seq[String],
+                   rightTiebreak: String): DataFrame =
+    oneSided(left, right, key, ts, leftCols, rightCols, rightTiebreak,
+      forward = true)
+
+  /** [[latestPrior]] / [[earliestNext]]: one [[carry]] over the
+    * [[tagged]] union, kept to the left rows. */
+  private def oneSided(left: DataFrame, right: DataFrame, key: String,
+                       ts: String, leftCols: Seq[String],
+                       rightCols: Seq[String], rightTiebreak: String,
+                       forward: Boolean): DataFrame =
+    tagged(left, right, key, ts, leftCols, rightCols, rightTiebreak)
+      .withColumn("__asof", carry(key, ts, forward))
+      .filter(col("__side") === 1)
+      .select((col(key) +: col(ts) +: leftCols.map(col)) ++
+        rightCols.map(c => col("__asof").getField(c).as(s"asof_$c")): _*)
+
+  /** Both inputs tagged and unioned: (key, ts, __side, __tie, __r,
+    * leftCols…), left rows with side 1 and a NULL right payload, right
+    * rows with side 0, the tiebreak as `__tie` and the `rc` columns as
+    * the one `__r` struct. */
+  private def tagged(left: DataFrame, right: DataFrame, key: String,
+                     ts: String, leftCols: Seq[String], rc: Seq[String],
+                     rightTiebreak: String): DataFrame = {
     // the tiebreak is cast to LONG for the union'd ordering column; a
     // non-numeric column would cast to NULL and make equal-timestamp
     // selection depend on partitioning — fail loudly instead
@@ -45,7 +79,7 @@ object AsOfJoin {
       s"rightTiebreak '$rightTiebreak' must be numeric or timestamp " +
         s"(got $tieType): casting it to LONG would yield NULL and make " +
         "equal-timestamp selection nondeterministic")
-    val rStructType = StructType(rightCols.map(c => right.schema(c)))
+    val rStructType = StructType(rc.map(c => right.schema(c)))
     val lTagged = left.select(
       col(key) +: col(ts) +: lit(1).as("__side") +:
         lit(null).cast("long").as("__tie") +:
@@ -58,60 +92,24 @@ object AsOfJoin {
     val rTagged = right
       .filter(col(key).isNotNull && col(ts).isNotNull)
       .select(
-      col(key) +: col(ts) +: lit(0).as("__side") +:
-        col(rightTiebreak).cast("long").as("__tie") +:
-        struct(rightCols.map(col): _*).as("__r") +:
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    // right rows sort BEFORE left rows at the same ts (side 0 < 1) so an
-    // equal-timestamp right row is visible to the left row's window.
-    val w = Window.partitionBy(key)
-      .orderBy(col(ts).asc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    lTagged.unionByName(rTagged)
-      .withColumn("__asof", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select((col(key) +: col(ts) +: leftCols.map(col)) ++
-        rightCols.map(c => col("__asof").getField(c).as(s"asof_$c")): _*)
-  }
-
-  /** Forward AS-OF: for each left row, the single EARLIEST right row with
-    * `right.ts >= left.ts` on the same key (pandas merge_asof
-    * direction='forward'). Same union + one-window plan as
-    * [[latestPrior]], scanned in descending time; inclusive at equal ts;
-    * among equal right timestamps the greatest `rightTiebreak` wins —
-    * the same tie contract as the backward join. */
-  def earliestNext(left: DataFrame, right: DataFrame, key: String, ts: String,
-                   leftCols: Seq[String], rightCols: Seq[String],
-                   rightTiebreak: String): DataFrame = {
-    val tieType = right.schema(rightTiebreak).dataType
-    require(tieType.isInstanceOf[NumericType] || tieType == TimestampType,
-      s"rightTiebreak '$rightTiebreak' must be numeric or timestamp " +
-        s"(got $tieType): casting it to LONG would yield NULL and make " +
-        "equal-timestamp selection nondeterministic")
-    val rStructType = StructType(rightCols.map(c => right.schema(c)))
-    val lTagged = left.select(
-      col(key) +: col(ts) +: lit(1).as("__side") +:
-        lit(null).cast("long").as("__tie") +:
-        lit(null).cast(rStructType).as("__r") +:
-        leftCols.map(col): _*)
-    val rTagged = right
-      .filter(col(key).isNotNull && col(ts).isNotNull)
-      .select(
         col(key) +: col(ts) +: lit(0).as("__side") +:
           col(rightTiebreak).cast("long").as("__tie") +:
-          struct(rightCols.map(col): _*).as("__r") +:
+          struct(rc.map(col): _*).as("__r") +:
           leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    // descending time; rights still sort before lefts at equal ts, and
-    // ascending tie makes the LAST-carried equal-ts right the greatest
-    val w = Window.partitionBy(key)
-      .orderBy(col(ts).desc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
     lTagged.unionByName(rTagged)
-      .withColumn("__asof", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select((col(key) +: col(ts) +: leftCols.map(col)) ++
-        rightCols.map(c => col("__asof").getField(c).as(s"asof_$c")): _*)
   }
+
+  /** The last right payload carried over [[tagged]] rows per key, in
+    * ascending time (the latest prior right) or, `forward`, descending
+    * time (the earliest next right). Right rows sort BEFORE left rows at
+    * the same ts (side 0 < 1) in both directions, so an equal-timestamp
+    * right row is visible to the left row's window, and ascending tie
+    * makes the LAST-carried equal-ts right the greatest. */
+  private def carry(key: String, ts: String, forward: Boolean): Column =
+    last(col("__r"), ignoreNulls = true).over(Window.partitionBy(key)
+      .orderBy(if (forward) col(ts).desc else col(ts).asc,
+        col("__side").asc, col("__tie").asc)
+      .rowsBetween(Window.unboundedPreceding, 0))
 
   /** Nearest AS-OF (pandas direction='nearest'): the prior or next match,
     * whichever is closer in time; an exact tie prefers the PRIOR row
@@ -126,45 +124,14 @@ object AsOfJoin {
     * exchange → sort → Window → sort → Window: the union's rows cross
     * the network once and there is no back-join at all (r9 shipped two
     * full union shuffles plus a |left| equi-join — 3× the network
-    * volume of this form; VERDICT r9 task 4).
-    *
-    * `leftId` is kept for API stability (it must still be a carried
-    * unique left id) but no longer drives a join. */
+    * volume of this form; VERDICT r9 task 4). */
   def nearest(left: DataFrame, right: DataFrame, key: String, ts: String,
-              leftId: String, leftCols: Seq[String], rightCols: Seq[String],
+              leftCols: Seq[String], rightCols: Seq[String],
               rightTiebreak: String): DataFrame = {
-    require(leftCols.contains(leftId), s"leftId '$leftId' must be in leftCols")
-    val tieType = right.schema(rightTiebreak).dataType
-    require(tieType.isInstanceOf[NumericType] || tieType == TimestampType,
-      s"rightTiebreak '$rightTiebreak' must be numeric or timestamp " +
-        s"(got $tieType): casting it to LONG would yield NULL and make " +
-        "equal-timestamp selection nondeterministic")
     val rc = if (rightCols.contains(ts)) rightCols else rightCols :+ ts
-    val rStructType = StructType(rc.map(c => right.schema(c)))
-    val lTagged = left.select(
-      col(key) +: col(ts) +: lit(1).as("__side") +:
-        lit(null).cast("long").as("__tie") +:
-        lit(null).cast(rStructType).as("__r") +:
-        leftCols.map(col): _*)
-    val rTagged = right
-      .filter(col(key).isNotNull && col(ts).isNotNull)
-      .select(
-        col(key) +: col(ts) +: lit(0).as("__side") +:
-          col(rightTiebreak).cast("long").as("__tie") +:
-          struct(rc.map(col): _*).as("__r") +:
-          leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    // same-partition windows: rights sort before lefts at equal ts in
-    // BOTH directions, so each pick is equal-ts inclusive with the
-    // greatest tiebreak — identical tie contracts to the two-pass form
-    val wPrior = Window.partitionBy(key)
-      .orderBy(col(ts).asc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = Window.partitionBy(key)
-      .orderBy(col(ts).desc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val both = lTagged.unionByName(rTagged)
-      .withColumn("__prior", last(col("__r"), ignoreNulls = true).over(wPrior))
-      .withColumn("__next", last(col("__r"), ignoreNulls = true).over(wNext))
+    val both = tagged(left, right, key, ts, leftCols, rc, rightTiebreak)
+      .withColumn("__prior", carry(key, ts, forward = false))
+      .withColumn("__next", carry(key, ts, forward = true))
       .filter(col("__side") === 1)
     val priorTs = col("__prior").getField(ts)
     val nextTs = col("__next").getField(ts)

@@ -215,13 +215,6 @@ object Dedup {
       .select(col("doc_id") +:
         (0 until numHashes).map(i => element_at(col("sig"), i + 1).as(s"h$i")): _*)
 
-  /** MinHash-LSH near-dup pairs: band the signature (`bands` × `rows`),
-    * bucket-join on (band index, band hash), then verify every candidate
-    * pair with the exact n-gram Jaccard — output only pairs ≥ `threshold`.
-    *
-    * Recall: P[miss | J=s] = (1 − s^rows)^bands; at the default 16×4 and
-    * s = 0.8 that is ~2e-4 per pair. Verification makes precision exact.
-    */
   /** (doc_id, band, bh) LSH bucket rows of a signature table — the
     * relation [[writeLshIndex]] persists and every probe joins on. */
   def lshBuckets(sig: DataFrame, bands: Int, rows: Int): DataFrame = {
@@ -251,6 +244,13 @@ object Dedup {
     else buckets.join(hotBandBuckets(buckets, cap), Seq("band", "bh"),
       "left_anti")
 
+  /** MinHash-LSH near-dup pairs: band the signature (`bands` × `rows`),
+    * bucket-join on (band index, band hash), then verify every candidate
+    * pair with the exact n-gram Jaccard — output only pairs ≥ `threshold`.
+    *
+    * Recall: P[miss | J=s] = (1 − s^rows)^bands; at the default 16×4 and
+    * s = 0.8 that is ~2e-4 per pair. Verification makes precision exact.
+    */
   def minhashLshPairs(docs: DataFrame, n: Int, threshold: Double,
                       bands: Int = 16, rows: Int = 4,
                       maxBandBucketSize: Long = Long.MaxValue): DataFrame =

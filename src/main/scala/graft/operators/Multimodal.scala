@@ -259,13 +259,6 @@ object Multimodal {
     }
   }
 
-  /** REAL audio decoder — `javax.sound.sampled` (JDK built-in): decodes
-    * WAV/AIFF/AU payload bytes to PCM samples and emits a 16-bin
-    * AMPLITUDE histogram (|sample| / full-scale, binned evenly; first
-    * channel of each frame). Supports the signed 16-bit and unsigned
-    * 8-bit PCM encodings the JDK parses natively — all-integer sample
-    * math, so identical features on every JVM. Non-decodable bytes fail
-    * loudly, like [[ImageIoCodec]]. */
   /** Shared PCM decode: WAV/AIFF/AU payload bytes → first-channel
     * amplitude per frame (0..32767; 8-bit unsigned PCM recentered and
     * ×256 onto the same scale). ONE definition for [[WavCodec]]'s
@@ -407,6 +400,13 @@ object Multimodal {
     out
   }
 
+  /** REAL audio decoder — `javax.sound.sampled` (JDK built-in): decodes
+    * WAV/AIFF/AU payload bytes to PCM samples and emits a 16-bin
+    * AMPLITUDE histogram (|sample| / full-scale, binned evenly; first
+    * channel of each frame). Supports the signed 16-bit and unsigned
+    * 8-bit PCM encodings the JDK parses natively — all-integer sample
+    * math, so identical features on every JVM. Non-decodable bytes fail
+    * loudly, like [[ImageIoCodec]]. */
   object WavCodec extends MediaCodec {
     override def features(bytes: Array[Byte]): Array[Double] = {
       val amps = pcmAmplitudes(bytes, "WavCodec")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
@@ -158,9 +157,7 @@ object ProductQuantizer {
       .filter(col(idCol) =!= col("query_id"))
       .groupBy(col("query_id"), col(idCol).as("neighbor_id"))
       .agg(sum(col("lu")).as("mu"))
-    val w = Window.partitionBy("query_id").orderBy(desc("mu"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
+    Similarity.topK(scored, "mu", k, bigintRank = true)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         (col("mu").cast(DoubleType) / 1000000.0).as("adc_dot"))
   }
@@ -179,10 +176,8 @@ object ProductQuantizer {
     * Emits (query_id, neighbor_id, rank, dot) with the exact double
     * dot. */
   def rerankExact(cands: DataFrame, emb: DataFrame, queries: DataFrame,
-                  k: Int, idCol: String = "vec_id",
-                  embCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(embCol).as("q_emb"))
+                  k: Int, idCol: String = "vec_id"): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"), col("embedding").as("q_emb"))
     // dedup the shortlist first (review r18): the contract accepts
     // candidates from ANY source — a union of probe shortlists can
     // repeat a pair, and a duplicate would both emit twice and consume
@@ -190,13 +185,11 @@ object ProductQuantizer {
     val withQ = broadcast(cands.select("query_id", "neighbor_id").distinct()
       .join(q, "query_id"))
     val exact = emb
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("n_emb"))
+      .select(col(idCol).as("neighbor_id"), col("embedding").as("n_emb"))
       .join(withQ, "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         vecDot(col("q_emb"), col("n_emb")).as("dot"))
-    val w = Window.partitionBy("query_id").orderBy(desc("dot"), asc("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
+    Similarity.topK(exact, "dot", k, bigintRank = true)
       .select("query_id", "neighbor_id", "rank", "dot")
   }
 

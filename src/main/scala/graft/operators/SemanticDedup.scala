@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.functions.VectorFunctions.{vecDot, vecNorm2}
+import graft.functions.VectorFunctions.{cosine, vecDot, vecNorm2}
 
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
   * embedding space coarsely, then prune near-duplicate vectors WITHIN each
@@ -68,9 +68,7 @@ object SemanticDedup {
     val b = d.select(col("vec_id").as("vec_b"), col("embedding").as("e_b"),
       col("nrm").as("nrm_b"), col("cell").as("cell_b"))
     a.join(b, col("cell") === col("cell_b") && col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"), col("cell"),
-        (vecDot(col("e_a"), col("e_b")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos"))
+      .select(col("vec_a"), col("vec_b"), col("cell"), Similarity.pairCos)
       .filter(col("cos") >= threshold)
   }
 
@@ -111,8 +109,8 @@ object SemanticDedup {
         col("cell").as("b_cell"))
       .withColumn("b_nrm", sqrt(vecNorm2(col("b_e"))))
     val cross = ba.join(nbn, col("b_cell") === col("cell"))
-      .filter(vecDot(col("b_e"), col("embedding"))
-        / (col("b_nrm") * col("nrm")) >= threshold)
+      .filter(cosine(col("b_e"), col("embedding"), col("b_nrm"), col("nrm"))
+        >= threshold)
       .select(col("b_id"), col("vec_id"))
     val droppedBase = cross.filter(col("b_id") > col("vec_id"))
       .select(col("b_id").as("vec_id")).distinct()

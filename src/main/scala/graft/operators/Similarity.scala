@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.Materialize
-import graft.functions.VectorFunctions.{vecDot, vecNorm2}
+import graft.functions.VectorFunctions.{cosine, vecDot, vecNorm2}
 
 /** Similarity search over an `(vec_id: long, embedding: array<float>,
   * label: int)` table.
@@ -31,24 +32,47 @@ object Similarity {
   private def withNorm(df: DataFrame, embCol: String, as: String): DataFrame =
     df.withColumn(as, sqrt(vecNorm2(col(embCol))))
 
+  /** The normed query side every variant pairs against: (query_id,
+    * `cols`…, q_nrm). `cols` carry [[qEmb]] and whatever query column
+    * the candidate generator joins on, in the caller's order. */
+  private def querySide(queries: DataFrame, cols: Column*): DataFrame =
+    withNorm(queries.select(col("vec_id").as("query_id") +: cols: _*),
+      "q_emb", "q_nrm")
+
+  private def qEmb: Column = col("embedding").as("q_emb")
+
+  private def notSelf: Column = col("vec_id") =!= col("query_id")
+
+  /** (query_id, neighbor_id, cos) for candidate rows carrying (query_id,
+    * q_emb, q_nrm) and the corpus (vec_id, embedding, nrm). */
+  private def scored(candidates: DataFrame): DataFrame =
+    candidates.select(col("query_id"), col("vec_id").as("neighbor_id"),
+      cosine(col("q_emb"), col("embedding"), col("q_nrm"), col("nrm")).as("cos"))
+
+  /** The family's one top-k window: per query_id, the k rows best by
+    * (`score` DESC, neighbor_id ASC) — a total order, so ties resolve the
+    * same under any partitioning — numbered from 1 in an int `rank`
+    * (bigint with `bigintRank`). */
+  private[operators] def topK(rows: DataFrame, score: String, k: Int,
+                              bigintRank: Boolean = false): DataFrame = {
+    val rn = row_number().over(
+      Window.partitionBy("query_id").orderBy(desc(score), asc("neighbor_id")))
+    rows.withColumn("rank", if (bigintRank) rn.cast(LongType) else rn)
+      .filter(col("rank") <= k)
+  }
+
+  /** The exact refine step every kNN variant ends in (filter → refine):
+    * cosine-score the candidate rows a variant generated and keep the top
+    * k per query. Emits (query_id, neighbor_id, rank, cos). */
+  private def refine(candidates: DataFrame, k: Int): DataFrame =
+    topK(scored(candidates), "cos", k)
+      .select("query_id", "neighbor_id", "rank", "cos")
+
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * other vectors by cosine similarity (self excluded). */
-  def knnBrute(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(withNorm(queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-      "q_emb", "q_nrm"))
-    val d = withNorm(emb, "embedding", "nrm")
-    val scored = d.crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
+  def knnBrute(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    refine(withNorm(emb, "embedding", "nrm")
+      .crossJoin(broadcast(querySide(queries, qEmb))).filter(notSelf), k)
 
   /** Hard-negative mining for contrastive training: per query, the k
     * most-similar corpus vectors whose `label` DIFFERS from the
@@ -59,41 +83,40 @@ object Similarity {
     * side is the bounded query set; at 100 TB prune candidates first
     * (e.g. [[knnIvfMultiProbe]]'s cell ranking with the query's own
     * cell dropped) and rescore exactly — same recall dial as top-k. */
-  def hardNegatives(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(withNorm(queries
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb")),
-      "q_emb", "q_nrm"))
-    val d = withNorm(emb, "embedding", "nrm")
-    val scored = d.join(q, col("label") =!= col("q_label"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
+  def hardNegatives(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    refine(withNorm(emb, "embedding", "nrm")
+      .join(broadcast(querySide(queries, col("label").as("q_label"), qEmb)),
+        col("label") =!= col("q_label")), k)
 
   /** IVF-style pruned top-k: only score vectors in the query's own cell
     * (`label`). One-probe IVF: recall trades against the 1/cells scan. */
-  def knnIvf(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(withNorm(queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label")),
-      "q_emb", "q_nrm"))
-    val d = withNorm(emb, "embedding", "nrm")
-    val scored = d.join(q, col("label") === col("q_label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+  def knnIvf(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    refine(withNorm(emb, "embedding", "nrm")
+      .join(broadcast(querySide(queries, qEmb, col("label").as("q_label"))),
+        col("label") === col("q_label"))
+      .filter(notSelf), k)
+
+  /** The query side of every cell-probing variant, one row per probed
+    * cell: (query_id, q_emb, q_nrm, q_cell) for the nProbe nearest cells
+    * of `q_emb`. Centroids are ranked by the ‖q−c‖² order statistic
+    * q·c − ‖c‖²/2 (monotone in true distance), ties broken by cell id via
+    * the struct sort — one definition, so the variants can never
+    * disagree on probe order. */
+  private def probedQueries(queries: DataFrame, centroids: Array[Array[Float]],
+                            nProbe: Int): DataFrame = {
+    require(nProbe >= 1 && nProbe <= centroids.length,
+      s"nProbe must be in [1, ${centroids.length}], got $nProbe")
+    val cellScores = centroids.zipWithIndex.map { case (c, i) =>
+      val cNorm2 = c.foldLeft(0.0)((a, x) => a + x.toDouble * x)
+      struct(
+        (vecDot(col("q_emb"), typedlit(c.toSeq)) - lit(cNorm2 / 2)).as("score"),
+        lit(i).as("cell"))
+    }
+    querySide(queries, qEmb)
+      .withColumn("probe",
+        explode(slice(reverse(array_sort(array(cellScores.toIndexedSeq: _*))), 1, nProbe)))
+      .select(col("query_id"), col("q_emb"), col("q_nrm"),
+        col("probe.cell").as("q_cell"))
   }
 
   /** Multi-probe IVF top-k over a quantizer-assigned corpus
@@ -110,43 +133,12 @@ object Similarity {
     * corpus on its cell — broadcast on the tiny query side, so the scan
     * reads only probed cells; with the corpus `partitionBy("cell")` on
     * disk this becomes partition pruning at 100 TB. */
-  /** The nProbe nearest cells of `q_emb`, as an exploded probe struct:
-    * centroids ranked by the ‖q−c‖² order statistic q·c − ‖c‖²/2
-    * (monotone in true distance), ties broken by cell id via the struct
-    * sort. Shared by every cell-probing variant so they can never
-    * disagree on probe order. */
-  private def probeCells(centroids: Array[Array[Float]], nProbe: Int) = {
-    val cellScores = centroids.zipWithIndex.map { case (c, i) =>
-      val cNorm2 = c.foldLeft(0.0)((a, x) => a + x.toDouble * x)
-      struct(
-        (vecDot(col("q_emb"), typedlit(c.toSeq)) - lit(cNorm2 / 2)).as("score"),
-        lit(i).as("cell"))
-    }
-    explode(slice(reverse(array_sort(array(cellScores.toIndexedSeq: _*))), 1, nProbe))
-  }
-
   def knnIvfMultiProbe(assigned: DataFrame, queries: DataFrame,
                        centroids: Array[Array[Float]], k: Int,
                        nProbe: Int): DataFrame = {
-    require(nProbe >= 1 && nProbe <= centroids.length,
-      s"nProbe must be in [1, ${centroids.length}], got $nProbe")
-    val q = broadcast(withNorm(queries
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        "q_emb", "q_nrm")
-      .withColumn("probe", probeCells(centroids, nProbe))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("probe.cell").as("q_cell")))
-    val d = withNorm(assigned, "embedding", "nrm")
-    val scored = d.join(q, col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    val q = broadcast(probedQueries(queries, centroids, nProbe))
+    refine(withNorm(assigned, "embedding", "nrm")
+      .join(q, col("cell") === col("q_cell")).filter(notSelf), k)
   }
 
   /** kNN GRAPH: the top-k cosine neighbors of EVERY corpus vector — the
@@ -171,25 +163,9 @@ object Similarity {
     * single-threaded, ~4 s of a 6 s query at sf0.1). */
   def knnGraph(assigned: DataFrame, centroids: Array[Array[Float]], k: Int,
                nProbe: Int): DataFrame = {
-    require(nProbe >= 1 && nProbe <= centroids.length,
-      s"nProbe must be in [1, ${centroids.length}], got $nProbe")
-    val q = withNorm(assigned
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        "q_emb", "q_nrm")
-      .withColumn("probe", probeCells(centroids, nProbe))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("probe.cell").as("q_cell"))
-    val d = graft.core.Tables.spread(withNorm(assigned, "embedding", "nrm"))
-    val scored = d.join(q, col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    val q = probedQueries(assigned, centroids, nProbe)
+    refine(graft.core.Tables.spread(withNorm(assigned, "embedding", "nrm"))
+      .join(q, col("cell") === col("q_cell")).filter(notSelf), k)
   }
 
   /** Radius (range) search: every corpus vector within cosine ≥ `radius`
@@ -198,18 +174,10 @@ object Similarity {
     * broadcast query side, map-side cosine filter, and NO rank window —
     * nothing shuffles at all until the caller aggregates. The same cell
     * / LSH pruning as the kNN variants applies when radius is high. */
-  def rangeSearch(emb: DataFrame, queries: DataFrame, radius: Double): DataFrame = {
-    val q = broadcast(withNorm(queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-      "q_emb", "q_nrm"))
-    val d = withNorm(emb, "embedding", "nrm")
-    d.crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
+  def rangeSearch(emb: DataFrame, queries: DataFrame, radius: Double): DataFrame =
+    scored(withNorm(emb, "embedding", "nrm")
+      .crossJoin(broadcast(querySide(queries, qEmb))).filter(notSelf))
       .filter(col("cos") >= radius)
-  }
 
   /** Recall@k audit report — the artifact an ANN deployment publishes
     * next to its index: for each cutoff k ≤ `maxK`, how much of the
@@ -305,10 +273,14 @@ object Similarity {
         col("nrm").as("nrm_a")), "vec_a")
       .join(d.select(col("vec_id").as("vec_b"), col("embedding").as("e_b"),
         col("nrm").as("nrm_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        (vecDot(col("e_a"), col("e_b")) / (col("nrm_a") * col("nrm_b"))).as("cos"))
+      .select(col("vec_a"), col("vec_b"), pairCos)
       .filter(col("cos") >= threshold)
   }
+
+  /** `cos` of a verified pair row (e_a, nrm_a, e_b, nrm_b) — shared with
+    * [[SemanticDedup]]'s intra-cell and cross-batch verification. */
+  private[operators] def pairCos: Column =
+    cosine(col("e_a"), col("e_b"), col("nrm_a"), col("nrm_b")).as("cos")
 
   /** Embedding near-duplicate pairs: all (a < b) with cosine ≥ threshold.
     * Brute force at test scale; [[cosineLshPairs]] is the bucketed scale
@@ -324,9 +296,7 @@ object Similarity {
       emb.select(col("vec_id").as("vec_b"), col("embedding").as("e_b")),
       "e_b", "nrm_b")
     a.join(b, col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (vecDot(col("e_a"), col("e_b")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos"))
+      .select(col("vec_a"), col("vec_b"), pairCos)
       .filter(col("cos") >= threshold)
   }
 
@@ -440,7 +410,6 @@ object Similarity {
     */
   def pcaPower(emb: DataFrame, rounds: Int,
                scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // materialize the d²-row matrix ONCE: the corpus-sized fan-out pass
     // must not re-run per round (ReusedExchange would usually save it,
@@ -522,23 +491,11 @@ object Similarity {
     * corpus written partitionBy("cell") this is partition pruning at
     * 100 TB, the same shape [[knnIvfMultiProbe]] pins. */
   def knnAssignedCell(assigned: DataFrame, queries: DataFrame,
-                      k: Int): DataFrame = {
-    val q = broadcast(withNorm(queries
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("cell").as("q_cell")),
-        "q_emb", "q_nrm"))
-    val d = withNorm(assigned, "embedding", "nrm")
-    val scored = d.join(q, col("cell") === col("q_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
+                      k: Int): DataFrame =
+    refine(withNorm(assigned, "embedding", "nrm")
+      .join(broadcast(querySide(queries, qEmb, col("cell").as("q_cell"))),
+        col("cell") === col("q_cell"))
+      .filter(notSelf), k)
 
   /** Incremental codebook maintenance — the 100 TB reality between
     * retrains: new embedding batches fold into per-(cell, dim)
@@ -560,7 +517,6 @@ object Similarity {
   def kmeansFoldBatches(batches: Seq[DataFrame],
                         codebook: Seq[(Long, Array[Long])],
                         shift: Long = 2000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     require(batches.nonEmpty, "need at least one batch")
     var state: DataFrame = null
     for (b <- batches) {
@@ -613,7 +569,6 @@ object Similarity {
     */
   def kmeansTrainMicro(emb: DataFrame, k: Int, rounds: Int,
                        shift: Long = 2000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val pts = emb.select(col("vec_id"), microArr(shift).as("vm"))
@@ -667,22 +622,6 @@ object Similarity {
   def jlSignMatrix(seed: String, inDim: Int, outDim: Int): Array[Array[Int]] =
     Array.tabulate(outDim, inDim)((j, i) => jlSign(seed, i, j))
 
-  /** Johnson–Lindenstrauss random projection of the embedding column to
-    * `outDim` integer coordinates: proj_j = Σ_i µ(x_i)·s(i, j) with
-    * µ(x) = ⌊x·10⁴⌋ micro-points and the deterministic [[jlSign]]
-    * Rademacher matrix. Exact BIGINT arithmetic end-to-end (the sum is
-    * order-insensitive), so two runs — and the DuckDB oracle — agree
-    * bit-for-bit, unlike a float Gaussian projection.
-    *
-    * Scale shape: a pure MAP-SIDE projection (zero shuffle, zero UDF —
-    * zip_with/aggregate HOFs inside codegen). The sign matrix is computed
-    * ONCE on the driver and inlined as literals: at 100 TB the per-row
-    * cost is inDim·outDim multiply-adds, not inDim·outDim md5 calls.
-    * Rademacher JL preserves pairwise distances within (1 ± ε) for
-    * outDim = O(log n / ε²) — the cheap 8× dimension cut that turns a
-    * 64-float distance into an 8-long one before any pair-heavy stage
-    * ([[knnJlRerank]] is the consumer). A ragged embedding fails loudly
-    * (raise_error), never silently truncates. */
   /** The JL sketch as a single array Column over `embedding` — shared by
     * [[randomProject]] and [[jlDistortionReport]] so the two can never
     * disagree on a sign or a micro-point. */
@@ -707,6 +646,22 @@ object Similarity {
     array(projs: _*)
   }
 
+  /** Johnson–Lindenstrauss random projection of the embedding column to
+    * `outDim` integer coordinates: proj_j = Σ_i µ(x_i)·s(i, j) with
+    * µ(x) = ⌊x·10⁴⌋ micro-points and the deterministic [[jlSign]]
+    * Rademacher matrix. Exact BIGINT arithmetic end-to-end (the sum is
+    * order-insensitive), so two runs — and the DuckDB oracle — agree
+    * bit-for-bit, unlike a float Gaussian projection.
+    *
+    * Scale shape: a pure MAP-SIDE projection (zero shuffle, zero UDF —
+    * zip_with/aggregate HOFs inside codegen). The sign matrix is computed
+    * ONCE on the driver and inlined as literals: at 100 TB the per-row
+    * cost is inDim·outDim multiply-adds, not inDim·outDim md5 calls.
+    * Rademacher JL preserves pairwise distances within (1 ± ε) for
+    * outDim = O(log n / ε²) — the cheap 8× dimension cut that turns a
+    * 64-float distance into an 8-long one before any pair-heavy stage
+    * ([[knnJlRerank]] is the consumer). A ragged embedding fails loudly
+    * (raise_error), never silently truncates. */
   def randomProject(emb: DataFrame, inDim: Int, outDim: Int,
                     seed: String): DataFrame =
     emb.select(col("vec_id"), jlProjCol(inDim, outDim, seed).as("proj"))
@@ -752,7 +707,7 @@ object Similarity {
       unit(queries.select(col("vec_id"), col("embedding"))), inDim, outDim, seed)
       .select(col("vec_id").as("query_id"), col("proj").as("q_proj"))
     val cand = p
-      .join(broadcast(pq), col("vec_id") =!= col("query_id"))
+      .join(broadcast(pq), notSelf)
       .select(col("query_id"), col("vec_id"),
         aggregate(
           zip_with(col("proj"), col("q_proj"), (a, b) => (a - b) * (a - b)),
@@ -763,18 +718,8 @@ object Similarity {
       .select("query_id", "vec_id")
     val d = withNorm(emb.select(col("vec_id"), col("embedding")),
       "embedding", "nrm")
-    val q = broadcast(withNorm(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-      "q_emb", "q_nrm"))
-    val scored = top.join(d, "vec_id").join(q, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (vecDot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    refine(top.join(d, "vec_id").join(broadcast(querySide(queries, qEmb)),
+      "query_id"), k)
   }
 
   /** JL sketch distortion audit — the calibration report a deployment
@@ -805,7 +750,7 @@ object Similarity {
     val q = broadcast(side(queries.select(col("vec_id"), col("embedding")),
       "query_id", "mq", "pq"))
     def sq(a: org.apache.spark.sql.Column) = a * a
-    corpus.join(q, col("vec_id") =!= col("query_id"))
+    corpus.join(q, notSelf)
       .select(col("query_id"),
         aggregate(zip_with(col("mx"), col("mq"), (a, b) => sq(a - b)),
           lit(0L), (acc, t) => acc + t).as("true_d2"),

@@ -201,6 +201,15 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     else buf.toSeq
   }
 
+  /** Inline alias definitions into `e` (bottom-up maps are already
+    * fully substituted, so one pass suffices). */
+  private def substitute(e: Expression,
+                         amap: Map[ExprId, Expression]): Expression =
+    if (amap.isEmpty) e
+    else e.transformUp {
+      case a: AttributeReference if amap.contains(a.exprId) => amap(a.exprId)
+    }
+
   /** The parquet root path under Aggregate's child plus any Filter
     * conditions sitting between them, looking through column-pruning
     * Projects. Collected filters are only USABLE when every column
@@ -213,17 +222,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * reading MULTIPLE roots (spark.read.parquet(base, other)) is NOT
     * the registered base even when one root matches — routing it
     * would answer for the union out of one path's summary, so
-    * multi-root bails. */
-  /** Inline alias definitions into `e` (bottom-up maps are already
-    * fully substituted, so one pass suffices). */
-  private def substitute(e: Expression,
-                         amap: Map[ExprId, Expression]): Expression =
-    if (amap.isEmpty) e
-    else e.transformUp {
-      case a: AttributeReference if amap.contains(a.exprId) => amap(a.exprId)
-    }
-
-  /** The parquet root under `plan`, the deterministic Filter conditions
+    * multi-root bails.
+    *
+    * The parquet root under `plan`, the deterministic Filter conditions
     * on the way down (alias-substituted), the relation, and the ALIAS
     * MAP of every computed projection passed through: the analyzer
     * extracts complex groupings (`GROUP BY f(g)`) and computed columns

@@ -568,7 +568,6 @@ object TemporalOps {
         val purchases = ev.filter(col("event_type") === "purchase")
         val clicks    = ev.filter(col("event_type") === "click")
         AsOfJoin.nearest(purchases, clicks, "user_id", "ts",
-          leftId = "event_id",
           leftCols = Seq("event_id"), rightCols = Seq("event_id"),
           rightTiebreak = "event_id")
           .select(col("user_id"), col("event_id").as("purchase_id"),

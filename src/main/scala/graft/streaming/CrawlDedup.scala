@@ -102,14 +102,6 @@ object CrawlDedup {
     * labels. */
   final case class AudioStage(payloadCol: String, maxHamming: Int = 3)
 
-  /** Accumulated state strictly BEFORE `beforeBatch` for an append-only
-    * per-batch directory (`docs`/`bands`/`subwins`/`semassigned`); None
-    * when no prior batch has committed. Compaction-aware: the newest
-    * committed `compact=<c>` partition (c ≤ beforeBatch — it holds
-    * exactly the union of all batches < c) replaces every `batch=<x>`
-    * subdir with x < c, whether or not those subdirs were already
-    * deleted — a crash between the compact commit and the subdir prune
-    * leaves stale subdirs that are simply IGNORED, never double-read. */
   /** `batch=<n>`-style numeric suffix, or None for foreign/hand-made
     * subdirs (`batch=tmp`) — those are IGNORED by every fold and prune
     * instead of aborting it with a NumberFormatException (ADVICE r15). */
@@ -118,6 +110,14 @@ object CrawlDedup {
       scala.util.Try(name.stripPrefix(prefix).toLong).toOption
     else None
 
+  /** Accumulated state strictly BEFORE `beforeBatch` for an append-only
+    * per-batch directory (`docs`/`bands`/`subwins`/`semassigned`); None
+    * when no prior batch has committed. Compaction-aware: the newest
+    * committed `compact=<c>` partition (c ≤ beforeBatch — it holds
+    * exactly the union of all batches < c) replaces every `batch=<x>`
+    * subdir with x < c, whether or not those subdirs were already
+    * deleted — a crash between the compact commit and the subdir prune
+    * leaves stale subdirs that are simply IGNORED, never double-read. */
   private def priorBatches(spark: SparkSession, dir: String,
                            beforeBatch: Long): Option[DataFrame] = {
     val p = new Path(dir)

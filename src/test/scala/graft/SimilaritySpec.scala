@@ -350,6 +350,46 @@ class SimilaritySpec extends SparkSuite {
       s"recall@m=50 = ${(r50 intersect brute).size.toDouble / brute.size}")
   }
 
+  test("refine contract: an exact tie goes to the lower neighbor_id, a query never returns itself") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import graft.operators.{ProductQuantizer => Pq}
+    // query 1 is also a corpus row (cos 1 with itself, so it must be
+    // excluded); the twins 4 and 2 share one embedding — an exact tie,
+    // listed higher id first — and both beat the distractor 3
+    val corpus = Seq(
+      (1L, Array(1.0f, 0.0f)), (4L, Array(2.0f, 1.0f)),
+      (3L, Array(0.0f, 1.0f)), (2L, Array(2.0f, 1.0f))
+    ).toDF("vec_id", "embedding")
+      .withColumn("label", lit(0)).withColumn("cell", lit(0))
+    val queries = corpus.filter($"vec_id" === 1L)
+    val relabeled = corpus.withColumn("label", when($"vec_id" === 1L, 0).otherwise(1))
+    val centroids = Array(Array(1.0f, 0.0f), Array(0.0f, 1.0f))
+    val shortlist = Seq((1L, 4L), (1L, 3L), (1L, 2L), (1L, 4L))
+      .toDF("query_id", "neighbor_id")
+    val sub = Pq.subvectors(corpus, "vec_id", "embedding", 1, 2)
+    val cb = Pq.sampleCodebook(corpus, 5, 1, 2)
+    val qsub = sub.filter($"vec_id" === 1L).withColumnRenamed("vec_id", "query_id")
+    val variants = Seq(
+      "knnBrute" -> Similarity.knnBrute(corpus, queries, 1),
+      "knnIvf" -> Similarity.knnIvf(corpus, queries, 1),
+      "hardNegatives" ->
+        Similarity.hardNegatives(relabeled, relabeled.filter($"vec_id" === 1L), 1),
+      "knnAssignedCell" -> Similarity.knnAssignedCell(corpus, queries, 1),
+      "knnIvfMultiProbe" ->
+        Similarity.knnIvfMultiProbe(corpus, queries, centroids, 1, nProbe = 2),
+      "knnGraph" -> Similarity.knnGraph(corpus, centroids, 1, nProbe = 2),
+      "knnJlRerank" -> Similarity.knnJlRerank(corpus, queries, 2, 2, "graft", 4, 1),
+      "rerankExact" -> Pq.rerankExact(shortlist, corpus, queries, 1),
+      "adcTopK" -> Pq.adcTopK(Pq.encode(sub, cb), qsub, cb, 1))
+    variants.foreach { case (name, df) =>
+      val got = df.filter($"query_id" === 1L).collect()
+        .map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Number]("rank").longValue))
+      assert(got.toSeq === Seq((2L, 1L)), name)
+      val rankType = if (name == "rerankExact" || name == "adcTopK") LongType else IntegerType
+      assert(df.schema("rank").dataType === rankType, name)
+    }
+  }
+
   test("jlDistortionReport: exact pair counts, JL calibration near 1, wider sketch tightens") {
     val emb = graft.core.Tables(spark, "/root/testdata/sf0.001", "embeddings")
     val queries = emb.filter(col("vec_id") < 10)

@@ -50,7 +50,7 @@ class TemporalJoinSpec extends SparkSuite {
     assert(fwd(102L) === None)      // nothing after 12:00
     assert(fwd(103L) === Some(11L))
 
-    val near = AsOfJoin.nearest(left, right, "user_id", "ts", "event_id",
+    val near = AsOfJoin.nearest(left, right, "user_id", "ts",
       Seq("event_id"), Seq("event_id"), "event_id")
       .collect().map(r => r.getLong(2) -> Option(r.get(3))).toMap
     assert(near(101L) === Some(11L)) // exact tie (1h both ways) → PRIOR wins
