@@ -282,27 +282,7 @@ object Dedup {
                               threshold: Double, bands: Int = 16,
                               rows: Int = 4,
                               maxBandBucketSize: Long = Long.MaxValue)
-  : DataFrame =
-    minhashLshPairsFromSigsTracked(docs, sigs, n, threshold, bands, rows,
-      maxBandBucketSize)._1
-
-  /** [[minhashLshPairsFromSigs]] plus a RELEASE handle the caller runs
-    * once it has materialized the pairs. The per-call intermediates
-    * (candidate pairs, candidate shingles) are now eager
-    * materializations rather than lazy caches (r19: the cached
-    * versions were filled concurrently by racing consumer stages AND
-    * measurably re-computed per consumer — the checkpointed forms
-    * halved both LSH entries), so the handle is a no-op: checkpoint
-    * blocks are disk-backed and freed by the ContextCleaner when the
-    * fold's RDDs become unreachable, which for per-trigger callers
-    * (the streaming crawl fold, ADVICE r14) happens as each trigger's
-    * references drop. The handle stays in the signature so a future
-    * storage change lands in one place. */
-  private[graft] def minhashLshPairsFromSigsTracked(
-      docs: DataFrame, sigs: DataFrame, n: Int,
-      threshold: Double, bands: Int = 16, rows: Int = 4,
-      maxBandBucketSize: Long = Long.MaxValue)
-  : (DataFrame, () => Unit) = {
+  : DataFrame = {
     val buckets =
       pruneBandBuckets(lshBuckets(sigs, bands, rows), maxBandBucketSize)
     // materialized: consumed three times below (twice in candIds' union,
@@ -331,8 +311,8 @@ object Dedup {
     // checkpointed RDD the probe is free and the semi-join runs once
     val candDocs = Materialize(docs.join(candIds, Seq("doc_id"), "left_semi"))
     val shingles = Materialize(docShingles(candDocs, n))
-    (jaccardScores(shingles, Some(candidates), threshold),
-      () => ()) // checkpointed intermediates free with their RDDs (GC)
+    // the materialized intermediates free with their RDDs (ContextCleaner)
+    jaccardScores(shingles, Some(candidates), threshold)
   }
 
   /** Persist a base corpus's LSH band table for incremental sketch-probe
@@ -400,25 +380,7 @@ object Dedup {
                                      baseDocs: DataFrame, batch: DataFrame,
                                      n: Int, threshold: Double,
                                      maxBandBucketSize: Long = Long.MaxValue)
-  : DataFrame =
-    incrementalLshPairsFromBucketsTracked(rawBaseBuckets, baseSizes,
-      batchBuckets0, baseDocs, batch, n, threshold, maxBandBucketSize)._1
-
-  /** [[incrementalLshPairsFromBuckets]] plus a RELEASE handle for the
-    * per-fold intermediates (batch buckets, candidate set, candidate
-    * shingles) — see [[minhashLshPairsFromSigsTracked]]'s rationale:
-    * the intermediates are eager materializations since r19, so the
-    * handle is a no-op (blocks are disk-backed and ContextCleaner-freed
-    * once a trigger's RDD references drop; ADVICE r14's footprint
-    * concern is met by lifetime, not by explicit unpersist). */
-  private[graft] def incrementalLshPairsFromBucketsTracked(
-      rawBaseBuckets: DataFrame,
-      baseSizes: Option[DataFrame],
-      batchBuckets0: DataFrame,
-      baseDocs: DataFrame, batch: DataFrame,
-      n: Int, threshold: Double,
-      maxBandBucketSize: Long = Long.MaxValue)
-  : (DataFrame, () => Unit) = {
+  : DataFrame = {
     // the batch's bucket rows feed the cross join, the intra self-join
     // (twice), and the size fence — cached so the batch sketches ONCE
     // per fold instead of once per consumer (the base side is a
@@ -470,8 +432,8 @@ object Dedup {
     val candDocs = Materialize(baseDocs.unionByName(batch)
       .join(candIds, Seq("doc_id"), "left_semi"))
     val shingles = Materialize(docShingles(candDocs, n))
-    (jaccardScores(shingles, Some(candidates), threshold),
-      () => ()) // checkpointed intermediates free with their RDDs (GC)
+    // the materialized intermediates free with their RDDs (ContextCleaner)
+    jaccardScores(shingles, Some(candidates), threshold)
   }
 
   /** Incremental near-dup detection: word-`n`-gram Jaccard pairs between

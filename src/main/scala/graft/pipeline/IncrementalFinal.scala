@@ -309,36 +309,15 @@ object IncrementalFinal {
         maxColOpt.exists(prev.columns.contains)
     val next =
       if (!keepMm) folded
-      else {
-        val mmState = prev.select((keyCols.map(col) :+
+      else repairDirty(spark, basePath, keyCols, folded,
+        maintainMinMax(prev.select((keyCols.map(col) :+
           col(minColOpt.get).as("_mm_min") :+
-          col(maxColOpt.get).as("_mm_max")): _*)
-        // consumed by the dirty probe AND the fold
-        val mm = Materialize(maintainMinMax(mmState, delta, keyCols,
-            "_mm_min", "_mm_max", signCol, valueCol))
-        val dirtyKeys = mm.filter(col("dirty"))
-          .select(keyCols.map(col): _*)
-        val mmResolved =
-          // the dirty probe is |keys|-bounded and delta-gated: a pure
-          // append (or a delete missing every extreme) rescans NOTHING
-          if (dirtyKeys.limit(1).count() == 0L)
-            mm.select((keyCols.map(col) :+ col("_mm_min") :+
-              col("_mm_max")): _*)
-          else {
-            val rescan = keySemiNullSafe(
-                spark.read.parquet(basePath), dirtyKeys, keyCols)
-              .groupBy(keyCols.map(col): _*)
-              .agg(min(col(valueCol)).as("_mm_min"),
-                max(col(valueCol)).as("_mm_max"))
-            mm.filter(!col("dirty"))
-              .select((keyCols.map(col) :+ col("_mm_min") :+
-                col("_mm_max")): _*)
-              .unionByName(rescan)
-          }
-        keyMergeNullSafe(folded, mmResolved, keyCols, "left")
-          .select((folded.columns.toIndexedSeq.map(col) :+
-            col("_mm_min").as(minColOpt.get) :+
-            col("_mm_max").as(maxColOpt.get)): _*)
+          col(maxColOpt.get).as("_mm_max")): _*), delta, keyCols,
+          "_mm_min", "_mm_max", signCol, valueCol),
+        Seq("_mm_min" -> minColOpt.get, "_mm_max" -> maxColOpt.get)) {
+        _.groupBy(keyCols.map(col): _*)
+          .agg(min(col(valueCol)).as("_mm_min"),
+            max(col(valueCol)).as("_mm_max"))
       }
     // Distinct sketches stay routed through refreshes via the SAME
     // dirty-key protocol as the extremes: insert-only grains fold their
@@ -358,31 +337,19 @@ object IncrementalFinal {
       else reg.distincts.foldLeft(next) { case (acc, (bCol, skCol)) =>
         val state = prev.select(
           (keyCols.map(col) :+ col(skCol).as("__dx_sk")): _*)
-        // dirty probe AND fold both consume it
-        val m = Materialize(maintainDistinct(state, delta, keyCols,
-            sketchCol = "__dx_sk", signCol = signCol, valueCol = bCol))
-        val dirtyKeys = m.filter(col("dirty")).select(keyCols.map(col): _*)
-        val resolved =
-          if (dirtyKeys.limit(1).count() == 0L)
-            m.select((keyCols.map(col) :+ col("__dx_sk")): _*)
-          else {
-            val rescan = graft.functions.Kmv.withHash(
-                keySemiNullSafe(spark.read.parquet(basePath), dirtyKeys,
-                    keyCols)
-                  .filter(col(bCol).isNotNull), bCol, "__h")
-              .groupBy(keyCols.map(col): _*)
-              .agg(expr("array_sort(collect_set(__h))").as("__dx_sk"))
-            // a dirty grain whose remaining values are all null yields
-            // no rescan group — the left join below leaves its sketch
-            // NULL, which the routed fold reads as zero distincts
-            // (collect_list skips nulls): exactly COUNT(DISTINCT) = 0
-            m.filter(!col("dirty"))
-              .select((keyCols.map(col) :+ col("__dx_sk")): _*)
-              .unionByName(rescan)
-          }
-        keyMergeNullSafe(acc, resolved, keyCols, "left")
-          .select((acc.columns.toIndexedSeq.map(col) :+
-            col("__dx_sk").as(skCol)): _*)
+        repairDirty(spark, basePath, keyCols, acc,
+          maintainDistinct(state, delta, keyCols,
+            sketchCol = "__dx_sk", signCol = signCol, valueCol = bCol),
+          Seq("__dx_sk" -> skCol)) { rows =>
+          // a dirty grain whose remaining values are all null yields
+          // no rescan group — the left merge leaves its sketch NULL,
+          // which the routed fold reads as zero distincts
+          // (collect_list skips nulls): exactly COUNT(DISTINCT) = 0
+          graft.functions.Kmv.withHash(
+              rows.filter(col(bCol).isNotNull), bCol, "__h")
+            .groupBy(keyCols.map(col): _*)
+            .agg(expr("array_sort(collect_set(__h))").as("__dx_sk"))
+        }
       }
     next2.write.mode(SaveMode.Overwrite).parquet(nextPath)
     // re-stamp the cost-model row count alongside the token: rollup
@@ -399,6 +366,34 @@ object IncrementalFinal {
       maxs = if (keepMm) reg.maxs else Map.empty,
       distincts = if (keepDx) reg.distincts else Map.empty))
     nextPath
+  }
+
+  /** [[refreshSummary]]'s dirty-key repair, shared by its MIN/MAX and
+    * distinct-sketch state: `maintained` (keyCols, the state columns
+    * named in `renames`, and a `dirty` flag) is materialized — the
+    * dirty probe and the merge both consume it. The probe is
+    * |keys|-bounded and delta-gated: with no dirty key (a pure append,
+    * or a delete that missed every extreme) nothing is rescanned;
+    * otherwise the base is rescanned on the dirty keys only and
+    * `rescan` recomputes the state from those rows. The repaired state
+    * is left-merged into `acc`, each state column renamed per
+    * `renames`. */
+  private def repairDirty(spark: SparkSession, basePath: String,
+                          keyCols: Seq[String], acc: DataFrame,
+                          maintained: DataFrame,
+                          renames: Seq[(String, String)])
+                         (rescan: DataFrame => DataFrame): DataFrame = {
+    val m = Materialize(maintained)
+    val dirtyKeys = m.filter(col("dirty")).select(keyCols.map(col): _*)
+    val state = (keyCols ++ renames.map(_._1)).map(col)
+    val resolved =
+      if (dirtyKeys.limit(1).count() == 0L) m.select(state: _*)
+      else m.filter(!col("dirty")).select(state: _*)
+        .unionByName(rescan(keySemiNullSafe(
+          spark.read.parquet(basePath), dirtyKeys, keyCols)))
+    keyMergeNullSafe(acc, resolved, keyCols, "left")
+      .select((acc.columns.toIndexedSeq.map(col) ++
+        renames.map { case (c, to) => col(c).as(to) }): _*)
   }
 
   /** Total row count of a just-written parquet directory from file
@@ -843,15 +838,8 @@ object IncrementalFinal {
       .withColumnRenamed(signCol, "_m")
       .select(aCols.map(col) :+ col("_m"): _*))
 
-    // matched part: the inner delta rule verbatim
-    def term(l: DataFrame, r: DataFrame, s: org.apache.spark.sql.Column) =
-      l.join(r, key).withColumn("_m", s)
-        .select(outCols.map(col) :+ col("_m"): _*)
-    val dBr = dB2.withColumnRenamed(signCol, s"${signCol}_b")
-    val dInner =
-      term(dA2, bOld, col(signCol))
-        .unionByName(term(aOld, dBr, col(s"${signCol}_b")))
-        .unionByName(term(dA2, dBr, col(signCol) * col(s"${signCol}_b")))
+    // matched part: the inner delta rule over the non-null-key deltas
+    val dInner = innerJoinDelta(aOld, bOld, dA2, dB2, key, signCol, outCols)
 
     // null-extended part, over the affected (non-null) keys T only
     val touched = dA2.select(key.map(col): _*)

@@ -3,7 +3,7 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, ExprId, Expression, If, IsNull, Literal, Multiply, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, ExprId, Expression, If, IsNull, Literal, Multiply, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -149,10 +149,13 @@ object MvRegistry {
   *
   * At 100 TB this is the difference between scanning the corpus and
   * scanning |keys| rows — the rewrite every lakehouse engine ships
-  * (Materialize/Snowflake MV routing, Databricks MV). The rule is
-  * deliberately CONSERVATIVE: a non-grain or non-deterministic
-  * filter, distinct, other aggregate function, expression-valued
-  * grouping, extra column, or multi-root relation bails to the
+  * (Materialize/Snowflake MV routing, Databricks MV). There is one
+  * rewrite: the registered base is located under the Aggregate, with
+  * no join on the path (the plain aggregate) or inside an inner /
+  * base-left-outer join tree (the star dashboard shapes), and re-planted
+  * as its summary. The rule is deliberately CONSERVATIVE: a non-grain
+  * or non-deterministic filter, an aggregate function or grouping the
+  * summary cannot reproduce, or a multi-root relation bails to the
   * original plan — a wrong rewrite is a silent wrong answer, so only
   * the exactly-provable shape rewrites. Output
   * attribute ids (and types) are preserved, so parent operators never
@@ -210,28 +213,31 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       case a: AttributeReference if amap.contains(a.exprId) => amap(a.exprId)
     }
 
-  /** The parquet root path under Aggregate's child plus any Filter
-    * conditions sitting between them, looking through column-pruning
-    * Projects. Collected filters are only USABLE when every column
-    * they reference is a grain column (checked at the call site): a
-    * grain predicate is constant within each group, so applying it to
-    * the summary selects exactly the qualifying groups — the
-    * partition-filter case every MV router must serve. Non-
-    * deterministic conditions bail here (re-evaluating them over
-    * |keys| rows instead of the corpus changes semantics). A relation
-    * reading MULTIPLE roots (spark.read.parquet(base, other)) is NOT
-    * the registered base even when one root matches — routing it
-    * would answer for the union out of one path's summary, so
-    * multi-root bails.
+  /** The parquet root under `plan`, the deterministic Filter
+    * conditions on the way down (alias-substituted), the relation, and
+    * the ALIAS MAP of every computed projection passed through, looking
+    * through Projects of attributes and deterministic aliases.
+    * [[findBase]] calls it at the base leaf: for a plain aggregate
+    * that is everything below the top Projects, under a join the
+    * join's base-side input.
     *
-    * The parquet root under `plan`, the deterministic Filter conditions
-    * on the way down (alias-substituted), the relation, and the ALIAS
-    * MAP of every computed projection passed through: the analyzer
-    * extracts complex groupings (`GROUP BY f(g)`) and computed columns
-    * into `Alias(expr) AS _groupingexpression#N` Projects below the
-    * Aggregate — the map lets callers resolve those attributes back to
-    * expressions over the SCAN's columns, where the grain check is
-    * meaningful. */
+    * Collected filters are only USABLE when every column they reference
+    * is a grain column (checked in [[attempt]]): a grain predicate is
+    * constant within each group, so applying it to the summary selects
+    * exactly the qualifying groups — the partition-filter case every MV
+    * router must serve. Non-deterministic conditions bail here
+    * (re-evaluating them over |keys| rows instead of the corpus changes
+    * semantics). A relation reading MULTIPLE roots
+    * (spark.read.parquet(base, other)) is NOT the registered base even
+    * when one root matches — routing it would answer for the union out
+    * of one path's summary, so multi-root bails.
+    *
+    * The analyzer extracts complex groupings (`GROUP BY f(g)`) and
+    * computed columns into `Alias(expr) AS _groupingexpression#N`
+    * Projects below the Aggregate — the alias map lets [[rewrite]]
+    * resolve those attributes back to expressions over the SCAN's
+    * columns, where the grain check is meaningful (or, under a join,
+    * fence them). */
   private def collectBase(plan: LogicalPlan)
   : Option[(String, Seq[Expression], HadoopFsRelation,
       Map[ExprId, Expression])] = plan match {
@@ -240,17 +246,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         Some((fs.location.rootPaths.head.toString, Nil, fs, Map.empty))
       case _ => None
     }
-    case Project(projList, child)
-      if projList.forall {
-        case _: AttributeReference => true
-        case Alias(e, _) => e.deterministic
-        case _ => false
-      } =>
+    case Project(pl, child) if inlinable(pl) =>
       collectBase(child).map { case (p, fs, rel, amap) =>
-        val added = projList.collect {
-          case al @ Alias(e, _) => al.exprId -> substitute(e, amap)
-        }
-        (p, fs, rel, amap ++ added)
+        (p, fs, rel, withAliases(pl, amap))
       }
     case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, child)
       if cond.deterministic =>
@@ -285,9 +283,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Inline the Projects between Aggregate and Join into an alias map —
-    * the star path's analogue of [[collectBase]]'s Project handling:
-    * `GROUP BY f(grain)` (or any computed output) over a join tree gets
+  /** Inline the Projects on top of the Aggregate's child into an alias
+    * map, stopping at the first Filter or Join: `GROUP BY f(grain)` (or
+    * any computed output) over a join tree gets
     * its expression extracted by the analyzer into a computing Project
     * ABOVE the join (`Alias(f(g)) AS _groupingexpression#N`), which
     * would otherwise block [[findBase]] and bail the month-rollup ×
@@ -300,18 +298,28 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * Filter has been pushed below the join. */
   private def inlineTopProjects(plan: LogicalPlan)
   : (LogicalPlan, Map[ExprId, Expression]) = plan match {
-    case Project(pl, c) if pl.forall {
-        case _: AttributeReference => true
-        case Alias(e, _) => e.deterministic
-        case _ => false
-      } =>
+    case Project(pl, c) if inlinable(pl) =>
       val (inner, amap) = inlineTopProjects(c)
-      val added = pl.collect {
-        case al @ Alias(e, _) => al.exprId -> substitute(e, amap)
-      }
-      (inner, amap ++ added)
+      (inner, withAliases(pl, amap))
     case p => (p, Map.empty)
   }
+
+  /** A Project [[collectBase]] and [[inlineTopProjects]] look through:
+    * plain attributes and deterministic aliases only. */
+  private def inlinable(pl: Seq[NamedExpression]): Boolean = pl.forall {
+    case _: AttributeReference => true
+    case Alias(e, _) => e.deterministic
+    case _ => false
+  }
+
+  /** `amap` plus `pl`'s alias definitions, each substituted through
+    * `amap` so the map stays fully inlined. */
+  private def withAliases(pl: Seq[NamedExpression],
+                          amap: Map[ExprId, Expression])
+  : Map[ExprId, Expression] =
+    amap ++ pl.collect {
+      case al @ Alias(e, _) => al.exprId -> substitute(e, amap)
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val tokCache = scala.collection.mutable.HashMap.empty[String, String]
@@ -324,9 +332,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       // exactly (mapOutputs serves the matching output expressions)
       case agg @ Aggregate(groupExprs, aggExprs, child, None)
         if groupExprs.forall(_.deterministic) =>
-        rewriteDirect(agg, groupExprs, aggExprs, child, tokCache)
-          .orElse(rewriteStar(agg, groupExprs, aggExprs, child, tokCache))
-          .getOrElse(agg)
+        rewrite(groupExprs, aggExprs, child, tokCache).getOrElse(agg)
     }
   }
 
@@ -342,25 +348,6 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       Some(Alias(substitute(e, amap), n)(exprId = al.exprId))
     case a: AttributeReference => Some(a)
     case _ => None
-  }
-
-  private def rewriteDirect(agg: Aggregate, groupExprs: Seq[Expression],
-                            aggExprs: Seq[NamedExpression],
-                            child: LogicalPlan,
-                            tokCache: scala.collection.mutable.Map[String, String])
-  : Option[LogicalPlan] = {
-    val based = collectBase(child)
-    if (based.isEmpty) return None
-    val (path, filters, rel, amap) = based.get
-    val cands = MvRegistry.lookup(path)
-    if (cands.isEmpty) return None
-    note(s"candidate(direct): aggregate over registered base $path " +
-      s"(${cands.size} registered summaries)")
-    // several rollup grains may be registered for one base — every
-    // candidate is attempted and the cheapest server wins (pickBest)
-    pickBest(cands.flatMap(s =>
-      attemptDirect(agg, groupExprs, aggExprs, path, filters,
-        rel, amap, s, tokCache).map(s -> _)), "direct", path)
   }
 
   /** Cost-based choice among the summaries that PROVABLY serve the
@@ -387,65 +374,27 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     Some(plan)
   }
 
-  private def attemptDirect(agg: Aggregate, groupExprs: Seq[Expression],
-                            aggExprs: Seq[NamedExpression], path: String,
-                            filters: Seq[Expression],
-                            rel: HadoopFsRelation,
-                            amap: Map[ExprId, Expression],
-                            s: MvRegistry.Summary,
-                            tokCache: scala.collection.mutable.Map[String, String])
-  : Option[LogicalPlan] = {
-    val tag = s"direct, grain=${s.groupCols.mkString("+")}"
-    val gsub = groupExprs.map(substitute(_, amap))
-    val subs = aggExprs.map(substNamed(_, amap))
-    if (subs.exists(_.isEmpty)) {
-      note(s"bail($tag): an output expression shape is unsupported")
-      return None
-    }
-    val asub = subs.map(_.get)
-    // every grouping expression may reference GRAIN columns only —
-    // grouping by (a function of) anything else needs row-level data
-    if (!gsub.forall(_.references.forall(a =>
-        s.groupCols.contains(a.name)))) {
-      note(s"bail($tag): a grouping references a non-grain column")
-      return None
-    }
-    // every filter must touch grain columns ONLY — a predicate on
-    // any other column needs row-level data the summary lost
-    if (!filters.forall(_.references.forall(a =>
-        s.groupCols.contains(a.name)))) {
-      note(s"bail($tag): a filter references a non-grain column")
-      return None
-    }
-    val rewritten = rewriteAll(agg, gsub, asub, s, filters)
-    if (rewritten.isEmpty) {
-      note(s"bail($tag): an output is not answerable by the summary " +
-        "(unserved aggregate function or missing/mistyped summary column)")
-      return None
-    }
-    if (!isFresh(s, path, rel, tokCache)) {
-      note(s"bail($tag): base version token changed since " +
-        s"registration — summary for $path is stale, re-register after refresh")
-      return None
-    }
-    note(s"serves($tag): $path")
-    rewritten
-  }
-
-  /** The located base inside an inner-join tree: `rebuild` re-plants a
-    * replacement subplan where the base (and its pruning Projects /
-    * collected Filters) stood, re-creating every Join on the path with
-    * its condition passed through `remap` (grain attrs → summary
-    * twins); `conds` are those path conditions for validation. */
+  /** The located base: `rebuild` re-plants a replacement subplan where
+    * the base (and its pruning Projects / collected Filters) stood,
+    * re-creating every Join on the path with its condition passed
+    * through `remap` (grain attrs → summary twins); `conds` are those
+    * path conditions for validation. `joined` is false for the plain
+    * aggregate — the site [[collectBase]] reached with no join on the
+    * path (an inner join with no condition has no `conds` either, so
+    * `conds` cannot tell). */
   private final case class BaseSite(
       rebuild: (LogicalPlan, Expression => Expression) => LogicalPlan,
       path: String, filters: Seq[Expression], rel: HadoopFsRelation,
       baseOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       conds: Seq[Expression],
-      amap: Map[ExprId, Expression])
+      amap: Map[ExprId, Expression],
+      joined: Boolean) {
+    /** The trace tag: `direct` for the plain aggregate, else `star`. */
+    def kind: String = if (joined) "star" else "direct"
+  }
 
   /** True when any relation under `plan` scans a registered base path
-    * (used for the ambiguity bail — see [[rewriteStar]]). */
+    * (used for the ambiguity bail — see [[findBase]]). */
   private def containsRegisteredBase(plan: LogicalPlan): Boolean =
     plan.collectFirst {
       case lr: LogicalRelation if (lr.relation match {
@@ -455,7 +404,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       }) => ()
     }.isDefined
 
-  /** Locate a registered base under a tree of INNER / LEFT-OUTER joins,
+  /** Locate a registered base under the Aggregate: directly under its
+    * pruning Projects and grain Filters (the plain aggregate, via
+    * [[collectBase]]), or under a tree of INNER / LEFT-OUTER joins,
     * descending through pruning Projects. Inner joins are searched on
     * both sides; a LEFT-OUTER join is searched on its LEFT side only —
     * the fact-LEFT-JOIN-dim dashboard shape (the reference's own
@@ -482,32 +433,29 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       // (upper(event_type) AS event_type), which passes every
       // name/type-based downstream check while the rebuild would
       // replace the computing Project with the raw summary — silently
-      // wrong results. rewriteStar bails when anything references an
-      // alias (ADVICE r13, high).
+      // wrong results. rewrite bails when anything references an
+      // alias below a join (ADVICE r13, high), and substitutes the
+      // aliases when no join lies on the path.
       case Some((p, fs, rel, amap)) if MvRegistry.lookup(p).nonEmpty =>
-        Some(BaseSite((nb, _) => nb, p, fs, rel, plan.outputSet, Nil, amap))
+        Some(BaseSite((nb, _) => nb, p, fs, rel, plan.outputSet, Nil, amap,
+          joined = false))
       case _ => plan match {
         case j @ Join(l, r, jt, cond, _)
           if (jt == Inner || jt == LeftOuter) &&
             cond.forall(_.deterministic) =>
+          def through(c: BaseSite, plant: LogicalPlan => Join) =
+            Some(c.copy(
+              rebuild = (nb, remap) => plant(c.rebuild(nb, remap)).copy(
+                condition = cond.map(_.transform {
+                  case e: AttributeReference => remap(e)
+                })),
+              conds = c.conds ++ cond, joined = true))
           (findBase(l),
             if (jt == Inner) findBase(r) else None) match {
             case (Some(_), _) if containsRegisteredBase(r) => None
             case (None, Some(_)) if containsRegisteredBase(l) => None
-            case (Some(c), _) => Some(c.copy(
-              rebuild = (nb, remap) => j.copy(
-                left = c.rebuild(nb, remap),
-                condition = cond.map(_.transform {
-                  case e: AttributeReference => remap(e)
-                })),
-              conds = c.conds ++ cond))
-            case (None, Some(c)) => Some(c.copy(
-              rebuild = (nb, remap) => j.copy(
-                right = c.rebuild(nb, remap),
-                condition = cond.map(_.transform {
-                  case e: AttributeReference => remap(e)
-                })),
-              conds = c.conds ++ cond))
+            case (Some(c), _) => through(c, sub => j.copy(left = sub))
+            case (None, Some(c)) => through(c, sub => j.copy(right = sub))
             case _ => None
           }
         case Project(pl, ch)
@@ -521,97 +469,114 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** Star/snowflake routing — the dashboard shapes beyond the plain
-    * aggregate: an Aggregate over an INNER-join tree containing the
-    * registered base routes the base leaf to the summary and keeps
-    * every dim join:
+  /** The one rewrite. [[findBase]] locates the registered base under
+    * the Aggregate; the base leaf is re-planted as its summary and every
+    * join on the path is kept. The plain aggregate is the site with no
+    * join (`direct` in the trace); an Aggregate over an INNER-join tree
+    * containing the base is the star/snowflake dashboard shape (`star`):
     *
     *   SELECT g, d.label, SUM(x)
     *   FROM base JOIN d ON base.g = d.k JOIN d2 ON d.r = d2.r
     *   GROUP BY g, d.label
     *   →  same with `base` replaced by its summary
     *
-    * Correctness rests on one invariant: every join condition's
-    * BASE-side references must be GRAIN columns. Then each base row's
-    * join multiplicity m is a function of its grain values alone, so m
-    * is constant within every summary group and every served function
-    * is multiplicity-linear (Σx·m, cnt·m, nn·m fold identically) or
-    * multiplicity-invariant (MIN/MAX, COUNT DISTINCT over expressions
-    * of grain and dim columns). This holds for ANY deterministic condition — equi, range,
-    * or compound — and any dim fan-out (spec-proven with a
-    * duplicate-key dim and a non-equi range condition); keys with
-    * m = 0 drop from both plans alike.
+    * Correctness under joins rests on one invariant: every join
+    * condition's BASE-side references must be GRAIN columns. Then each
+    * base row's join multiplicity m is a function of its grain values
+    * alone, so m is constant within every summary group and every
+    * served function is multiplicity-linear (Σx·m, cnt·m, nn·m fold
+    * identically) or multiplicity-invariant (MIN/MAX, COUNT DISTINCT
+    * over expressions of grain and dim columns). This holds for ANY
+    * deterministic condition — equi, range, or compound — and any dim
+    * fan-out (spec-proven with a duplicate-key dim and a non-equi range
+    * condition); keys with m = 0 drop from both plans alike.
     *
     * The same invariant extends to LEFT-OUTER joins with the base on
     * the LEFT (see [[findBase]]): m'(g) = max over the null extension
     * is still grain-constant, and unmatched grains null-extend the dim
     * columns identically in both plans.
     *
-    * Conservative bails, same discipline as the direct path: any
-    * non-INNER/non-base-left-LEFT join on the path, a condition
-    * referencing a base
-    * NON-grain column, aggregate functions over base non-grain value
-    * columns without a registered summary column, groupings that are
-    * neither grain columns nor dim attributes, non-grain base-side
-    * filters, or a second registered base in the tree (self-join
-    * ambiguity). Dim subtrees pass through UNTOUCHED; aggregates over
-    * DIM (or mixed grain × dim) expressions route via the
-    * multiplicity-linear cnt fold or the multiplicity-invariant
-    * rewrites — the attribute fence (`isBase`) keeps a dim column that
-    * shares a served base column's NAME from ever hijacking its
-    * mapping (it keeps its own attribute; spec asserts the sharpest
-    * collision). */
-  private def rewriteStar(agg: Aggregate, groupExprs0: Seq[Expression],
-                          aggExprs0: Seq[NamedExpression],
-                          child: LogicalPlan,
-                          tokCache: scala.collection.mutable.Map[String, String])
+    * Conservative bails: any non-INNER/non-base-left-LEFT join on the
+    * path, a condition referencing a base NON-grain column, aggregate
+    * functions over base non-grain value columns without a registered
+    * summary column, groupings that are neither grain columns nor dim
+    * attributes, non-grain base-side filters, or a second registered
+    * base in the tree (self-join ambiguity). Dim subtrees pass through
+    * UNTOUCHED; aggregates over DIM (or mixed grain × dim) expressions
+    * route via the multiplicity-linear cnt fold or the
+    * multiplicity-invariant rewrites — the attribute fence (`isBase`)
+    * keeps a dim column that shares a served base column's NAME from
+    * ever hijacking its mapping (it keeps its own attribute; spec
+    * asserts the sharpest collision). With no join there are no dim
+    * columns: every attribute is a base attribute. */
+  private def rewrite(groupExprs0: Seq[Expression],
+                      aggExprs0: Seq[NamedExpression],
+                      child: LogicalPlan,
+                      tokCache: scala.collection.mutable.Map[String, String])
   : Option[LogicalPlan] = {
     // computed groupings/outputs live in analyzer-made Projects above
     // the join — inline their definitions so the grain/dim checks see
     // the real expressions (GROUP BY f(grain) over a star routes)
     val (stripped, topMap) = inlineTopProjects(child)
-    val groupExprs = groupExprs0.map(substitute(_, topMap))
-    val subs = aggExprs0.map(substNamed(_, topMap))
-    if (subs.exists(_.isEmpty)) return None
-    val aggExprs = subs.map(_.get)
-    findBase(stripped).flatMap { site =>
-      val cands = MvRegistry.lookup(site.path)
-      if (cands.isEmpty) return None
-      note(s"candidate(star): join tree over registered base " +
-        s"${site.path} (${cands.size} registered summaries)")
-      // a computed projection alias below the join (carried in
-      // site.amap) referenced by ANY path condition, grouping, or
-      // output would be silently replaced by the raw summary column
-      // on rebuild — a shadowing alias passes the name/type checks
-      // downstream, so the reference itself must bail (ADVICE r13,
-      // high). Checked AFTER the top-project inlining, so references
-      // that arrived through an above-join alias are fenced too.
-      // Summary-independent: checked once per site.
-      if (site.amap.nonEmpty) {
-        val refIds = (groupExprs ++ site.conds ++ aggExprs)
-          .flatMap(_.references.toSeq).map(_.exprId).toSet
-        if (refIds.exists(site.amap.contains)) {
-          note("bail(star): a join condition, grouping, or output " +
-            "references a computed projection below the join")
-          return None
-        }
-      }
-      pickBest(cands.flatMap(s =>
-        attemptStar(agg, groupExprs, aggExprs, site, s, tokCache)
-          .map(s -> _)), "star", site.path)
+    val site = findBase(stripped) match {
+      case Some(site) => site
+      case None => return None
     }
+    val cands = MvRegistry.lookup(site.path)
+    if (cands.isEmpty) return None
+    val kind = site.kind
+    note(s"candidate($kind): " +
+      (if (site.joined) "join tree" else "aggregate") +
+      s" over registered base ${site.path} (${cands.size} registered summaries)")
+    // with no join, the aliases below the Aggregate are substituted down
+    // to the scan's columns (a shadowing upper(g) AS g re-groups the
+    // summary by upper(g)); under a join they are fenced below instead
+    val amap =
+      if (site.joined) topMap
+      else site.amap ++ topMap.map { case (id, e) => id -> substitute(e, site.amap) }
+    val groupExprs = groupExprs0.map(substitute(_, amap))
+    val subs = aggExprs0.map(substNamed(_, amap))
+    if (subs.exists(_.isEmpty)) {
+      note(s"bail($kind): an output expression shape is unsupported")
+      return None
+    }
+    val aggExprs = subs.map(_.get)
+    // a computed projection alias below the join (carried in site.amap)
+    // referenced by ANY path condition, grouping, or output would be
+    // silently replaced by the raw summary column on rebuild — a
+    // shadowing alias passes the name/type checks downstream, so the
+    // reference itself must bail (ADVICE r13, high). Checked AFTER the
+    // top-project inlining, so references that arrived through an
+    // above-join alias are fenced too. Summary-independent: checked
+    // once per site.
+    if (site.joined && site.amap.nonEmpty) {
+      val refIds = (groupExprs ++ site.conds ++ aggExprs)
+        .flatMap(_.references.toSeq).map(_.exprId).toSet
+      if (refIds.exists(site.amap.contains)) {
+        note("bail(star): a join condition, grouping, or output " +
+          "references a computed projection below the join")
+        return None
+      }
+    }
+    pickBest(cands.flatMap(s =>
+      attempt(groupExprs, aggExprs, site, s, tokCache).map(s -> _)),
+      kind, site.path)
   }
 
-  private def attemptStar(agg: Aggregate, groupExprs: Seq[Expression],
-                          aggExprs: Seq[NamedExpression], site: BaseSite,
-                          s: MvRegistry.Summary,
-                          tokCache: scala.collection.mutable.Map[String, String])
+  private def attempt(groupExprs: Seq[Expression],
+                      aggExprs: Seq[NamedExpression], site: BaseSite,
+                      s: MvRegistry.Summary,
+                      tokCache: scala.collection.mutable.Map[String, String])
   : Option[LogicalPlan] = {
-    val tag = s"star, grain=${s.groupCols.mkString("+")}"
-    val baseOut = site.baseOut
+    val tag = s"${site.kind}, grain=${s.groupCols.mkString("+")}"
+    // under a join, the base side is the base site's output; with no
+    // join every attribute is a base attribute — the site's output can
+    // miss a relation column a pruning Project dropped, which a
+    // substituted alias still reaches and must be grain-checked
+    val isBase: Attribute => Boolean =
+      if (site.joined) site.baseOut.contains else _ => true
     def baseRefsAreGrain(e: Expression): Boolean =
-      e.references.forall(a =>
-        !baseOut.contains(a) || s.groupCols.contains(a.name))
+      e.references.forall(a => !isBase(a) || s.groupCols.contains(a.name))
     // every path condition and every grouping expression: base-side
     // references must be grain columns (dim references pass)
     if (!site.conds.forall(baseRefsAreGrain)) {
@@ -634,7 +599,8 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       }
     // every base attr referenced ANYWHERE outside the aggregate
     // functions (groupings, path conditions, named grouping
-    // outputs) needs a same-typed summary twin
+    // outputs) needs a same-typed summary twin; exprId-keyed so a
+    // same-named computed column can't collide
     val needed = (groupExprs.flatMap(_.references.toSeq) ++
       site.conds.flatMap(_.references.toSeq) ++
       aggExprs.flatMap {
@@ -644,7 +610,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         case a: AttributeReference => Seq(a)
         case _ => Nil
       }).collect {
-        case a: AttributeReference if baseOut.contains(a) => a
+        case a: AttributeReference if isBase(a) => a
       }.groupBy(_.exprId).map(_._2.head).toSeq
     val twins: Map[ExprId, AttributeReference] = needed.flatMap(a =>
       mvAttr(a.name).collect {
@@ -654,9 +620,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       note(s"bail($tag): a referenced base column has no same-typed summary twin")
       return None
     }
-    val outOpt = mapOutputs(aggExprs, mvAttr, twins, s,
-      isBase = baseOut.contains,
-      passThrough = a => !baseOut.contains(a))
+    val outOpt = mapOutputs(aggExprs, mvAttr, twins, s, isBase)
     if (outOpt.isEmpty) {
       note(s"bail($tag): an output is not answerable by the summary " +
         "(unserved aggregate function or missing/mistyped summary column)")
@@ -672,7 +636,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         s"— summary for ${site.path} is stale, re-register after refresh")
       return None
     }
-    note(s"serves($tag): ${site.path} (summary ⋈ dims)")
+    note(s"serves($tag): ${site.path}")
     val mvFiltered = fcOpt.get.foldRight(mvPlan) { (f, acc) =>
       org.apache.spark.sql.catalyst.plans.logical.Filter(f, acc)
     }
@@ -687,61 +651,19 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       site.rebuild(mvFiltered, remap)))
   }
 
-  private def rewriteAll(agg: Aggregate, groupExprs: Seq[Expression],
-                         aggExprs: Seq[NamedExpression],
-                         s: MvRegistry.Summary,
-                         filters: Seq[Expression]): Option[LogicalPlan] = {
-    val mvPlan = s.mv().queryExecution.analyzed
-    def mvAttr(name: String): Option[AttributeReference] =
-      mvPlan.output.collectFirst {
-        case a: AttributeReference if a.name == name => a
-      }
-    // every grain attr referenced by groupings (or the non-aggregate
-    // output expressions built from them) needs a same-typed summary
-    // twin; exprId-keyed so a same-named computed column can't collide
-    val refAttrs: Seq[AttributeReference] =
-      (groupExprs.flatMap(_.references.toSeq) ++ aggExprs.flatMap {
-        case Alias(e, _)
-          if !e.exists(_.isInstanceOf[AggregateExpression]) =>
-          e.references.toSeq
-        case a: AttributeReference => Seq(a)
-        case _ => Nil
-      }).collect { case a: AttributeReference => a }
-        .groupBy(_.exprId).map(_._2.head).toSeq
-    val twins: Map[ExprId, AttributeReference] = refAttrs.flatMap(a =>
-      mvAttr(a.name).collect {
-        case m if m.dataType == a.dataType => a.exprId -> m
-      }).toMap
-    if (twins.size != refAttrs.size) return None
-    val remap: Expression => Expression = e => e.transform {
-      case a: AttributeReference => twins.getOrElse(a.exprId, a)
-    }
-    for {
-      out <- mapOutputs(aggExprs, mvAttr, twins, s,
-        isBase = _ => true, passThrough = _ => false)
-      fc <- remapFilters(filters, mvAttr)
-    } yield {
-      val child = fc.foldRight(mvPlan) { (f, acc) =>
-        org.apache.spark.sql.catalyst.plans.logical.Filter(f, acc)
-      }
-      Aggregate(groupExprs.map(remap), out, child)
-    }
-  }
-
-  /** The shared output-expression mapping of both rewrite shapes. Each
-    * aggExpr must be provably answerable or the whole rewrite bails:
-    * grouping attrs re-point at their summary twin (original exprId
-    * kept so parents still resolve), `passThrough` attrs (the star
-    * path's dim columns) stay untouched, and the served aggregate
-    * functions fold the summary columns. `isBase` fences the function
-    * arguments: in the star shape a DIM column that happens to share a
-    * served base column's NAME must not hijack its mapping. */
+  /** The rewrite's output-expression mapping. Each aggExpr must be
+    * provably answerable or the whole rewrite bails: grouping attrs
+    * re-point at their summary twin (original exprId kept so parents
+    * still resolve), non-base attrs (a join's dim columns) stay
+    * untouched, and the served aggregate functions fold the summary
+    * columns. `isBase` fences the function arguments: under a join a
+    * DIM column that happens to share a served base column's NAME must
+    * not hijack its mapping. */
   private def mapOutputs(aggExprs: Seq[NamedExpression],
                          mvAttr: String => Option[AttributeReference],
                          mvGroups: Map[ExprId, AttributeReference],
                          s: MvRegistry.Summary,
-                         isBase: AttributeReference => Boolean,
-                         passThrough: AttributeReference => Boolean)
+                         isBase: Attribute => Boolean)
   : Option[Seq[NamedExpression]] = {
     val mvCnt = mvAttr(s.cntCol)
     if (mvCnt.isEmpty) return None
@@ -770,7 +692,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         case a: AttributeReference =>
           (isBase(a) && s.groupCols.contains(a.name) &&
             mvAttr(a.name).exists(_.dataType == a.dataType)) ||
-            passThrough(a)
+            !isBase(a)
         case _ => false
       }
     def remapGrain(e: Expression): Expression = e.transform {
@@ -783,7 +705,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         Some(Alias(mvGroups(a.exprId), a.name)(exprId = a.exprId))
       // a dim-side grouping column (star shape): the dim subtree is
       // unchanged, so the attribute resolves as-is
-      case a: AttributeReference if passThrough(a) => Some(a)
+      case a: AttributeReference if !isBase(a) => Some(a)
       case al @ Alias(ae: AggregateExpression, name) =>
         // FILTER (WHERE …) clauses are served when every base-side
         // reference is a GRAIN column (remapped to its summary twin);
@@ -991,7 +913,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
           e.deterministic &&
           e.references.forall {
             case a: AttributeReference =>
-              (isBase(a) && mvGroups.contains(a.exprId)) || passThrough(a)
+              !isBase(a) || mvGroups.contains(a.exprId)
             case _ => false
           } =>
         Some(Alias(

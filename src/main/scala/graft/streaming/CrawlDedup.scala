@@ -251,54 +251,38 @@ object CrawlDedup {
     // and the first-batch intra pairing
     val sigs = Materialize(Dedup.minhashSignatureArray(batch, n, bands * rows))
     val batchBands = Dedup.lshBuckets(sigs, bands, rows)
-    val (pairs, releasePairs) = priorDocs match {
+    val pairs = priorDocs match {
       case None =>
         // first batch: intra-batch LSH pairs only
-        Dedup.minhashLshPairsFromSigsTracked(batch, sigs, n, threshold,
+        Dedup.minhashLshPairsFromSigs(batch, sigs, n, threshold,
           bands, rows, maxBandBucketSize)
       case Some(pd) =>
-        Dedup.incrementalLshPairsFromBucketsTracked(
+        Dedup.incrementalLshPairsFromBuckets(
           priorBatches(spark, s"$stateDir/bands", batchId).get, None,
           batchBands, pd, batch, n, threshold, maxBandBucketSize)
     }
-    // releasePairs() runs in a FINALLY (ADVICE r15): a throw anywhere
-    // between the probe and the versioned label commit must still drop
-    // this trigger's cache pins — re-delivery caches fresh plan
-    // objects, so a leak here compounds once per failed delivery.
-    try {
-      val prevLabels =
-        StreamingIvm.readState(spark, s"$stateDir/labels", Some(batchId))
-      val labels = prevLabels match {
-        case None =>
-          Dedup.connectedComponents(batch.select("doc_id"), "doc_id",
-            pairs)
-        case Some(pl) =>
-          Dedup.incrementalConnectedComponents(pl, batch.select("doc_id"),
-            "doc_id", pairs)
-      }
-      // COMMIT ORDER (ADVICE r14): the append-only DATA partitions land
-      // FIRST, the versioned label state LAST — the versioned write is
-      // the batch's commit mark. A crash in between leaves readers on the
-      // previous label version with at worst an extra (ignored-until-
-      // labeled) doc partition — conservative; the reverse order let
-      // survivorDocs drop survivor ids whose doc partition never landed.
-      batch.write.mode(SaveMode.Overwrite)
-        .parquet(s"$stateDir/docs/batch=$batchId")
-      batchBands.write.mode(SaveMode.Overwrite)
-        .parquet(s"$stateDir/bands/batch=$batchId")
-      writeVersioned(spark, s"$stateDir/labels", labels, batchId,
-        keepVersions)
-    } finally {
-      // the fold is on disk (or failed) — run the pair generator's
-      // release handle. Since r19 the per-batch intermediates are
-      // eager materializations (disk-backed, ContextCleaner-freed once
-      // this trigger's RDD references drop), so the handle is a no-op;
-      // it stays in the protocol so a future storage change lands in
-      // one place, and the targeted-release discipline (never
-      // spark.catalog.clearCache() on a shared session, ADVICE r14)
-      // remains documented here.
-      releasePairs()
+    val prevLabels =
+      StreamingIvm.readState(spark, s"$stateDir/labels", Some(batchId))
+    val labels = prevLabels match {
+      case None =>
+        Dedup.connectedComponents(batch.select("doc_id"), "doc_id",
+          pairs)
+      case Some(pl) =>
+        Dedup.incrementalConnectedComponents(pl, batch.select("doc_id"),
+          "doc_id", pairs)
     }
+    // COMMIT ORDER (ADVICE r14): the append-only DATA partitions land
+    // FIRST, the versioned label state LAST — the versioned write is
+    // the batch's commit mark. A crash in between leaves readers on the
+    // previous label version with at worst an extra (ignored-until-
+    // labeled) doc partition — conservative; the reverse order let
+    // survivorDocs drop survivor ids whose doc partition never landed.
+    batch.write.mode(SaveMode.Overwrite)
+      .parquet(s"$stateDir/docs/batch=$batchId")
+    batchBands.write.mode(SaveMode.Overwrite)
+      .parquet(s"$stateDir/bands/batch=$batchId")
+    writeVersioned(spark, s"$stateDir/labels", labels, batchId,
+      keepVersions)
 
     // ---- optional ExactSubstr stage: fold the batch's window
     // fingerprints into the merged per-fp stats (counts add, survivor =

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
-import graft.plans.MvRegistry
+import graft.plans.{MvRegistry, SummaryRewrite}
 
 /** Transparent summary routing (plans/SummaryRewrite): an Aggregate
   * over a registered base parquet table re-plans onto the maintained
@@ -15,7 +17,10 @@ class SummaryRewriteSpec extends SparkSuite {
 
   /** Root paths scanned by a plan's relations. */
   private def scannedPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
+    relationPaths(df.queryExecution.optimizedPlan)
+
+  private def relationPaths(plan: LogicalPlan): Seq[String] =
+    plan.collect {
       case lr: LogicalRelation => lr.relation match {
         case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
           fs.location.rootPaths.map(_.toString)
@@ -409,7 +414,7 @@ class SummaryRewriteSpec extends SparkSuite {
     val b = spark.read.parquet(base); val d = spark.read.parquet(dim)
     // grouped by a COMPUTED dim expression (coalesce of the
     // null-extended attribute): the analyzer extracts it into a
-    // Project above the join, which rewriteStar inlines — the
+    // Project above the join, which the rewrite inlines — the
     // unmatched grains land in the -1 group identically on base and
     // summary plans
     def q() = b.join(d, b("event_type") === d("k"), "left")
@@ -458,7 +463,7 @@ class SummaryRewriteSpec extends SparkSuite {
 
   test("GROUP BY f(grain) over a STAR JOIN routes — the rollup × dim dashboard shape; the shadowing fence holds through the inlined project") {
     // the analyzer extracts computed groupings into a Project ABOVE the
-    // join; rewriteStar inlines it (inlineTopProjects) so the rollup ×
+    // join; the rewrite inlines it (inlineTopProjects) so the rollup ×
     // dim shape routes instead of bailing on a blocked findBase
     val (base, mv) = fixture()
     val dim = tmpDir("mv-starroll-dim")
@@ -842,9 +847,23 @@ class SummaryRewriteSpec extends SparkSuite {
       assert(!paths.exists(_.contains(mv)),
         s"raw summary silently replaced the computed projection: $paths")
       assert(routed.collect() === expect)
-      // same shadowing in a GROUPING with no join at all: the direct
-      // path substitutes the alias and correctly re-groups the summary
-      // by upper(grain) — answers must agree either way
+      // an inner join with NO condition has no path conditions either,
+      // yet the alias still sits below a join: the fence must hold
+      val cross = () => spark.read.parquet(base)
+        .select(upper(col("event_type")).as("event_type"), col("v_micro"))
+        .join(spark.read.parquet(dim).filter(col("attr") < 2))
+        .groupBy("event_type").agg(count(lit(1)).as("n"))
+        .orderBy("event_type")
+      val crossRouted = cross()
+      assert(scannedPaths(crossRouted).exists(_.contains(base)))
+      assert(!scannedPaths(crossRouted).exists(_.contains(mv)))
+      MvRegistry.clear()
+      val crossExpect = cross().collect()
+      assert(crossExpect.nonEmpty)
+      register(base, mv)
+      assert(crossRouted.collect() === crossExpect)
+      // same shadowing with no join at all: the alias is substituted
+      // and the summary re-grouped by upper(grain) — served, and exact
       val g = () => spark.read.parquet(base)
         .select(upper(col("event_type")).as("event_type"), col("v_micro"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -852,7 +871,43 @@ class SummaryRewriteSpec extends SparkSuite {
       MvRegistry.clear()
       val gExpect = g().collect()
       register(base, mv)
-      assert(g().collect() === gExpect)
+      val gRouted = g()
+      assert(scannedPaths(gRouted).exists(_.contains(mv)))
+      assert(!scannedPaths(gRouted).exists(_.contains(base)))
+      assert(gRouted.collect() === gExpect)
+      // an alias BELOW a grain Filter (Aggregate ← Filter ← aliasing
+      // Project ← base). The optimizer pushes such a Filter under the
+      // Project, so the rule is applied to the analyzed plan itself: a
+      // grain filter and grouping reached through the alias route; a
+      // non-grain column reached through an alias (the filter's output
+      // no longer carries the scan column) bails
+      val shapes = Seq(
+        spark.read.parquet(base)
+          .select(upper(col("event_type")).as("et"), col("v_micro"))
+          .filter(col("et") =!= "T0")
+          .groupBy("et").agg(count(lit(1)).as("n"), sum("v_micro").as("s"))
+          .orderBy("et") -> true,
+        spark.read.parquet(base)
+          .select((col("junk") + 1).as("j"), col("event_type"))
+          .filter(col("event_type") =!= "t0")
+          .groupBy("j").agg(count(lit(1)).as("n"))
+          .orderBy("j") -> false)
+      shapes.foreach { case (df, serves) =>
+        val analyzed = df.queryExecution.analyzed
+        assert(analyzed.collectFirst {
+          case Aggregate(_, _, Filter(_, Project(pl, _)), _)
+            if pl.exists(_.isInstanceOf[Alias]) => ()
+        }.isDefined, analyzed)
+        val qe = spark.sessionState.executePlan(SummaryRewrite(analyzed))
+        val paths = relationPaths(qe.optimizedPlan)
+        assert(paths.exists(_.contains(mv)) === serves, paths)
+        assert(paths.exists(_.contains(base)) === !serves, paths)
+        MvRegistry.clear()
+        val expect = df.collect()
+        assert(expect.nonEmpty)
+        register(base, mv)
+        assert(qe.executedPlan.executeCollectPublic() === expect)
+      }
     } finally MvRegistry.clear()
   }
 
