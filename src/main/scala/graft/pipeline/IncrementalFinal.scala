@@ -19,6 +19,16 @@ import graft.core.Materialize
   */
 object IncrementalFinal {
 
+  /** The changelog's sign (+1 insert / −1 retraction of a row the state
+    * HAS counted) and value columns, and the summary state's count,
+    * non-null count and sum: one set of names for every fold here and
+    * for the streaming state ([[graft.streaming.StreamingIvm]]). */
+  private[graft] val SignCol = "sign"
+  private[graft] val ValueCol = "v_micro"
+  private[graft] val CntCol = "cnt"
+  private[graft] val NnCol = "n_nonnull"
+  private[graft] val SumCol = "sum_micro"
+
   /** Per-(employee, activity-date) aggregate of one incoming batch. */
   def aggregateBatch(activities: DataFrame): DataFrame =
     activities
@@ -169,36 +179,32 @@ object IncrementalFinal {
     * cost is |delta| + one join on the touched keys, vs a full
     * base rescan per refresh.
     *
-    * `delta` rows carry `signCol` (+1 insert / −1 retraction of a row
-    * the base HAS counted) and `valueCol`; both sums are exact integers
-    * (micro-points upstream), so increments commute with recomputation
-    * bit-for-bit — the gate (`cdc_ivm_agg`) proves maintain(base, Δ) ≡
+    * `delta` rows carry [[SignCol]] and [[ValueCol]]; both sums are
+    * exact integers (micro-points upstream), so increments commute with
+    * recomputation bit-for-bit — the gate (`cdc_ivm_agg`) proves
+    * maintain(base, Δ) ≡
     * group-by over the post-change row set. Keys whose count reaches 0
-    * leave the state. The state carries a NON-NULL count (`nnCol`)
+    * leave the state. The state carries a NON-NULL count ([[NnCol]])
     * alongside the row count: SUM over a group whose non-null mass was
     * entirely retracted must be NULL on recompute, and count+sum alone
     * cannot distinguish that from an exact-zero sum — the classic IVM
     * subtlety that silently corrupts null semantics when skipped. */
   def maintainAggregate(baseAgg: DataFrame, delta: DataFrame,
-                        keyCols: Seq[String],
-                        cntCol: String = "cnt", sumCol: String = "sum_micro",
-                        nnCol: String = "n_nonnull",
-                        signCol: String = "sign",
-                        valueCol: String = "v_micro"): DataFrame = {
+                        keyCols: Seq[String]): DataFrame = {
     val deltaAgg = delta.groupBy(keyCols.map(col): _*)
-      .agg(sum(col(signCol)).as("d_cnt"),
-        sum(when(col(valueCol).isNotNull, col(signCol))).as("d_nn"),
-        sum(col(signCol) * col(valueCol)).as("d_sum"))
+      .agg(sum(col(SignCol)).as("d_cnt"),
+        sum(when(col(ValueCol).isNotNull, col(SignCol))).as("d_nn"),
+        sum(col(SignCol) * col(ValueCol)).as("d_sum"))
     keyMergeNullSafe(baseAgg, deltaAgg, keyCols, "full_outer")
       .select(keyCols.map(col) ++ Seq(
-        (coalesce(col(cntCol), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
-          .as(cntCol),
-        (coalesce(col(nnCol), lit(0L)) + coalesce(col("d_nn"), lit(0L)))
-          .as(nnCol),
-        (coalesce(col(sumCol), lit(0L)) + coalesce(col("d_sum"), lit(0L)))
+        (coalesce(col(CntCol), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
+          .as(CntCol),
+        (coalesce(col(NnCol), lit(0L)) + coalesce(col("d_nn"), lit(0L)))
+          .as(NnCol),
+        (coalesce(col(SumCol), lit(0L)) + coalesce(col("d_sum"), lit(0L)))
           .as("sum0")): _*)
-      .filter(col(cntCol) > 0)
-      .withColumn(sumCol, when(col(nnCol) > 0, col("sum0")))
+      .filter(col(CntCol) > 0)
+      .withColumn(SumCol, when(col(NnCol) > 0, col("sum0")))
       .drop("sum0")
   }
 
@@ -207,8 +213,8 @@ object IncrementalFinal {
     * base write lands after registration, every candidate rewrite
     * bails to the corpus scan until the summary is repaired, and this
     * is the repair. Folds `delta` (the signed changelog of that base
-    * write) into the registered summary via [[maintainAggregate]] —
-    * never rescanning the base — persists the result as a NEW summary
+    * write) into the registered summary via [[foldSummary]] — never
+    * rescanning the base — persists the result as a NEW summary
     * version, and re-registers with the CURRENT base token so routing
     * resumes. (Reference analog: the daily `join_tables` rerun,
     * `airflow/dags/rewrite_delta_dag.py:27-53`, which re-derives its
@@ -235,18 +241,18 @@ object IncrementalFinal {
     * delta again would double-count it.
     *
     * Returns the refreshed summary path. Requires a summary registered
-    * for `basePath` whose maintained columns match `maintainAggregate`'s
-    * contract (cntCol/sumCol/nnCol names as registered) and whose delta
-    * retractions target base-counted rows only (the changelog contract).
+    * for `basePath` whose maintained columns are [[CntCol]], [[NnCol]]
+    * and [[SumCol]] and whose delta retractions target base-counted
+    * rows only (the changelog contract).
     * Registered MIN/MAX columns STAY ROUTED through retractions:
     * insert-only (and non-extreme-deleting) deltas fold exactly via
     * [[maintainMinMax]]'s least/greatest arm, and deltas that retract a
     * current extreme mark exactly those grains DIRTY — a targeted base
     * rescan of the dirty keys alone (semi-join pruned; the base must
-    * carry `keyCols` + `valueCol`) recomputes their extremes. Cost is
+    * carry `keyCols` + [[ValueCol]]) recomputes their extremes. Cost is
     * Δ-proportional plus the dirty-key rescan; a pure append never
     * touches the base. The min/max registrations are dropped only when
-    * the summary does not carry both extreme columns for `valueCol`
+    * the summary does not carry both extreme columns for [[ValueCol]]
     * (extremes of OTHER columns would need their deltas too) — then
     * MIN/MAX queries bail to the base scan rather than ever serving a
     * wrong extreme. Registered DISTINCT-sketch columns follow the same
@@ -256,11 +262,7 @@ object IncrementalFinal {
     * the summary or the delta lacks a sketched column. */
   def refreshSummary(spark: SparkSession, basePath: String,
                      summaryPath: String, delta: DataFrame,
-                     keyCols: Seq[String],
-                     cntCol: String = "cnt", sumCol: String = "sum_micro",
-                     nnCol: String = "n_nonnull",
-                     signCol: String = "sign",
-                     valueCol: String = "v_micro"): String = {
+                     keyCols: Seq[String]): String = {
     // several rollup grains may be registered per base — refresh the one
     // whose grain matches this fold's keys (register replaces same-grain)
     val reg = graft.plans.MvRegistry.lookup(basePath)
@@ -287,71 +289,38 @@ object IncrementalFinal {
     // after the first refresh with no way to recover the column. Fail
     // loudly instead; multi-column summaries refresh by rebuild (or
     // one refresh per column over a delta carrying that column).
-    require(reg.sums.values.toSet.subsetOf(Set(sumCol)) &&
-      reg.nns.values.toSet.subsetOf(Set(nnCol)),
+    require(reg.sums.values.toSet.subsetOf(Set(SumCol)) &&
+      reg.nns.values.toSet.subsetOf(Set(NnCol)),
       s"refreshSummary: registration for $basePath carries sum/nn " +
         s"columns ${reg.sums.values ++ reg.nns.values} beyond this " +
-        s"refresh's ($sumCol, $nnCol) — the fold would drop them from " +
+        s"refresh's ($SumCol, $NnCol) — the fold would drop them from " +
         "the persisted summary while the registration still advertises " +
         "them; rebuild the summary or refresh per column")
-    val folded = maintainAggregate(prev, delta, keyCols,
-      cntCol, sumCol, nnCol, signCol, valueCol)
-    // Extremes stay maintained through retractions via the dirty-key
-    // protocol: maintainMinMax folds inserts exactly and flags grains
-    // whose current extreme was retracted; ONLY those grains rescan the
-    // base (semi-join pruned — untouched grains never read). Requires
-    // BOTH extreme columns registered for this fold's value column.
-    val minColOpt = reg.mins.get(valueCol)
-    val maxColOpt = reg.maxs.get(valueCol)
+    // Extremes and distinct sketches stay routed through retractions:
+    // the fold flags the grains a retraction leaves unrepairable from
+    // state, and ONLY those grains rescan the base (semi-join pruned —
+    // untouched grains never read). Extremes are kept only with BOTH
+    // extreme columns registered for [[ValueCol]]; sketches only when
+    // the summary carries every registered sketch column and the delta
+    // every sketched base column — otherwise the registration drops
+    // them and MIN/MAX or COUNT(DISTINCT) bails to the base scan rather
+    // than ever serving a stale value. (License residual documented at
+    // maintainDistinct: cross-increment hash collisions; the periodic
+    // compaction pass re-runs verifiedDistinctLicense.)
+    val minColOpt = reg.mins.get(ValueCol)
+    val maxColOpt = reg.maxs.get(ValueCol)
     val keepMm =
-      (reg.mins.keys ++ reg.maxs.keys).forall(_ == valueCol) &&
+      (reg.mins.keys ++ reg.maxs.keys).forall(_ == ValueCol) &&
         minColOpt.exists(prev.columns.contains) &&
         maxColOpt.exists(prev.columns.contains)
-    val next =
-      if (!keepMm) folded
-      else repairDirty(spark, basePath, keyCols, folded,
-        maintainMinMax(prev.select((keyCols.map(col) :+
-          col(minColOpt.get).as("_mm_min") :+
-          col(maxColOpt.get).as("_mm_max")): _*), delta, keyCols,
-          "_mm_min", "_mm_max", signCol, valueCol),
-        Seq("_mm_min" -> minColOpt.get, "_mm_max" -> maxColOpt.get)) {
-        _.groupBy(keyCols.map(col): _*)
-          .agg(min(col(valueCol)).as("_mm_min"),
-            max(col(valueCol)).as("_mm_max"))
-      }
-    // Distinct sketches stay routed through refreshes via the SAME
-    // dirty-key protocol as the extremes: insert-only grains fold their
-    // hash-set union exactly ([[maintainDistinct]]), grains with any
-    // retraction rescan the base on those keys only. Kept only when the
-    // summary actually carries every registered sketch column and the
-    // delta carries every sketched base column — otherwise the
-    // registration drops its distincts and COUNT(DISTINCT) bails to the
-    // base scan rather than ever serving a stale set. (License residual
-    // documented at maintainDistinct: cross-increment hash collisions;
-    // the periodic compaction pass re-runs verifiedDistinctLicense.)
     val keepDx = reg.distincts.nonEmpty &&
       reg.distincts.values.forall(prev.columns.contains) &&
       reg.distincts.keys.forall(delta.columns.contains)
-    val next2 =
-      if (!keepDx) next
-      else reg.distincts.foldLeft(next) { case (acc, (bCol, skCol)) =>
-        val state = prev.select(
-          (keyCols.map(col) :+ col(skCol).as("__dx_sk")): _*)
-        repairDirty(spark, basePath, keyCols, acc,
-          maintainDistinct(state, delta, keyCols,
-            sketchCol = "__dx_sk", signCol = signCol, valueCol = bCol),
-          Seq("__dx_sk" -> skCol)) { rows =>
-          // a dirty grain whose remaining values are all null yields
-          // no rescan group — the left merge leaves its sketch NULL,
-          // which the routed fold reads as zero distincts
-          // (collect_list skips nulls): exactly COUNT(DISTINCT) = 0
-          graft.functions.Kmv.withHash(
-              rows.filter(col(bCol).isNotNull), bCol, "__h")
-            .groupBy(keyCols.map(col): _*)
-            .agg(expr("array_sort(collect_set(__h))").as("__dx_sk"))
-        }
-      }
-    next2.write.mode(SaveMode.Overwrite).parquet(nextPath)
+    val next = foldSummary(Some(prev), delta, keyCols,
+      if (keepMm) Some(minColOpt.get -> maxColOpt.get) else None,
+      if (keepDx) reg.distincts.toSeq else Nil)(
+      repairDirty(spark, basePath, keyCols, _, _, _)(_))
+    next.write.mode(SaveMode.Overwrite).parquet(nextPath)
     // re-stamp the cost-model row count alongside the token: rollup
     // cardinality feeds SummaryRewrite's cheapest-server choice. Read
     // it from the parquet FOOTERS of the files just written — a
@@ -366,6 +335,70 @@ object IncrementalFinal {
       maxs = if (keepMm) reg.maxs else Map.empty,
       distincts = if (keepDx) reg.distincts else Map.empty))
     nextPath
+  }
+
+  /** One fold of the signed changelog `delta` into summary state — the
+    * step [[refreshSummary]] and the streaming fold
+    * ([[graft.streaming.StreamingIvm.applyBatch]]) share: [[CntCol]],
+    * [[NnCol]] and [[SumCol]] through [[maintainAggregate]]; when
+    * `extremes` names the state's (min, max) columns, the extremes of
+    * [[ValueCol]] through [[maintainMinMax]]; and each (value column,
+    * sketch column) of `sketches` through [[maintainDistinct]]. With no
+    * `prev` the fold starts from an empty state (the delta's keys, every
+    * state column NULL), so the names and types of a first state come
+    * from this one definition. Output: keyCols, the three aggregate
+    * columns, then the extremes, then the sketches.
+    *
+    * The callers differ only in `resolve`, applied once per extremes or
+    * sketch state: it receives the state folded so far, the maintained
+    * state (keyCols, the columns named in the renames, and a `dirty`
+    * flag per grain), the renames to the state's column names, and the
+    * recompute of that state from base rows; it returns the state so
+    * far with the renamed columns appended. [[refreshSummary]] rescans
+    * the base on the dirty grains ([[repairDirty]]); the streaming fold
+    * fails the commit on them. */
+  private[graft] def foldSummary(prev: Option[DataFrame], delta: DataFrame,
+                                 keyCols: Seq[String],
+                                 extremes: Option[(String, String)],
+                                 sketches: Seq[(String, String)])
+                                (resolve: (DataFrame, DataFrame,
+                                  Seq[(String, String)],
+                                  DataFrame => DataFrame) => DataFrame)
+  : DataFrame = {
+    val stateCols = Seq(CntCol, NnCol, SumCol) ++
+      extremes.toSeq.flatMap { case (mn, mx) => Seq(mn, mx) } ++
+      sketches.map(_._2)
+    val state = prev.getOrElse(stateCols.foldLeft(
+      delta.select(keyCols.map(col): _*).limit(0))(_.withColumn(_, lit(null))))
+    // with extremes, maintainAggregate and maintainMinMax aggregate the
+    // same delta columns: shuffled by key once, both read that shuffle
+    val d = extremes.fold(delta)(_ => delta.repartition(keyCols.map(col): _*))
+    val folded = maintainAggregate(state, d, keyCols)
+    val withMm = extremes.fold(folded) { case (mn, mx) =>
+      resolve(folded,
+        maintainMinMax(state.select((keyCols.map(col) :+
+          col(mn).as("_mm_min") :+ col(mx).as("_mm_max")): _*), d,
+          keyCols, "_mm_min", "_mm_max", ValueCol),
+        Seq("_mm_min" -> mn, "_mm_max" -> mx),
+        _.groupBy(keyCols.map(col): _*)
+          .agg(min(col(ValueCol)).as("_mm_min"),
+            max(col(ValueCol)).as("_mm_max")))
+    }
+    sketches.foldLeft(withMm) { case (acc, (vCol, skCol)) =>
+      resolve(acc,
+        maintainDistinct(state.select(
+          (keyCols.map(col) :+ col(skCol).as("__dx_sk")): _*), delta,
+          keyCols, sketchCol = "__dx_sk", valueCol = vCol),
+        Seq("__dx_sk" -> skCol),
+        // a dirty grain whose remaining values are all null yields no
+        // recompute group — the left merge leaves its sketch NULL,
+        // which the routed fold reads as zero distincts (collect_list
+        // skips nulls): exactly COUNT(DISTINCT) = 0
+        rows => graft.functions.Kmv.withHash(
+            rows.filter(col(vCol).isNotNull), vCol, "__h")
+          .groupBy(keyCols.map(col): _*)
+          .agg(expr("array_sort(collect_set(__h))").as("__dx_sk")))
+    }
   }
 
   /** [[refreshSummary]]'s dirty-key repair, shared by its MIN/MAX and
@@ -439,14 +472,13 @@ object IncrementalFinal {
   def maintainMinMax(baseMm: DataFrame, delta: DataFrame,
                      keyCols: Seq[String],
                      minCol: String = "min_v", maxCol: String = "max_v",
-                     signCol: String = "sign",
                      valueCol: String = "v"): DataFrame = {
     val dAgg = delta.groupBy(keyCols.map(col): _*)
       .agg(
-        min(when(col(signCol) > 0, col(valueCol))).as("_ins_min"),
-        max(when(col(signCol) > 0, col(valueCol))).as("_ins_max"),
-        min(when(col(signCol) < 0, col(valueCol))).as("_del_min"),
-        max(when(col(signCol) < 0, col(valueCol))).as("_del_max"))
+        min(when(col(SignCol) > 0, col(valueCol))).as("_ins_min"),
+        max(when(col(SignCol) > 0, col(valueCol))).as("_ins_max"),
+        min(when(col(SignCol) < 0, col(valueCol))).as("_del_min"),
+        max(when(col(SignCol) < 0, col(valueCol))).as("_del_max"))
     keyMergeNullSafe(baseMm, dAgg, keyCols, "full_outer")
       .withColumn("dirty", coalesce(
         col(minCol).isNotNull &&
@@ -583,15 +615,14 @@ object IncrementalFinal {
   def maintainDistinct(baseSk: DataFrame, delta: DataFrame,
                        keyCols: Seq[String],
                        sketchCol: String = "kmv",
-                       signCol: String = "sign",
                        valueCol: String = "v"): DataFrame = {
     val dAgg = graft.functions.Kmv
       .withHash(delta, valueCol, "__h")
       .groupBy(keyCols.map(col): _*)
       .agg(
-        expr(s"array_sort(collect_set(CASE WHEN $signCol > 0 " +
+        expr(s"array_sort(collect_set(CASE WHEN $SignCol > 0 " +
           "THEN __h END))").as("__ins_sk"),
-        (sum(when(col(signCol) < 0, lit(1L)).otherwise(lit(0L))) > 0)
+        (sum(when(col(SignCol) < 0, lit(1L)).otherwise(lit(0L))) > 0)
           .as("__any_del"))
     val empty = "CAST(array() AS ARRAY<BIGINT>)"
     keyMergeNullSafe(baseSk, dAgg, keyCols, "full_outer")
@@ -632,19 +663,18 @@ object IncrementalFinal {
     * update case.
     *
     * Contract: `aOld`/`bOld` are the PRE-batch bases; deltas carry
-    * `signCol` (+1/−1); apart from `key`, A-columns and B-columns are
+    * [[SignCol]] (+1/−1); apart from `key`, A-columns and B-columns are
     * disjoint; inputs are PK-keyed changelogs (CdcApply's contract) so
     * net multiplicities are 0 or 1 — tuples with net sign ≤ 0 leave
     * the view. The gate (`cdc_ivm_join`) proves maintain ≡ re-join of
     * the post-change bases; the PropertySpec law does the same on
     * random changelogs. */
   def maintainJoin(view: DataFrame, aOld: DataFrame, bOld: DataFrame,
-                   dA: DataFrame, dB: DataFrame, key: Seq[String],
-                   signCol: String = "sign"): DataFrame = {
+                   dA: DataFrame, dB: DataFrame,
+                   key: Seq[String]): DataFrame = {
     val outCols = view.columns.toSeq
     view.withColumn("_m", lit(1))
-      .unionByName(innerJoinDelta(aOld, bOld, dA, dB, key, signCol,
-        outCols))
+      .unionByName(innerJoinDelta(aOld, bOld, dA, dB, key, outCols))
       .groupBy(outCols.map(col): _*)
       .agg(sum(col("_m")).as("_net"))
       .filter(col("_net") > 0)
@@ -659,14 +689,14 @@ object IncrementalFinal {
     * materialization and not the other (review r18). */
   private def innerJoinDelta(aOld: DataFrame, bOld: DataFrame,
                              dA: DataFrame, dB: DataFrame,
-                             key: Seq[String], signCol: String,
+                             key: Seq[String],
                              outCols: Seq[String]): DataFrame = {
     def term(l: DataFrame, r: DataFrame, s: org.apache.spark.sql.Column) =
       l.join(r, key).withColumn("_m", s)
         .select(outCols.map(col) :+ col("_m"): _*)
-    val sA = col(signCol)
-    val sB = col(s"${signCol}_b")
-    val dBr = dB.withColumnRenamed(signCol, s"${signCol}_b")
+    val sA = col(SignCol)
+    val sB = col(s"${SignCol}_b")
+    val dBr = dB.withColumnRenamed(SignCol, s"${SignCol}_b")
     term(dA, bOld, sA)
       .unionByName(term(aOld, dBr, sB))
       .unionByName(term(dA, dBr, sA * sB))
@@ -704,11 +734,10 @@ object IncrementalFinal {
   def maintainJoinBucketed(statePath: String, aOld: DataFrame,
                            bOld: DataFrame, dA: DataFrame, dB: DataFrame,
                            key: Seq[String], batchId: Long,
-                           nBuckets: Int = 16,
-                           signCol: String = "sign"): Unit = {
+                           nBuckets: Int = 16): Unit = {
     val aCols = aOld.columns.toSeq
     val outCols = aCols ++ bOld.columns.toSeq.filterNot(key.contains)
-    val net = innerJoinDelta(aOld, bOld, dA, dB, key, signCol, outCols)
+    val net = innerJoinDelta(aOld, bOld, dA, dB, key, outCols)
       .groupBy(outCols.map(col): _*)
       .agg(sum(col("_m")).as("_net"))
     mergeNetDelta(net, key, statePath, batchId, nBuckets)
@@ -756,13 +785,11 @@ object IncrementalFinal {
   def maintainLeftJoinBucketed(statePath: String, aOld: DataFrame,
                                bOld: DataFrame, dA: DataFrame,
                                dB: DataFrame, key: Seq[String],
-                               batchId: Long, nBuckets: Int = 16,
-                               signCol: String = "sign"): Unit = {
+                               batchId: Long, nBuckets: Int = 16): Unit = {
     val aCols = aOld.columns.toSeq
     val outCols = aCols ++ bOld.columns.toSeq.filterNot(key.contains)
     val bTypes = bOld.schema.fields.map(f => f.name -> f.dataType).toMap
-    val net = leftJoinDelta(aOld, bOld, dA, dB, key, signCol, outCols,
-        aCols, bTypes)
+    val net = leftJoinDelta(aOld, bOld, dA, dB, key, outCols, aCols, bTypes)
       .groupBy(outCols.map(col): _*)
       .agg(sum(col("_m")).as("_net"))
     mergeNetDelta(net, key, statePath, batchId, nBuckets)
@@ -795,14 +822,14 @@ object IncrementalFinal {
     * maintain ≡ from-scratch left re-join on random two-sided
     * changelogs, including 0→match and match→0 transitions. */
   def maintainLeftJoin(view: DataFrame, aOld: DataFrame, bOld: DataFrame,
-                       dA: DataFrame, dB: DataFrame, key: Seq[String],
-                       signCol: String = "sign"): DataFrame = {
+                       dA: DataFrame, dB: DataFrame,
+                       key: Seq[String]): DataFrame = {
     val outCols = view.columns.toSeq
     val aCols = aOld.columns.toSeq
     val bTypes = view.schema.fields.map(f => f.name -> f.dataType).toMap
     view.withColumn("_m", lit(1))
-      .unionByName(leftJoinDelta(aOld, bOld, dA, dB, key, signCol,
-        outCols, aCols, bTypes))
+      .unionByName(leftJoinDelta(aOld, bOld, dA, dB, key, outCols, aCols,
+        bTypes))
       .groupBy(outCols.map(col): _*)
       .agg(sum(col("_m")).as("_net"))
       .filter(col("_net") > 0)
@@ -815,7 +842,7 @@ object IncrementalFinal {
     * [[maintainLeftJoinBucketed]] (keyed merge). */
   private def leftJoinDelta(aOld: DataFrame, bOld: DataFrame,
                             dA: DataFrame, dB: DataFrame,
-                            key: Seq[String], signCol: String,
+                            key: Seq[String],
                             outCols: Seq[String], aCols: Seq[String],
                             bTypes: Map[String, org.apache.spark.sql.types.DataType])
   : DataFrame = {
@@ -835,11 +862,11 @@ object IncrementalFinal {
     val dA2 = dA.filter(!nullKey)
     val dB2 = dB.filter(!nullKey)
     val dNullExt = nullExtend(dAnull
-      .withColumnRenamed(signCol, "_m")
+      .withColumnRenamed(SignCol, "_m")
       .select(aCols.map(col) :+ col("_m"): _*))
 
     // matched part: the inner delta rule over the non-null-key deltas
-    val dInner = innerJoinDelta(aOld, bOld, dA2, dB2, key, signCol, outCols)
+    val dInner = innerJoinDelta(aOld, bOld, dA2, dB2, key, outCols)
 
     // null-extended part, over the affected (non-null) keys T only
     val touched = dA2.select(key.map(col): _*)
@@ -848,7 +875,7 @@ object IncrementalFinal {
     val cntOld = bOld.join(touched, key, "left_semi")
       .groupBy(key.map(col): _*).agg(count(lit(1)).as("_cold"))
     val cntNew = cntOld
-      .join(dB2.groupBy(key.map(col): _*).agg(sum(col(signCol)).as("_d")),
+      .join(dB2.groupBy(key.map(col): _*).agg(sum(col(SignCol)).as("_d")),
         key, "full_outer")
       .select(key.map(col) :+
         (coalesce(col("_cold"), lit(0L)) + coalesce(col("_d"), lit(0L)))
@@ -865,7 +892,7 @@ object IncrementalFinal {
     // +N_new|T : every NEW a row (old rows + signed deltas) on a key
     // that HAS no match now — a-row signs carry through
     val aNewT = aOldT.withColumn("_m", lit(1L))
-      .unionByName(dA2.withColumnRenamed(signCol, "_m"))
+      .unionByName(dA2.withColumnRenamed(SignCol, "_m"))
     val nNew = aNewT.join(unmatchedNew, key, "left_semi")
       .select(aCols.map(col) :+ col("_m"): _*)
     dInner.unionByName(nOld.unionByName(nullExtend(nNew)))

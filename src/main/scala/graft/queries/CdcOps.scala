@@ -857,9 +857,10 @@ object CdcOps {
 
     // ⊕ the streamed MV loop maintaining the FULL aggregate surface:
     // same 3-batch fold as cdc_mv_streamed with extremes enabled —
-    // MIN/MAX fold monotone under the loop's insert-only signs (a
-    // retraction fails the fold loudly; delete-bearing extreme repair
-    // is the batch refreshSummary path, gated separately). The routed
+    // MIN/MAX fold monotone under the loop's insert-only signs (the
+    // fold would take a retraction exactly unless it touched its
+    // grain's current extreme, which fails the fold; that repair is the
+    // batch refreshSummary path, gated separately). The routed
     // dashboard serves count/sum/avg AND min/max from the
     // stream-maintained |keys|-row summary; the oracle recomputes all
     // six from raw events, so one hash certifies fold ≡ recompute ≡
@@ -887,10 +888,10 @@ object CdcOps {
     // ⊕ the streamed MV loop maintaining a DISTINCT sketch: same
     // 3-batch fold with `distinctCol` set — per batch the user_id
     // hash-set union folds into the versioned summary (exact under the
-    // loop's insert-only signs: set union commutes with recompute; a
-    // retraction fails loudly, batch-local hash injectivity is
-    // asserted per fold), and the routed dashboard serves
-    // COUNT(DISTINCT user_id) alongside count/sum/avg from the
+    // loop's insert-only signs: set union commutes with recompute; any
+    // retraction in a grain with a sketch fails the fold, batch-local
+    // hash injectivity is asserted per fold), and the routed dashboard
+    // serves COUNT(DISTINCT user_id) alongside count/sum/avg from the
     // |keys|-row stream-maintained summary. The oracle recomputes the
     // distinct count from raw events, so one hash certifies
     // stream-fold ≡ recompute ≡ routed for the aggregate plain

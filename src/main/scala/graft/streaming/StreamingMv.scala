@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.IncrementalFinal.{CntCol, NnCol, SignCol, SumCol, ValueCol}
 import graft.plans.MvRegistry
 
 /** The MV loop streamed end-to-end (VERDICT r15 task 3): one
@@ -32,7 +33,9 @@ import graft.plans.MvRegistry
   * entirely; queries scan the corpus until the first post-restart fold
   * re-registers. Deletes are not part of this loop by design: the
   * reference's CDC routes deletes to a tombstone table
-  * ([[CdcIngest]]), and retraction-bearing summary repair is the batch
+  * ([[CdcIngest]]). The fold itself takes a retraction exactly unless
+  * it touches a grain's current extreme or its distinct sketch; such a
+  * grain fails the fold, and its repair is the batch
   * [[graft.pipeline.IncrementalFinal.refreshSummary]] path (gated
   * `cdc_mv_refresh_retraction`).
   *
@@ -46,21 +49,19 @@ import graft.plans.MvRegistry
 object StreamingMv {
 
   /** The summary grain + maintained columns this loop serves:
-    * count / non-null count / sum over `valueCol` at `keyCols` — the
+    * count / non-null count / sum over `v_micro` at `keyCols` — the
     * [[graft.pipeline.IncrementalFinal.maintainAggregate]] contract —
-    * plus MIN/MAX when `extremes` is set: monotone under the loop's
-    * insert-only signs (a retraction fails the fold loudly — extreme
-    * repair under deletes is the batch
-    * [[graft.pipeline.IncrementalFinal.refreshSummary]] path). With
-    * `distinctCol` set, the loop also maintains that column's distinct
-    * hash-set sketch (exact under insert-only signs — set union
-    * commutes with recompute) and registers it, so the routed dashboard
-    * serves COUNT(DISTINCT distinctCol) from the |keys|-row summary;
-    * retraction-bearing distinct repair is, like the extremes, the
-    * batch refreshSummary path. */
-  final case class Config(keyCols: Seq[String], valueCol: String = "v_micro",
-                          keepVersions: Int = 3,
-                          extremes: Boolean = false,
+    * plus MIN/MAX when `extremes` is set. With `distinctCol` set, the
+    * loop also maintains that column's distinct hash-set sketch and
+    * registers it, so the routed dashboard serves
+    * COUNT(DISTINCT distinctCol) from the |keys|-row summary. The loop
+    * only inserts, and inserts fold exactly (min/max improve in place,
+    * set union commutes with recompute); a retraction fed to the same
+    * fold ([[StreamingIvm.applyBatch]]) folds exactly unless it touches
+    * a grain's current extreme or its sketch, which fails the fold —
+    * that repair is the batch
+    * [[graft.pipeline.IncrementalFinal.refreshSummary]] path. */
+  final case class Config(keyCols: Seq[String], extremes: Boolean = false,
                           distinctCol: Option[String] = None)
 
   def docsDir(stateDir: String): String = s"$stateDir/docs"
@@ -93,8 +94,8 @@ object StreamingMv {
     StreamingIvm.readState(spark, summaryDir(stateDir))
 
   /** The foreachBatch body — public so tests can drive re-delivery and
-    * crash windows explicitly. `batch` carries `keyCols` + `valueCol`
-    * insert rows. */
+    * crash windows explicitly. `batch` carries `keyCols` + `v_micro`
+    * (+ `distinctCol`) insert rows. */
   def foldBatch(spark: SparkSession, stateDir: String, cfg: Config)
                (batch: DataFrame, batchId: Long): Unit = {
     // 1. corpus partition first (re-delivery overwrites its own subdir;
@@ -106,21 +107,15 @@ object StreamingMv {
     //    old eager localCheckpoint only approximated while costing one
     //    extra materialization pass per fold.
     batch
-      .select((cfg.keyCols.map(col) :+ col(cfg.valueCol)) ++
-        cfg.distinctCol.filterNot(_ == cfg.valueCol).map(col): _*)
+      .select((cfg.keyCols.map(col) :+ col(ValueCol)) ++
+        cfg.distinctCol.filterNot(_ == ValueCol).map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"${docsDir(stateDir)}/batch=$batchId")
     val rows = spark.read.parquet(s"${docsDir(stateDir)}/batch=$batchId")
     // 2. versioned summary fold — the commit mark
-    // the IVM fold's maintenance schema is fixed (v_micro/sign); the
-    // corpus partition above keeps the caller's column name — the
-    // rename is a no-op for the default config
     StreamingIvm.applyBatch(spark, summaryDir(stateDir), cfg.keyCols,
-      cfg.keepVersions, extremes = cfg.extremes,
-      distinctCol = cfg.distinctCol.map(c =>
-        if (c == cfg.valueCol) "v_micro" else c))(
-      rows.withColumnRenamed(cfg.valueCol, "v_micro")
-        .withColumn("sign", lit(1L)), batchId)
+      extremes = cfg.extremes, distinctCol = cfg.distinctCol)(
+      rows.withColumn(SignCol, lit(1L)), batchId)
     // 3. routing resumes: register the folded summary for the corpus
     //    path with the CURRENT token (stamped from the files just
     //    written — any later corpus write bails routing until the next
@@ -129,12 +124,12 @@ object StreamingMv {
       MvRegistry.Summary(
         () => summary(spark, stateDir).getOrElse(
           sys.error(s"StreamingMv: no committed summary under $stateDir")),
-        cfg.keyCols, "cnt",
-        sums = Map(cfg.valueCol -> "sum_micro"),
-        nns = Map(cfg.valueCol -> "n_nonnull"),
-        mins = if (cfg.extremes) Map(cfg.valueCol -> "min_micro")
+        cfg.keyCols, CntCol,
+        sums = Map(ValueCol -> SumCol),
+        nns = Map(ValueCol -> NnCol),
+        mins = if (cfg.extremes) Map(ValueCol -> "min_micro")
                else Map.empty,
-        maxs = if (cfg.extremes) Map(cfg.valueCol -> "max_micro")
+        maxs = if (cfg.extremes) Map(ValueCol -> "max_micro")
                else Map.empty,
         distincts = cfg.distinctCol.map(_ -> "kmv_distinct").toMap))
   }
@@ -154,13 +149,13 @@ object StreamingMv {
     * (stale/unregistered). */
   def dashboard(spark: SparkSession, stateDir: String, cfg: Config)
   : DataFrame = {
-    val aggs = Seq(count(lit(1)).as("cnt"),
-      count(col(cfg.valueCol)).as("n_nonnull"),
-      sum(col(cfg.valueCol)).as("sum_micro"),
-      avg(col(cfg.valueCol)).as("avg_micro")) ++
+    val aggs = Seq(count(lit(1)).as(CntCol),
+      count(col(ValueCol)).as(NnCol),
+      sum(col(ValueCol)).as(SumCol),
+      avg(col(ValueCol)).as("avg_micro")) ++
       (if (cfg.extremes)
-        Seq(min(col(cfg.valueCol)).as("min_micro"),
-          max(col(cfg.valueCol)).as("max_micro"))
+        Seq(min(col(ValueCol)).as("min_micro"),
+          max(col(ValueCol)).as("max_micro"))
       else Nil) ++
       cfg.distinctCol.map(c => countDistinct(col(c)).as("n_distinct"))
     spark.read.parquet(docsDir(stateDir))

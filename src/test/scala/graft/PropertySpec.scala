@@ -686,4 +686,49 @@ class PropertySpec extends SparkSuite {
       got == expect
     })
   }
+
+  test("StreamingIvm.applyBatch with extremes and a sketch ≡ recompute after every insert-only batch; re-delivery changes nothing") {
+    import graft.functions.Kmv
+    import graft.streaming.StreamingIvm
+    // (k, v_micro, uid): NULL grain keys, NULL values, and a tiny uid
+    // domain so values repeat within and across batches
+    val genRow = for {
+      k <- Gen.option(Gen.choose(0L, 2L))
+      v <- Gen.option(Gen.choose(-20L, 20L))
+      uid <- Gen.option(Gen.choose(0L, 5L))
+    } yield (k, v, uid)
+    val genBatches = Gen.choose(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(1, 6).flatMap(m => Gen.listOfN(m, genRow))))
+    type Agg = (Long, Long, Option[Long], Option[Long], Option[Long], Seq[Long])
+    def opt(r: org.apache.spark.sql.Row, c: String): Option[Long] =
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Long](c))
+    def byKey(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Agg] =
+      df.collect().map(r => opt(r, "k") -> ((r.getAs[Long]("cnt"),
+        r.getAs[Long]("n_nonnull"), opt(r, "sum_micro"),
+        opt(r, "min_micro"), opt(r, "max_micro"),
+        r.getSeq[Long](r.fieldIndex("kmv_distinct")).sorted))).toMap
+    def rows(b: List[(Option[Long], Option[Long], Option[Long])]) =
+      b.map { case (k, v, u) => (k, v, u, 1L) }.toDF("k", "v_micro", "uid", "sign")
+    check(Prop.forAll(genBatches) { batches =>
+      val state = tmpDir("ivm-law")
+      def fold(b: List[(Option[Long], Option[Long], Option[Long])], id: Long) =
+        StreamingIvm.applyBatch(spark, state, Seq("k"), extremes = true,
+          distinctCol = Some("uid"))(rows(b), id)
+      def folded = byKey(StreamingIvm.readState(spark, state).get)
+      def recompute(upTo: Int) = byKey(Kmv.withHash(
+          rows(batches.take(upTo).flatten), "uid", "__h")
+        .groupBy("k").agg(count(lit(1)).as("cnt"),
+          count(col("v_micro")).as("n_nonnull"),
+          sum(col("v_micro")).as("sum_micro"),
+          min(col("v_micro")).as("min_micro"),
+          max(col("v_micro")).as("max_micro"),
+          collect_set(col("__h")).as("kmv_distinct")))
+      val everyBatch = batches.zipWithIndex.forall { case (b, i) =>
+        fold(b, i.toLong)
+        folded == recompute(i + 1)
+      }
+      fold(batches.last, batches.size - 1L)
+      everyBatch && folded == recompute(batches.size)
+    })
+  }
 }

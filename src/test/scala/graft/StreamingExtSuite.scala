@@ -861,8 +861,24 @@ class StreamingExtSuite extends SparkSuite {
           ("c", Some(4L))).toDF("k", "v_micro"), 1L)
       assert(mm(StreamingMv.dashboard(spark, state, cfg)) ===
         List(("a", 1L, 9L), ("b", 2L, 7L), ("c", 4L, 4L)))
-      // a retraction cannot fold monotone extremes — loud failure, not
-      // a silently-wrong extreme
+      // a retraction that touches neither of its grain's extremes folds
+      // exactly: the committed state ≡ recompute over the remaining rows
+      StreamingIvm.applyBatch(spark,
+        StreamingMv.summaryDir(state), Seq("k"), extremes = true)(
+        Seq(("a", 5L, -1L)).toDF("k", "v_micro", "sign"), 2L)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("k")
+        .select("k", "cnt", "n_nonnull", "sum_micro", "min_micro",
+          "max_micro").collect().map(_.toSeq).toList
+      assert(rows(StreamingIvm.readState(spark,
+          StreamingMv.summaryDir(state)).get) ===
+        rows(Seq(("a", Some(9L)), ("a", Some(1L)), ("b", Some(2L)),
+          ("b", None: Option[Long]), ("b", Some(7L)), ("c", Some(4L)))
+          .toDF("k", "v_micro").groupBy("k").agg(
+            count(lit(1)).as("cnt"), count("v_micro").as("n_nonnull"),
+            sum("v_micro").as("sum_micro"), min("v_micro").as("min_micro"),
+            max("v_micro").as("max_micro"))))
+      // a retraction of a grain's current extreme cannot fold from state
+      // — loud failure, not a silently-wrong extreme
       val e = intercept[Exception] {
         StreamingIvm.applyBatch(spark,
           StreamingMv.summaryDir(state), Seq("k"), extremes = true)(
@@ -875,19 +891,6 @@ class StreamingExtSuite extends SparkSuite {
       // the failed fold left no committed v=5 state
       assert(!StreamingIvm.versions(spark,
         StreamingMv.summaryDir(state)).contains(5L))
-      // a NON-DEFAULT valueCol folds and routes identically — the IVM
-      // maintenance schema (v_micro) is internal to the fold
-      val state2 = tmpDir("smv-vc")
-      val cfg2 = StreamingMv.Config(Seq("k"), valueCol = "amount",
-        extremes = true)
-      StreamingMv.foldBatch(spark, state2, cfg2)(
-        Seq(("a", Some(3L)), ("a", Some(8L))).toDF("k", "amount"), 0L)
-      val d2 = StreamingMv.dashboard(spark, state2, cfg2)
-      assert(d2.collect().map(r => (r.getString(0),
-        r.getAs[Long]("min_micro"), r.getAs[Long]("max_micro"))).toList
-        === List(("a", 3L, 8L)))
-      assert(scanned(d2).exists(_.contains("/summary/")),
-        s"non-default valueCol not routed: ${scanned(d2)}")
     } finally MvRegistry.clear()
   }
 
