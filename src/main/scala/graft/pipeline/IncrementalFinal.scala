@@ -370,14 +370,11 @@ object IncrementalFinal {
       sketches.map(_._2)
     val state = prev.getOrElse(stateCols.foldLeft(
       delta.select(keyCols.map(col): _*).limit(0))(_.withColumn(_, lit(null))))
-    // with extremes, maintainAggregate and maintainMinMax aggregate the
-    // same delta columns: shuffled by key once, both read that shuffle
-    val d = extremes.fold(delta)(_ => delta.repartition(keyCols.map(col): _*))
-    val folded = maintainAggregate(state, d, keyCols)
+    val folded = maintainAggregate(state, delta, keyCols)
     val withMm = extremes.fold(folded) { case (mn, mx) =>
       resolve(folded,
         maintainMinMax(state.select((keyCols.map(col) :+
-          col(mn).as("_mm_min") :+ col(mx).as("_mm_max")): _*), d,
+          col(mn).as("_mm_min") :+ col(mx).as("_mm_max")): _*), delta,
           keyCols, "_mm_min", "_mm_max", ValueCol),
         Seq("_mm_min" -> mn, "_mm_max" -> mx),
         _.groupBy(keyCols.map(col): _*)
@@ -461,7 +458,10 @@ object IncrementalFinal {
     *              key is DIRTY — conservative on duplicates (deleting
     *              one copy of a duplicated minimum still flags, and the
     *              rescan simply confirms the value)
-    *   new keys : extremes of their inserts, never dirty
+    *   no extreme stored (a new key, or only NULLs so far): any
+    *              non-null retraction retracts a value inserted in the
+    *              same delta → DIRTY; otherwise the extremes of its
+    *              inserts
     *
     * Output: (keys…, min_v, max_v, dirty) — dirty rows carry NULL
     * extremes; the caller rescans base rows on those keys only (the
@@ -480,11 +480,12 @@ object IncrementalFinal {
         min(when(col(SignCol) < 0, col(valueCol))).as("_del_min"),
         max(when(col(SignCol) < 0, col(valueCol))).as("_del_max"))
     keyMergeNullSafe(baseMm, dAgg, keyCols, "full_outer")
-      .withColumn("dirty", coalesce(
-        col(minCol).isNotNull &&
-          ((col("_del_min") <= col(minCol)) ||
-            (col("_del_max") >= col(maxCol))),
-        lit(false))) // no deletes → null comparisons → clean
+      // no non-null retraction → clean; one on a grain with no stored
+      // extreme (new to this delta, or all-NULL so far) retracts a value
+      // inserted in this same delta → dirty, the stored NULL bounds nothing
+      .withColumn("dirty", col("_del_min").isNotNull &&
+        (col(minCol).isNull || col("_del_min") <= col(minCol) ||
+          col("_del_max") >= col(maxCol)))
       .select(keyCols.map(col) ++ Seq(
         when(!col("dirty"), least(col(minCol), col("_ins_min"))).as(minCol),
         when(!col("dirty"), greatest(col(maxCol), col("_ins_max"))).as(maxCol),
@@ -598,7 +599,8 @@ object IncrementalFinal {
     *              changelog contract every retraction targets a
     *              base-counted row, so its hash IS in the sketch and
     *              might be the value's last copy)
-    *   new keys : sketch of their inserts, never dirty
+    *   new keys : sketch of their inserts; a retraction in the same
+    *              delta makes them DIRTY like any other grain
     *
     * Output: (keys…, `sketchCol`, dirty) — dirty rows carry NULL
     * sketches; the caller rescans base rows on those keys only (the

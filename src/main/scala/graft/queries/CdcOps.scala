@@ -859,7 +859,8 @@ object CdcOps {
     // same 3-batch fold as cdc_mv_streamed with extremes enabled —
     // MIN/MAX fold monotone under the loop's insert-only signs (the
     // fold would take a retraction exactly unless it touched its
-    // grain's current extreme, which fails the fold; that repair is the
+    // grain's current extreme, or the grain had none stored, which
+    // fails the fold; that repair is the
     // batch refreshSummary path, gated separately). The routed
     // dashboard serves count/sum/avg AND min/max from the
     // stream-maintained |keys|-row summary; the oracle recomputes all

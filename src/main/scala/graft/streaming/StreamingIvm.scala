@@ -69,8 +69,9 @@ object StreamingIvm {
     * [[IncrementalFinal.refreshSummary]] runs — with MIN/MAX of
     * `v_micro` (`extremes`) in `min_micro`/`max_micro` and the hash-set
     * sketch of `distinctCol` in `kmv_distinct`. What differs is the
-    * dirty grain: a retraction that touches a grain's current extreme,
-    * or any retraction in a grain with a sketch, leaves that grain
+    * dirty grain: a retraction that touches a grain's current extreme
+    * (or finds none stored: a grain new to the batch, or all-NULL so
+    * far), or any retraction in a grain with a sketch, leaves that grain
     * unrepairable from state, and with no base to rescan here the fold
     * fails the commit plan (`assert_true`, so no `_SUCCESS` marker is
     * written) instead of serving a wrong value; repair such summaries
@@ -128,7 +129,12 @@ object StreamingIvm {
       "streaming fold is insert-only for extremes and sketches — a " +
       "retraction touched a grain's current extreme or its sketch; " +
       "repair through IncrementalFinal.refreshSummary"))
-    val folded = IncrementalFinal.foldSummary(prev, batch, keyCols,
+    // with extremes, the fold's aggregate and MIN/MAX arms group the
+    // same batch columns by key: shuffled once here, both read that
+    // exchange within the one commit plan
+    val delta =
+      if (extremes) batch.repartition(keyCols.map(col): _*) else batch
+    val folded = IncrementalFinal.foldSummary(prev, delta, keyCols,
       if (extremes) Some("min_micro" -> "max_micro") else None,
       distinctCol.map(_ -> "kmv_distinct").toSeq) { (acc, m, renames, _) =>
       IncrementalFinal.keyMergeNullSafe(acc, m, keyCols, "left")

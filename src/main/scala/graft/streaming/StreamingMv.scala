@@ -34,10 +34,10 @@ import graft.plans.MvRegistry
   * re-registers. Deletes are not part of this loop by design: the
   * reference's CDC routes deletes to a tombstone table
   * ([[CdcIngest]]). The fold itself takes a retraction exactly unless
-  * it touches a grain's current extreme or its distinct sketch; such a
-  * grain fails the fold, and its repair is the batch
-  * [[graft.pipeline.IncrementalFinal.refreshSummary]] path (gated
-  * `cdc_mv_refresh_retraction`).
+  * it touches a grain's current extreme (or the grain has none stored)
+  * or its distinct sketch; such a grain fails the fold, and its repair
+  * is the batch [[graft.pipeline.IncrementalFinal.refreshSummary]] path
+  * (gated `cdc_mv_refresh_retraction`).
   *
   * At 100 TB: per batch the corpus write is ∝ batch, the fold is
   * |Δ keys|-proportional against |keys|-row state, and the dashboard
@@ -58,7 +58,8 @@ object StreamingMv {
     * only inserts, and inserts fold exactly (min/max improve in place,
     * set union commutes with recompute); a retraction fed to the same
     * fold ([[StreamingIvm.applyBatch]]) folds exactly unless it touches
-    * a grain's current extreme or its sketch, which fails the fold —
+    * a grain's current extreme (or the grain has none stored) or its
+    * sketch, which fails the fold —
     * that repair is the batch
     * [[graft.pipeline.IncrementalFinal.refreshSummary]] path. */
   final case class Config(keyCols: Seq[String], extremes: Boolean = false,

@@ -363,6 +363,28 @@ class IncrementalFinalSuite extends SparkSuite {
     assert(rescanned === Map("b" -> ((8L, 8L)), "c" -> ((3L, 7L))))
   }
 
+  test("maintainMinMax: a grain with no stored extreme goes dirty on a non-null retraction in the same delta") {
+    import spark.implicits._
+    val baseMm = Seq(("g", None: Option[Long], None: Option[Long]),
+        ("n", None, None))
+      .toDF("k", "min_v", "max_v")      // grains whose values are all NULL
+    val delta = Seq(
+      ("f", Some(5L), 1L), ("f", Some(7L), 1L), // new key: insert 5 and 7,
+      ("f", Some(5L), -1L),                     // retract 5 → max is 7, not 5
+      ("g", Some(3L), 1L), ("g", Some(3L), -1L), // all-NULL grain, same shape
+      ("h", Some(4L), 1L), ("h", None, -1L),    // a NULL retraction bounds nothing
+      ("n", None, -1L))
+      .toDF("k", "v", "sign")
+    val got = IncrementalFinal
+      .maintainMinMax(baseMm, delta, Seq("k"), valueCol = "v")
+      .collect().map(r => r.getString(0) ->
+        (Option(r.get(1)), Option(r.get(2)), r.getBoolean(3))).toMap
+    assert(got("f") === ((None, None, true)))
+    assert(got("g") === ((None, None, true)))
+    assert(got("h") === ((Some(4L), Some(4L), false)))
+    assert(got("n") === ((None, None, false)))
+  }
+
   test("maintainDistinct: insert-only grains fold the hash-set union exactly; any retraction goes dirty; new keys born clean") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, expr}

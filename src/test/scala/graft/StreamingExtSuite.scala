@@ -820,6 +820,10 @@ class StreamingExtSuite extends SparkSuite {
     } finally MvRegistry.clear()
   }
 
+  // The name predates the dirty-grain rule: a retraction fails the fold
+  // only when it leaves a grain dirty (it touches the grain's current
+  // extreme, or the grain has no stored extreme); any other retraction
+  // folds exactly.
   test("StreamingMv extremes: min/max fold monotone over insert batches; routed ≡ recompute; a retraction fails the fold loudly") {
     import graft.streaming.{StreamingIvm, StreamingMv}
     import graft.plans.MvRegistry
@@ -891,6 +895,18 @@ class StreamingExtSuite extends SparkSuite {
       // the failed fold left no committed v=5 state
       assert(!StreamingIvm.versions(spark,
         StreamingMv.summaryDir(state)).contains(5L))
+      // a grain new to the batch that inserts 5 and 7 and retracts 5 has
+      // no stored extreme to bound the retraction: dirty, so it fails too
+      // rather than commit min_micro = 5
+      val e2 = intercept[Exception] {
+        StreamingIvm.applyBatch(spark,
+          StreamingMv.summaryDir(state), Seq("k"), extremes = true)(
+          Seq(("d", 5L, 1L), ("d", 7L, 1L), ("d", 5L, -1L))
+            .toDF("k", "v_micro", "sign"), 6L)
+      }
+      assert(msgs(e2).exists(_.contains("insert-only")), msgs(e2).mkString)
+      assert(!StreamingIvm.versions(spark,
+        StreamingMv.summaryDir(state)).contains(6L))
     } finally MvRegistry.clear()
   }
 
