@@ -209,7 +209,7 @@ object IncrementalFinal {
   }
 
   /** The stale→refresh→re-route cycle as ONE operation — the repair
-    * [[graft.plans.MvRegistry.registerFresh]]'s bail demands: when a
+    * [[graft.plans.MvRegistry.register]]'s freshness bail demands: when a
     * base write lands after registration, every candidate rewrite
     * bails to the corpus scan until the summary is repaired, and this
     * is the repair. Folds `delta` (the signed changelog of that base
@@ -230,15 +230,16 @@ object IncrementalFinal {
     * routing bails again (conservative, never stale-serving).
     *
     * CHAINING contract (ADVICE r14, medium): the fold's previous state
-    * is the REGISTERED summary's current data (`reg.mv()`), never the
-    * caller-supplied `summaryPath` — a second refresh that passed the
-    * original path would silently drop the first delta while stamping a
-    * fresh token, serving wrong aggregates as "fresh". `summaryPath`
-    * only names the version stem. Re-running a refresh whose fold
-    * already committed (registered token == current base token) is a
-    * NO-OP returning the serving path: by the registration contract the
-    * summary already reflects this exact base version, so folding the
-    * delta again would double-count it.
+    * is the REGISTERED summary (its registered path, read with its
+    * registered schema), never the caller-supplied `summaryPath` — a
+    * second refresh that passed the original path would silently drop
+    * the first delta while stamping a fresh token, serving wrong
+    * aggregates as "fresh". `summaryPath` only names the version stem.
+    * Re-running a refresh whose fold already committed (registered
+    * token == current base token) is a NO-OP returning the serving
+    * path: by the registration contract the summary already reflects
+    * this exact base version, so folding the delta again would
+    * double-count it.
     *
     * Returns the refreshed summary path. Requires a summary registered
     * for `basePath` whose maintained columns are [[CntCol]], [[NnCol]]
@@ -265,14 +266,15 @@ object IncrementalFinal {
                      keyCols: Seq[String]): String = {
     // several rollup grains may be registered per base — refresh the one
     // whose grain matches this fold's keys (register replaces same-grain)
-    val reg = graft.plans.MvRegistry.lookup(basePath)
-      .find(_.groupCols.toSet == keyCols.toSet).getOrElse(sys.error(
+    val registered = graft.plans.MvRegistry.lookup(basePath)
+      .find(_.summary.groupCols.toSet == keyCols.toSet).getOrElse(sys.error(
         s"refreshSummary: no summary with grain $keyCols registered " +
           s"for base $basePath"))
+    val reg = registered.summary
     val tok = graft.plans.MvRegistry.baseVersionToken(spark, basePath)
     val stem = summaryPath.replaceAll("-v[0-9a-f]{12}$", "")
     val nextPath = s"$stem-v${tok.take(12)}"
-    if (reg.baseToken.contains(tok)) {
+    if (registered.token == tok) {
       // the registered summary already reflects THIS base version —
       // re-applying the delta would double-fold (idempotent re-run)
       val fs = new org.apache.hadoop.fs.Path(nextPath)
@@ -280,7 +282,7 @@ object IncrementalFinal {
       return if (fs.exists(new org.apache.hadoop.fs.Path(nextPath)))
         nextPath else summaryPath
     }
-    val prev = reg.mv()
+    val prev = registered.read(spark)
     // single-value-column guard (review r18): this refresh maintains
     // exactly ONE (cnt, nn, sum) triple — a registration carrying
     // MORE sum/nn columns would lose every other column from the
@@ -321,19 +323,11 @@ object IncrementalFinal {
       if (keepDx) reg.distincts.toSeq else Nil)(
       repairDirty(spark, basePath, keyCols, _, _, _)(_))
     next.write.mode(SaveMode.Overwrite).parquet(nextPath)
-    // re-stamp the cost-model row count alongside the token: rollup
-    // cardinality feeds SummaryRewrite's cheapest-server choice. Read
-    // it from the parquet FOOTERS of the files just written — a
-    // driver-side metadata walk, not the full extra scan job that
-    // spark.read.parquet(nextPath).count() costs per refresh (ADVICE
-    // r15).
-    val nRows = parquetRowCount(spark, nextPath)
-    graft.plans.MvRegistry.register(basePath, reg.copy(
-      mv = () => spark.read.parquet(nextPath), baseToken = Some(tok),
-      rows = Some(nRows),
+    graft.plans.MvRegistry.register(spark, basePath, reg.copy(
+      path = nextPath,
       mins = if (keepMm) reg.mins else Map.empty,
       maxs = if (keepMm) reg.maxs else Map.empty,
-      distincts = if (keepDx) reg.distincts else Map.empty))
+      distincts = if (keepDx) reg.distincts else Map.empty), Some(tok))
     nextPath
   }
 
@@ -424,25 +418,6 @@ object IncrementalFinal {
     keyMergeNullSafe(acc, resolved, keyCols, "left")
       .select((acc.columns.toIndexedSeq.map(col) ++
         renames.map { case (c, to) => col(c).as(to) }): _*)
-  }
-
-  /** Total row count of a just-written parquet directory from file
-    * FOOTERS only: a driver-side metadata walk (one footer read per
-    * file, no executor job, no data pages touched) — the cheap way to
-    * stamp a cost statistic on a freshly written summary. */
-  private[graft] def parquetRowCount(spark: SparkSession,
-                                     path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try rd.getRecordCount finally rd.close()
-      }.sum
   }
 
   /** MIN/MAX IVM with the honest dirty-key protocol. Extremes are NOT

@@ -2,27 +2,28 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, ExprId, Expression, If, IsNull, Literal, Multiply, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 
 /** Materialized-summary registry: base table path → its maintained
-  * per-key aggregate (the table [[graft.pipeline.IncrementalFinal
-  * .maintainAggregate]] keeps current). Registering here is the
-  * caller's promise that the summary IS current — maintenance is the
-  * IVM pair's job; this registry only routes.
-  *
-  * `mv` is a thunk so every rewrite gets a freshly-analyzed plan
-  * (fresh attribute ids — reusing one analyzed plan across rewrites
-  * would collide exprIds if a query hits the rule twice). */
+  * per-key aggregates (the tables [[graft.pipeline.IncrementalFinal
+  * .maintainAggregate]] keeps current), each a parquet directory.
+  * Registering here is the caller's promise that the summary IS
+  * current for the base version stamped at registration — maintenance
+  * is the IVM pair's job; this registry only routes. */
 object MvRegistry {
 
-  /** `groupCols`: the summary's grain (composite grains supported —
-    * order is not significant, grouping columns match by NAME);
+  /** `path`: the summary's parquet directory; `groupCols`: its grain
+    * (composite grains supported — order is not significant, grouping
+    * columns match by NAME);
     * `cntCol`: its row count; `sums`/`nns`/`mins`/`maxs`: base column
     * name → summary column holding its SUM / non-null COUNT / MIN /
     * MAX. A base column present in BOTH `sums` and `nns` additionally
@@ -44,29 +45,39 @@ object MvRegistry {
     * not register the column (route would be approximate); the KMV
     * ESTIMATE regime stays available through explicit queries
     * (`a29_kmv_distinct`), never through transparent routing. */
-  final case class Summary(mv: () => DataFrame, groupCols: Seq[String],
+  final case class Summary(path: String, groupCols: Seq[String],
                            cntCol: String, sums: Map[String, String],
                            nns: Map[String, String] = Map.empty,
                            mins: Map[String, String] = Map.empty,
                            maxs: Map[String, String] = Map.empty,
-                           baseToken: Option[String] = None,
-                           rows: Option[Long] = None,
                            distincts: Map[String, String] = Map.empty) {
     require(groupCols.nonEmpty && groupCols.distinct.size == groupCols.size,
       s"summary grain must be non-empty distinct columns, got $groupCols")
   }
 
+  /** A [[Summary]] as [[register]] recorded it: the base-version
+    * `token` it is current for, and its row count and Spark schema read
+    * from its parquet footers. Every read goes through [[read]] with
+    * that schema, so [[SummaryRewrite]] plans a routed query without a
+    * schema-inference job; each read is a freshly-analyzed plan (fresh
+    * attribute ids — reusing one analyzed plan across rewrites would
+    * collide exprIds if a query hits the rule twice). */
+  final class Registered private[MvRegistry] (val summary: Summary,
+      val token: String, val rows: Long, schema: StructType) {
+    def read(spark: SparkSession): DataFrame =
+      spark.read.schema(schema).parquet(summary.path)
+  }
+
   /** Freshness token for a base table: an md5 over the sorted
     * (path, length, mtime) of every data file under `path` — the plain-
     * parquet stand-in for a lakehouse snapshot id (on Delta/Iceberg this
-    * would be the table version, one metadata read). Record it at
-    * registration ([[registerFresh]]); [[SummaryRewrite]] recomputes it
+    * would be the table version, one metadata read). Stamped at
+    * [[register]]; [[SummaryRewrite]] recomputes it
     * per candidate rewrite and BAILS to the base scan when it differs —
     * a summary lagging its base must never serve stale rows silently.
     * The listing is metadata-only (no data read); registries fronting
     * object stores should prefer the snapshot-id form. */
-  def baseVersionToken(spark: org.apache.spark.sql.SparkSession,
-                       path: String): String = {
+  def baseVersionToken(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -84,38 +95,58 @@ object MvRegistry {
     digest.map("%02x".format(_)).mkString
   }
 
-  private val reg = new ConcurrentHashMap[String, Vector[Summary]]()
+  /** Row count and Spark schema of a parquet directory from its file
+    * FOOTERS only: a driver-side metadata walk (one footer read per
+    * file, no Spark job, no data pages touched). The schema is the one
+    * Spark wrote into the footer, which is what its own inference
+    * reads; a directory Spark did not write falls back to inference. */
+  private[graft] def footers(spark: SparkSession,
+                             path: String): (Long, StructType) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(conf).listStatus(p).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try (rd.getRecordCount, Option(rd.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+        finally rd.close()
+      }
+    (files.map(_._1).sum, files.headOption.flatMap(_._2)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(path).schema))
+  }
+
+  private val reg = new ConcurrentHashMap[String, Vector[Registered]]()
 
   /** Register a summary, keyed by (base path, GRAIN): re-registering
     * the same grain REPLACES the entry (the maintenance loop's
     * re-stamp), a different grain COEXISTS — a base commonly keeps
     * several rollups (day grain for time series, type grain for
-    * breakdowns). [[SummaryRewrite]] tries each registered summary and,
-    * among those that provably serve the query, routes to the one with
-    * the fewest `rows` (the registry's cost model: a summary's grain-row
-    * count, stamped at registration/refresh time — rollup cardinality is
-    * as stable a statistic as a table row count); summaries without a
-    * row count rank last, ties keep registration order. */
-  def register(basePath: String, s: Summary): Unit =
+    * breakdowns). Stamps `token` (default: the CURRENT
+    * [[baseVersionToken]] of `basePath`), so any later base write
+    * (append, overwrite, compaction) makes [[SummaryRewrite]] bail until
+    * re-registration; the one caller that passes its own is
+    * [[graft.pipeline.IncrementalFinal.refreshSummary]], with the token
+    * it read before its fold. Reads the summary's row count and schema
+    * from its footers, once. [[SummaryRewrite]] tries each registered
+    * summary and, among those that provably serve the query, routes to
+    * the one with the fewest rows (the registry's cost model: rollup
+    * cardinality is as stable a statistic as a table row count); ties
+    * keep registration order. */
+  def register(spark: SparkSession, basePath: String, s: Summary,
+               token: Option[String] = None): Unit = {
+    val (rows, schema) = footers(spark, s.path)
+    val r = new Registered(s,
+      token.getOrElse(baseVersionToken(spark, basePath)), rows, schema)
     reg.compute(basePath, (_, cur) => {
-      val v = if (cur == null) Vector.empty[Summary] else cur
-      v.filterNot(_.groupCols.toSet == s.groupCols.toSet) :+ s
+      val v = if (cur == null) Vector.empty[Registered] else cur
+      v.filterNot(_.summary.groupCols.toSet == s.groupCols.toSet) :+ r
     })
-
-  /** [[register]] with the freshness contract: stamps the CURRENT
-    * [[baseVersionToken]] of `basePath` into the summary, so any later
-    * base write (append, overwrite, compaction) makes
-    * [[SummaryRewrite]] bail until re-registration. This is the
-    * registration every maintenance loop should use — the bare
-    * [[register]] (no token) keeps routing unconditionally and exists
-    * for callers that pin freshness some other way. */
-  def registerFresh(spark: org.apache.spark.sql.SparkSession,
-                    basePath: String, s: Summary): Unit =
-    register(basePath,
-      s.copy(baseToken = Some(baseVersionToken(spark, basePath))))
+  }
 
   def clear(): Unit = reg.clear()
-  private[graft] def lookup(path: String): Seq[Summary] =
+  private[graft] def lookup(path: String): Seq[Registered] =
     Option(reg.get(path)).getOrElse(Vector.empty)
 
   /** Why did (or didn't) `df` route through a registered summary?
@@ -258,12 +289,11 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** The freshness gate: a summary registered with a base-version token
-    * only routes while the CURRENT token matches — a base write after
-    * registration (append, overwrite, compaction) makes every candidate
-    * rewrite bail to the base scan until the maintenance loop
-    * re-registers. Token absent = caller pinned freshness elsewhere;
-    * route unconditionally (pre-r13 contract).
+  /** The freshness gate: a summary only routes while its base's
+    * CURRENT token matches the one stamped at registration — a base
+    * write after registration (append, overwrite, compaction) makes
+    * every candidate rewrite bail to the base scan until the
+    * maintenance loop re-registers.
     *
     * Checked LAST, after every cheap structural check has passed, and
     * memoized per optimizer invocation (`cache`): the token is a
@@ -271,12 +301,12 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * aggregate per query — so plans that bail structurally must never
     * pay it, and several candidate aggregates over one base in one
     * plan list its files once (ADVICE r13). */
-  private def isFresh(s: MvRegistry.Summary, path: String,
+  private def isFresh(r: MvRegistry.Registered, path: String,
                       rel: HadoopFsRelation,
                       cache: scala.collection.mutable.Map[String, String])
   : Boolean =
-    s.baseToken.forall(_ == cache.getOrElseUpdate(path,
-      MvRegistry.baseVersionToken(rel.sparkSession, path)))
+    r.token == cache.getOrElseUpdate(path,
+      MvRegistry.baseVersionToken(rel.sparkSession, path))
 
   private def isConst(e: Expression): Boolean = e match {
     case l: Literal => l.value != null
@@ -351,26 +381,23 @@ object SummaryRewrite extends Rule[LogicalPlan] {
   }
 
   /** Cost-based choice among the summaries that PROVABLY serve the
-    * query: fewest registered grain rows wins — with several rollups
-    * per base (day, type, day×type) the finest grain often serves
-    * everything the coarser ones do, and picking it would scan an
-    * order of magnitude more rows for the same answer. Summaries
-    * registered without a row count rank last (no stats — assume big);
-    * ties keep registration order (`minBy` is stable). */
-  private def pickBest(served: Seq[(MvRegistry.Summary, LogicalPlan)],
+    * query: fewest rows (read from the footers at registration) wins —
+    * with several rollups per base (day, type, day×type) the finest
+    * grain often serves everything the coarser ones do, and picking it
+    * would scan an order of magnitude more rows for the same answer.
+    * Ties keep registration order (`minBy` is stable). */
+  private def pickBest(served: Seq[(MvRegistry.Registered, LogicalPlan)],
                        tag: String, path: String): Option[LogicalPlan] = {
     if (served.isEmpty) return None
-    val (best, plan) = served.minBy(_._1.rows.getOrElse(Long.MaxValue))
+    val (best, plan) = served.minBy(_._1.rows)
+    def grain(r: MvRegistry.Registered) = r.summary.groupCols.mkString("+")
     if (served.size > 1)
       note(s"choice($tag): ${served.size} summaries serve — picked " +
-        s"grain=${best.groupCols.mkString("+")} " +
-        s"(rows=${best.rows.map(_.toString).getOrElse("unknown")}) over " +
-        served.collect { case (s, _) if s ne best =>
-          s"grain=${s.groupCols.mkString("+")}" +
-            s"(rows=${s.rows.map(_.toString).getOrElse("unknown")})"
+        s"grain=${grain(best)} (rows=${best.rows}) over " +
+        served.collect { case (r, _) if r ne best =>
+          s"grain=${grain(r)}(rows=${r.rows})"
         }.mkString(", "))
-    note(s"routed($tag, grain=${best.groupCols.mkString("+")}): " +
-      s"$path → summary")
+    note(s"routed($tag, grain=${grain(best)}): $path → summary")
     Some(plan)
   }
 
@@ -565,9 +592,10 @@ object SummaryRewrite extends Rule[LogicalPlan] {
 
   private def attempt(groupExprs: Seq[Expression],
                       aggExprs: Seq[NamedExpression], site: BaseSite,
-                      s: MvRegistry.Summary,
+                      r: MvRegistry.Registered,
                       tokCache: scala.collection.mutable.Map[String, String])
   : Option[LogicalPlan] = {
+    val s = r.summary
     val tag = s"${site.kind}, grain=${s.groupCols.mkString("+")}"
     // under a join, the base side is the base site's output; with no
     // join every attribute is a base attribute — the site's output can
@@ -592,7 +620,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       note(s"bail($tag): a base-side filter references a non-grain column")
       return None
     }
-    val mvPlan = s.mv().queryExecution.analyzed
+    val mvPlan = r.read(site.rel.sparkSession).queryExecution.analyzed
     def mvAttr(name: String): Option[AttributeReference] =
       mvPlan.output.collectFirst {
         case x: AttributeReference if x.name == name => x
@@ -631,7 +659,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       note(s"bail($tag): a filter column has no same-typed summary twin")
       return None
     }
-    if (!isFresh(s, site.path, site.rel, tokCache)) {
+    if (!isFresh(r, site.path, site.rel, tokCache)) {
       note(s"bail($tag): base version token changed since registration " +
         s"— summary for ${site.path} is stale, re-register after refresh")
       return None

@@ -97,8 +97,8 @@ object CdcOps {
     dim.foreach(_.write.mode("overwrite").parquet(s"${mv.root}/dim"))
     val micro = base.columns.contains("v_micro")
     grains.foreach { case (sub, g) =>
-      MvRegistry.registerFresh(s, mv.registered, more(MvRegistry.Summary(
-        () => s.read.parquet(s"${mv.root}/$sub"), g, "cnt",
+      MvRegistry.register(s, mv.registered, more(MvRegistry.Summary(
+        s"${mv.root}/$sub", g, "cnt",
         sums = if (micro) Map("v_micro" -> "sum_micro") else Map.empty,
         nns = if (micro) Map("v_micro" -> "n_nonnull") else Map.empty)))
     }
@@ -798,7 +798,7 @@ object CdcOps {
         val (baseRows, delta) = changelog(ev)
         // the registered BASE the query scans is the post-change corpus;
         // its summary is MAINTAINED from the pre-change aggregate + the
-        // changelog — never recomputed from the corpus. registerFresh
+        // changelog — never recomputed from the corpus. Registration
         // stamps the base-version token: routing is now CONDITIONAL on
         // the summary being current — any later base write bails to
         // the corpus scan until re-registration
@@ -1323,7 +1323,7 @@ object CdcOps {
     // registered under the same base path, keyed by grain. The
     // returned type-grain query must route THROUGH the type summary
     // even though the day summary is registered first (the rewrite
-    // tries each and takes the first that provably serves; the
+    // tries each and takes the smallest that provably serves; the
     // day-grain attempt bails on the grouping check). PlanSpec asserts
     // the /type summary is the scanned relation; the oracle recomputes
     // from raw rows.
@@ -1334,10 +1334,7 @@ object CdcOps {
             .where(col("ts").isNotNull)
             .select(col("event_type"),
               date_format(col("ts"), "yyyy-MM-dd").as("day"), vMicro),
-          Seq("day" -> Seq("day"), "type" -> Seq("event_type")),
-          // the cost stamp: rollup cardinality feeds the cheapest-server
-          // choice when several grains serve
-          more = m => m.copy(rows = Some(m.mv().count())))
+          Seq("day" -> Seq("day"), "type" -> Seq("event_type")))
         summarize(mv.corpus.groupBy("event_type"), avgMicro)
           .orderBy("event_type")
       },

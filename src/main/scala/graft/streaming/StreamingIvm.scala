@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.IncrementalFinal
+import graft.plans.MvRegistry
 
 /** Streaming IVM: fold a CONTINUOUS signed changelog into persisted
   * per-key aggregate state — [[IncrementalFinal.foldSummary]]
@@ -33,6 +34,10 @@ import graft.pipeline.IncrementalFinal
   * restart-from-checkpoint continuation on the surviving state. */
 object StreamingIvm {
 
+  /** Committed versions [[applyBatch]] keeps: the newest, its
+    * predecessor (re-delivery folds from it) and one more. */
+  private val KeepVersions = 3
+
   /** Committed state versions (batch ids), ascending. Only directories
     * carrying parquet's `_SUCCESS` marker count: a fold that died
     * mid-write leaves a marker-less directory, and an external
@@ -52,12 +57,16 @@ object StreamingIvm {
   }
 
   /** The state as of the latest version strictly below `beforeBatch`
-    * (all versions when None); empty schema-less None if no state. */
+    * (all versions when None); empty schema-less None if no state. Read
+    * with the schema in its footers, so no schema-inference job runs. */
   def readState(spark: SparkSession, stateDir: String,
                 beforeBatch: Option[Long] = None): Option[DataFrame] = {
     val vs = versions(spark, stateDir)
     val eligible = beforeBatch.fold(vs)(b => vs.filter(_ < b))
-    eligible.lastOption.map(v => spark.read.parquet(s"$stateDir/v=$v"))
+    eligible.lastOption.map { v =>
+      val dir = s"$stateDir/v=$v"
+      spark.read.schema(MvRegistry.footers(spark, dir)._2).parquet(dir)
+    }
   }
 
   /** The foreachBatch body: fold `batch` (rows with `keyCols`, `sign`,
@@ -79,22 +88,17 @@ object StreamingIvm {
     * exactly.
     *
     * Retention: after a successful write of `v=b`, versions older than
-    * the newest `keepVersions` are deleted — without this, every batch
+    * the newest [[KeepVersions]] are deleted — without this, every batch
     * writes a FULL state copy and storage grows without bound at
     * streaming cadence (and `versions()` pays O(#batches) listStatus
-    * per fold). `keepVersions` ≥ 2 is enforced: the just-written
-    * version's PREDECESSOR must survive pruning, because an
-    * at-least-once re-delivery of batch b re-folds from the latest
-    * version strictly below b — pruning it would break the
-    * idempotence the whole protocol exists for. */
+    * per fold). The just-written version's PREDECESSOR survives
+    * pruning, because an at-least-once re-delivery of batch b re-folds
+    * from the latest version strictly below b — pruning it would break
+    * the idempotence the whole protocol exists for. */
   def applyBatch(spark: SparkSession, stateDir: String,
-                 keyCols: Seq[String], keepVersions: Int = 3,
-                 extremes: Boolean = false,
+                 keyCols: Seq[String], extremes: Boolean = false,
                  distinctCol: Option[String] = None)
                 (batch: DataFrame, batchId: Long): Unit = {
-    require(keepVersions >= 2,
-      s"keepVersions must be >= 2 (re-delivery folds from the " +
-        s"predecessor version), got $keepVersions")
     val prev = readState(spark, stateDir, Some(batchId))
     // state-shape guard, BOTH directions (review r18): folding with a
     // NARROWER config than the state was built with would commit a
@@ -143,7 +147,7 @@ object StreamingIvm {
     }
     commitVersion(spark, stateDir,
       distinctCol.fold(folded)(injective(folded, batch, _)), batchId,
-      keepVersions)
+      KeepVersions)
   }
 
   /** Batch-wide hash injectivity of the sketched column, enforced inside
@@ -222,13 +226,11 @@ object StreamingIvm {
     * narrowed version that dropped the min/max/kmv columns — the
     * maintained extremes were lost without error (review r18). */
   def attach(changelog: DataFrame, stateDir: String, keyCols: Seq[String],
-             keepVersions: Int = 3, extremes: Boolean = false,
-             distinctCol: Option[String] = None)
+             extremes: Boolean = false, distinctCol: Option[String] = None)
   : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     changelog.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         applyBatch(batch.sparkSession, stateDir, keyCols,
-          keepVersions, extremes = extremes, distinctCol = distinctCol)(
-          batch.toDF(), id)
+          extremes = extremes, distinctCol = distinctCol)(batch.toDF(), id)
     }
 }

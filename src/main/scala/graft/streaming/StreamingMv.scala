@@ -20,7 +20,8 @@ import graft.plans.MvRegistry
   *      [[StreamingIvm.applyBatch]]'s batchId-versioned protocol
   *      (re-delivery re-folds from the same predecessor version —
   *      never from its own half-written output),
-  *   3. re-registers the summary for the corpus path with a FRESH
+  *   3. re-registers the version it just committed
+  *      (`summary/v=<batchId>`) for the corpus path with a FRESH
   *      base-version token, so [[graft.plans.SummaryRewrite]] resumes
   *      routing plain aggregates over the corpus onto the |keys|-row
   *      summary.
@@ -90,10 +91,6 @@ object StreamingMv {
     fs.makeQualified(p).toString
   }
 
-  /** The latest committed summary state, if any batch has folded. */
-  def summary(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    StreamingIvm.readState(spark, summaryDir(stateDir))
-
   /** The foreachBatch body — public so tests can drive re-delivery and
     * crash windows explicitly. `batch` carries `keyCols` + `v_micro`
     * (+ `distinctCol`) insert rows. */
@@ -107,24 +104,23 @@ object StreamingMv {
     //    the folded delta are the same bytes by construction, which the
     //    old eager localCheckpoint only approximated while costing one
     //    extra materialization pass per fold.
-    batch
-      .select((cfg.keyCols.map(col) :+ col(ValueCol)) ++
-        cfg.distinctCol.filterNot(_ == ValueCol).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${docsDir(stateDir)}/batch=$batchId")
-    val rows = spark.read.parquet(s"${docsDir(stateDir)}/batch=$batchId")
+    //    The read-back takes the written frame's schema, so it needs no
+    //    schema-inference job.
+    val part = s"${docsDir(stateDir)}/batch=$batchId"
+    val written = batch.select((cfg.keyCols.map(col) :+ col(ValueCol)) ++
+      cfg.distinctCol.filterNot(_ == ValueCol).map(col): _*)
+    written.write.mode(SaveMode.Overwrite).parquet(part)
+    val rows = spark.read.schema(written.schema).parquet(part)
     // 2. versioned summary fold — the commit mark
     StreamingIvm.applyBatch(spark, summaryDir(stateDir), cfg.keyCols,
       extremes = cfg.extremes, distinctCol = cfg.distinctCol)(
       rows.withColumn(SignCol, lit(1L)), batchId)
-    // 3. routing resumes: register the folded summary for the corpus
-    //    path with the CURRENT token (stamped from the files just
+    // 3. routing resumes: register the version just committed for the
+    //    corpus path with the CURRENT token (stamped from the files just
     //    written — any later corpus write bails routing until the next
     //    fold re-registers)
-    MvRegistry.registerFresh(spark, basePath(spark, stateDir),
-      MvRegistry.Summary(
-        () => summary(spark, stateDir).getOrElse(
-          sys.error(s"StreamingMv: no committed summary under $stateDir")),
+    MvRegistry.register(spark, basePath(spark, stateDir),
+      MvRegistry.Summary(s"${summaryDir(stateDir)}/v=$batchId",
         cfg.keyCols, CntCol,
         sums = Map(ValueCol -> SumCol),
         nns = Map(ValueCol -> NnCol),

@@ -1462,37 +1462,29 @@ class StreamingExtSuite extends SparkSuite {
     def batchDf(i: Long) =
       Seq(("k", Some(i), 1L)).toDF("k", "v_micro", "sign")
     def fold(b: Long) =
-      StreamingIvm.applyBatch(spark, state, Seq("k"),
-        keepVersions = 2)(batchDf(b), b)
+      StreamingIvm.applyBatch(spark, state, Seq("k"))(batchDf(b), b)
     (0L until 6L).foreach(fold)
 
-    // disk holds exactly the newest 2 version dirs — a long-running
+    // disk holds exactly the newest 3 version dirs — a long-running
     // stream's state storage is bounded, not one-full-copy-per-batch
     val p = new org.apache.hadoop.fs.Path(state)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def versionDirs() = fs.listStatus(p).toSeq
       .map(_.getPath.getName).filter(_.startsWith("v=")).sorted
-    assert(versionDirs() === Seq("v=4", "v=5"))
-    assert(StreamingIvm.versions(spark, state) === Seq(4L, 5L))
+    assert(versionDirs() === Seq("v=3", "v=4", "v=5"))
+    assert(StreamingIvm.versions(spark, state) === Seq(3L, 4L, 5L))
     // the surviving state is the fold of ALL six batches
     def stateRow() = StreamingIvm.readState(spark, state).get
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3))).toSeq
     assert(stateRow() === Seq(("k", 6L, 15L)))
 
     // re-delivery of the LAST batch after pruning: its predecessor
-    // (v=4) survived by the keepVersions >= 2 contract, so the retry
-    // recomputes v=5 bit-identically
+    // (v=4) survived pruning, so the retry recomputes v=5
+    // bit-identically
     fold(5L)
     assert(stateRow() === Seq(("k", 6L, 15L)),
       "re-delivered batch corrupted state after pruning")
-    assert(versionDirs() === Seq("v=4", "v=5"))
-
-    // a keepVersions that could prune the in-flight batch's
-    // predecessor is rejected at entry
-    intercept[IllegalArgumentException] {
-      StreamingIvm.applyBatch(spark, state, Seq("k"),
-        keepVersions = 1)(batchDf(9L), 9L)
-    }
+    assert(versionDirs() === Seq("v=3", "v=4", "v=5"))
 
     // a half-written version (no _SUCCESS marker — a fold that died
     // mid-write) is not observable as state
@@ -1500,7 +1492,7 @@ class StreamingExtSuite extends SparkSuite {
     fs.mkdirs(half)
     val out = fs.create(new org.apache.hadoop.fs.Path(half, "part-0.parquet"))
     out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(StreamingIvm.versions(spark, state) === Seq(4L, 5L),
+    assert(StreamingIvm.versions(spark, state) === Seq(3L, 4L, 5L),
       "marker-less directory leaked into the version list")
     assert(stateRow() === Seq(("k", 6L, 15L)),
       "readState observed a half-written version")

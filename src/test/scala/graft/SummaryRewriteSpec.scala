@@ -45,8 +45,8 @@ class SummaryRewriteSpec extends SparkSuite {
   }
 
   private def register(base: String, mv: String): Unit =
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
       mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
 
@@ -71,6 +71,20 @@ class SummaryRewriteSpec extends SparkSuite {
       val downstream = q().filter(col("n") > 100L)
         .select(col("event_type"), (col("s") / col("n")).as("avg"))
       assert(downstream.collect().length === 5)
+    } finally MvRegistry.clear()
+  }
+
+  test("optimizing a routed aggregate launches no Spark job: the summary is read with the schema taken at registration") {
+    val (base, mv) = fixture()
+    val q = spark.read.parquet(base).groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("v_micro").as("s"),
+        min("v_micro").as("lo"))
+    register(base, mv)
+    try {
+      assert(jobsDuring(q.queryExecution.optimizedPlan) === 0)
+      val paths = relationPaths(q.queryExecution.optimizedPlan)
+      assert(paths.exists(_.contains(mv)), s"summary not scanned: $paths")
+      assert(!paths.exists(_.contains(base)), s"base still scanned: $paths")
     } finally MvRegistry.clear()
   }
 
@@ -167,8 +181,8 @@ class SummaryRewriteSpec extends SparkSuite {
         .orderBy("event_type"),                            // strict subsets
       () => agg(spark.read.parquet(base).groupBy()))       // global ⟨⟩
     val expect = shapes.map(q => q().collect()) // registry empty
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type", "junk"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
       mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
     try {
@@ -193,8 +207,8 @@ class SummaryRewriteSpec extends SparkSuite {
         .orderBy("event_type")
       MvRegistry.clear()
       val exp = cd().collect()
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq("event_type", "junk"), "cnt",
         sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
         mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
       val routed = cd()
@@ -237,8 +251,8 @@ class SummaryRewriteSpec extends SparkSuite {
       q(_.filter(col("event_type") === "no_such_type")
         .groupBy().agg(count(lit(1)).as("n"))))
     val expect = routable.map(f => f().collect()) // registry empty
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type", "junk"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
     try {
       routable.zip(expect).foreach { case (f, exp) =>
@@ -527,8 +541,8 @@ class SummaryRewriteSpec extends SparkSuite {
         avg("v_micro").as("a"), max("v_micro").as("hi"))
       .orderBy("sfx", "par")
     val expect = q().collect() // registry empty
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type", "junk"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
       mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
     try {
@@ -574,8 +588,8 @@ class SummaryRewriteSpec extends SparkSuite {
         expr("count(DISTINCT junk) FILTER (WHERE junk <> 4)").as("d"))
       .orderBy("event_type")
     val expect = q().collect() // registry empty
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type", "junk"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
       mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
     try {
@@ -654,8 +668,8 @@ class SummaryRewriteSpec extends SparkSuite {
     def q() = spark.read.parquet(base)
       .groupBy("event_type").agg(count(lit(1)).as("n"),
         sum("v_micro").as("s")).orderBy("event_type")
-    MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
     try {
       // fresh: routes
@@ -678,8 +692,8 @@ class SummaryRewriteSpec extends SparkSuite {
           count("v_micro").as("nn_v"), min("v_micro").as("min_v"),
           max("v_micro").as("max_v"))
         .write.mode("overwrite").parquet(mv + "2")
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv + "2"), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv + "2", Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
       val rerouted = q()
       assert(scannedPaths(rerouted).exists(_.contains(mv + "2")))
@@ -768,8 +782,8 @@ class SummaryRewriteSpec extends SparkSuite {
       genHaving) { (groups, aggs, filter, join, having) =>
         MvRegistry.clear()
         val expected = run(groups, aggs, filter, join, having)
-        MvRegistry.register("file:" + base, MvRegistry.Summary(
-          () => spark.read.parquet(mv), Seq("g1", "g2"), "cnt",
+        MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+          mv, Seq("g1", "g2"), "cnt",
           sums = Map("v" -> "sum_v"), nns = Map("v" -> "nn_v"),
           mins = Map("v" -> "min_v"), maxs = Map("v" -> "max_v")))
         val routed = try run(groups, aggs, filter, join, having)
@@ -986,8 +1000,8 @@ class SummaryRewriteSpec extends SparkSuite {
         .exists(_.contains("not answerable")))
       // stale: write to the base AFTER a tokened registration
       MvRegistry.clear()
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
       Seq(("t0", 0, 1L)).toDF("event_type", "junk", "v_micro")
         .write.mode("append").parquet(base)
@@ -1011,8 +1025,8 @@ class SummaryRewriteSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"), count(col("v_micro")).as("n_nonnull"),
         sum("v_micro").as("sum_micro"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_micro"),
       nns = Map("v_micro" -> "n_nonnull")))
     val q = () => spark.read.parquet(base).groupBy("event_type")
@@ -1065,8 +1079,8 @@ class SummaryRewriteSpec extends SparkSuite {
     summarize("event_type", mvT); summarize("junk", mvJ)
     summarize("event_type", mvT2)
     def reg(grain: String, mv: String): Unit =
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq(grain), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq(grain), "cnt",
         sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
     val qT = () => spark.read.parquet(base).groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("v_micro").as("s"))
@@ -1141,8 +1155,8 @@ class SummaryRewriteSpec extends SparkSuite {
           max("v_micro").as("max_v"))
         .write.mode("overwrite").parquet(mv)
       MvRegistry.clear()
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq("g"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq("g"), "cnt",
         sums = Map("v_micro" -> "sum_micro"),
         nns = Map("v_micro" -> "n_nonnull"),
         mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
@@ -1200,8 +1214,8 @@ class SummaryRewriteSpec extends SparkSuite {
           sum("v_micro").as("sum_micro"), min("v_micro").as("min_v"),
           max("v_micro").as("max_v"))
         .write.mode("overwrite").parquet(mv)
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_micro"),
         nns = Map("v_micro" -> "n_nonnull"),
         mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
@@ -1248,8 +1262,8 @@ class SummaryRewriteSpec extends SparkSuite {
           sum("v_micro").as("sum_micro"), min("v_micro").as("min_v"),
           max("v_micro").as("max_v"))
         .write.mode("overwrite").parquet(m2)
-      MvRegistry.registerFresh(spark, "file:" + b2, MvRegistry.Summary(
-        () => spark.read.parquet(m2), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + b2, MvRegistry.Summary(
+        m2, Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_micro"),
         nns = Map("v_micro" -> "n_nonnull"),
         mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
@@ -1291,8 +1305,8 @@ class SummaryRewriteSpec extends SparkSuite {
         sum("v_micro").as("sum_micro"), min("v_micro").as("min_v"),
         max("v_micro").as("max_v"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("g1", "g2"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("g1", "g2"), "cnt",
       sums = Map("v_micro" -> "sum_micro"),
       nns = Map("v_micro" -> "n_nonnull"),
       mins = Map("v_micro" -> "min_v"), maxs = Map("v_micro" -> "max_v")))
@@ -1325,10 +1339,11 @@ class SummaryRewriteSpec extends SparkSuite {
   }
 
   test("refreshSummary chains from the REGISTERED version — a second refresh passing the original path never drops the first delta; a same-token re-run is a no-op") {
-    // ADVICE r14 (medium): the fold's previous state must be reg.mv(),
-    // not the caller-supplied path — otherwise refresh₂(originalPath)
-    // silently drops Δ₁ while stamping a fresh token (stale-serving as
-    // 'fresh', the exact failure the token protocol exists to prevent)
+    // ADVICE r14 (medium): the fold's previous state must be the
+    // registered summary, not the caller-supplied path — otherwise
+    // refresh₂(originalPath) silently drops Δ₁ while stamping a fresh
+    // token (stale-serving as 'fresh', the exact failure the token
+    // protocol exists to prevent)
     import graft.pipeline.IncrementalFinal
     val base = tmpDir("mvchain-base"); val mv = tmpDir("mvchain-sum")
     def rows(lo: Long, hi: Long) = (lo until hi)
@@ -1339,8 +1354,8 @@ class SummaryRewriteSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"), count(col("v_micro")).as("n_nonnull"),
         sum("v_micro").as("sum_micro"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_micro"),
       nns = Map("v_micro" -> "n_nonnull")))
     val q = () => spark.read.parquet(base).groupBy("event_type")
@@ -1367,8 +1382,8 @@ class SummaryRewriteSpec extends SparkSuite {
         "chained refresh dropped a delta — wrong aggregates served as fresh")
       // same-token RE-RUN (the crash-after-commit re-delivery): must be
       // a NO-OP — folding the same delta again would double-count it
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(p2), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        p2, Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_micro"),
         nns = Map("v_micro" -> "n_nonnull")))
       val p3 = IncrementalFinal.refreshSummary(spark, "file:" + base, mv,
@@ -1398,17 +1413,17 @@ class SummaryRewriteSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"), count(col("v_micro")).as("nn_v"),
         sum("v_micro").as("sum_v"))
       .write.mode("overwrite").parquet(mvCoarse)
-    def reg(grain: Seq[String], mv: String, n: Long): Unit =
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), grain, "cnt",
-        sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
-        rows = Some(n)))
+    // the row counts come from the summaries' own footers at registration
+    def reg(grain: Seq[String], mv: String): Unit =
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, grain, "cnt",
+        sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
     val q = () => spark.read.parquet(base).groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("v_micro").as("s"))
       .orderBy("event_type")
     val expect = q().collect()
-    reg(Seq("event_type", "junk"), mvFine, 150L) // first-registered
-    reg(Seq("event_type"), mvCoarse, 3L)
+    reg(Seq("event_type", "junk"), mvFine) // first-registered
+    reg(Seq("event_type"), mvCoarse)
     try {
       val routed = q()
       val paths = scannedPaths(routed)
@@ -1420,17 +1435,6 @@ class SummaryRewriteSpec extends SparkSuite {
       val explain = MvRegistry.explainRoute(q())
       assert(explain.exists(l => l.startsWith("choice(") &&
         l.contains("rows=3")), explain)
-      // row counts absent → registration order still wins (no stats, no
-      // reordering): re-register both WITHOUT rows
-      MvRegistry.clear()
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mvFine), Seq("event_type", "junk"), "cnt",
-        sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mvCoarse), Seq("event_type"), "cnt",
-        sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
-      assert(scannedPaths(q()).exists(_.contains(mvFine)),
-        "without row stats the first registration must keep winning")
     } finally MvRegistry.clear()
   }
 
@@ -1447,8 +1451,8 @@ class SummaryRewriteSpec extends SparkSuite {
       .agg(count(lit(1)).cast("int").as("cnt"),
         count(col("v_micro")).as("nn_v"), sum("v_micro").as("sum_v"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type", "junk"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
     try {
       // multiplicity-linear folds (SUM/COUNT/AVG over a grain
@@ -1465,8 +1469,8 @@ class SummaryRewriteSpec extends SparkSuite {
       MvRegistry.clear()
       assert(got === linear().collect())
       // while Σcnt folds (COUNT(*)) widen through Sum and still serve
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mv), Seq("event_type", "junk"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mv, Seq("event_type", "junk"), "cnt",
         sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v")))
       val cnt = () => spark.read.parquet(base).groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("v_micro").as("s"))
@@ -1504,8 +1508,8 @@ class SummaryRewriteSpec extends SparkSuite {
 
   private def registerDistinct(base: String, mv: String,
                                licensed: Boolean): Unit =
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_v"), nns = Map("v_micro" -> "nn_v"),
       distincts = if (licensed) Map("uid" -> "kmv_uid") else Map.empty))
 
@@ -1587,8 +1591,8 @@ class SummaryRewriteSpec extends SparkSuite {
         sum("v_micro").as("sum_micro"),
         expr("array_sort(collect_set(__h))").as("kmv_uid"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("v_micro" -> "sum_micro"),
       nns = Map("v_micro" -> "n_nonnull"),
       distincts = Map("uid" -> "kmv_uid")))
@@ -1619,8 +1623,8 @@ class SummaryRewriteSpec extends SparkSuite {
       // RETRACTION of uid 11's LAST copy in a: the grain goes dirty,
       // the rescan reads ONLY a's post-change rows, and COUNT(DISTINCT)
       // stays routed with the repaired set
-      MvRegistry.registerFresh(spark, "file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(next), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        next, Seq("event_type"), "cnt",
         sums = Map("v_micro" -> "sum_micro"),
         nns = Map("v_micro" -> "n_nonnull"),
         distincts = Map("uid" -> "kmv_uid")))
@@ -1664,8 +1668,8 @@ class SummaryRewriteSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"), sum("amount").as("sum_a"),
         count("amount").as("nn_a"))
       .write.mode("overwrite").parquet(mv)
-    MvRegistry.register("file:" + base, MvRegistry.Summary(
-      () => spark.read.parquet(mv), Seq("event_type"), "cnt",
+    MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+      mv, Seq("event_type"), "cnt",
       sums = Map("amount" -> "sum_a"), nns = Map("amount" -> "nn_a")))
     try {
       val q = spark.read.parquet(base).groupBy("event_type")
@@ -1685,8 +1689,8 @@ class SummaryRewriteSpec extends SparkSuite {
           count("amount").as("nn_a"))
         .write.mode("overwrite").parquet(mvBad)
       MvRegistry.clear()
-      MvRegistry.register("file:" + base, MvRegistry.Summary(
-        () => spark.read.parquet(mvBad), Seq("event_type"), "cnt",
+      MvRegistry.register(spark, "file:" + base, MvRegistry.Summary(
+        mvBad, Seq("event_type"), "cnt",
         sums = Map("amount" -> "sum_a"), nns = Map("amount" -> "nn_a")))
       val qc = spark.read.parquet(base).groupBy("event_type")
         .agg(avg("amount").as("a"))
